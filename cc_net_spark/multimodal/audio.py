@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cc_net_spark.multimodal.verify import decoded_score, near_dup_pairs, pair_scores, verify_pairs
+
 SUPPORTED_CODECS = ("pcm_s16le",)
 STUB_CODECS = ("flac", "opus")
 
@@ -146,60 +148,33 @@ def pair_audio_invariants(
     allclose at SNR >= threshold + (normalized) transcript equality.
 
     Returns (id_a, id_b, snr_db double, transcript_equal boolean,
-    pcm_ok boolean). The audio payload is read only here. A clips frame
-    without a transcript column (payload-only pipelines) yields
-    transcript_equal = true for the empty-vs-empty comparison.
+    pcm_ok boolean) through the shared payload verify
+    (``verify.verify_pairs``). A clips frame without a transcript column
+    (payload-only pipelines) yields transcript_equal = true for the
+    empty-vs-empty comparison.
     """
     if "transcript" not in clips.columns:
         clips = clips.withColumn("transcript", F.lit(None).cast("string"))
-    side = clips.select(
-        F.col(id_col), F.col("codec"), F.col("bytes"), F.col("transcript")
-    )
-    a = (
-        side.withColumnRenamed(id_col, "id_a")
-        .withColumnRenamed("codec", "_ca")
-        .withColumnRenamed("bytes", "_ba")
-        .withColumnRenamed("transcript", "_ta")
-    )
-    b = (
-        side.withColumnRenamed(id_col, "id_b")
-        .withColumnRenamed("codec", "_cb")
-        .withColumnRenamed("bytes", "_bb")
-        .withColumnRenamed("transcript", "_tb")
-    )
-    joined = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
+    # a stubbed codec scores NaN (null snr_db, pcm_ok false): undecided,
+    # unlike the -1e9 of a measured mismatch
+    score = decoded_score(lambda codec, blob: decode_clip(codec, blob)[1], snr_db, np.nan)
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(pdf: pd.DataFrame) -> dict:
         from cc_net_spark.functions.normalize import normalize_for_dedup
 
-        for pdf in batches:
-            snrs = np.full(len(pdf), -np.inf)
-            for i, (ca, ba, cb, bb) in enumerate(
-                zip(pdf["_ca"], pdf["_ba"], pdf["_cb"], pdf["_bb"])
-            ):
-                try:
-                    _, pa = decode_clip(ca, bytes(ba))
-                    _, pb = decode_clip(cb, bytes(bb))
-                    snrs[i] = snr_db(pa, pb)
-                except NotImplementedError:
-                    snrs[i] = np.nan
-            teq = [
+        snrs = pair_scores(pdf, ("codec", "bytes"), score)
+        return {
+            "snr_db": snrs,
+            "transcript_equal": [
                 normalize_for_dedup(x or "") == normalize_for_dedup(y or "")
-                for x, y in zip(pdf["_ta"], pdf["_tb"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"],
-                    "id_b": pdf["id_b"],
-                    "snr_db": np.where(np.isfinite(snrs), snrs, 1e9 * np.sign(snrs)),
-                    "transcript_equal": teq,
-                    "pcm_ok": snrs >= min_snr_db,
-                }
-            )
+                for x, y in zip(pdf["transcript_a"], pdf["transcript_b"])
+            ],
+            "pcm_ok": snrs >= min_snr_db,
+        }
 
-    return joined.mapInPandas(
-        compute,
-        schema="id_a string, id_b string, snr_db double, transcript_equal boolean, pcm_ok boolean",
+    return verify_pairs(
+        pairs, clips, id_col, ("codec", "bytes", "transcript"), kernel,
+        "snr_db double, transcript_equal boolean, pcm_ok boolean",
     )
 
 
@@ -361,39 +336,20 @@ def audio_near_dup_pairs(
 
     Keys are time-paired occupancy words (see ``audio_fingerprints``) —
     the 2×bands-bit pair space keeps bucket entropy high at corpus scale;
-    exact-copy floods can still hit the cap, so ``with_metrics=True``
-    returns ``(pairs, PairGenMetrics)`` and callers (the pipeline stage
-    manifest) record exactly how many buckets/rows the cap dropped — the
-    repo's no-silent-truncation rule. The fingerprint table is cached for
-    the metrics pass so the audio payload is still decoded only once."""
-    from cc_net_spark.operators.pairs import candidate_pairs
+    exact-copy floods can still hit the cap, so ``with_metrics`` returns
+    ``(pairs, metrics)`` (see ``verify.near_dup_pairs``) and callers (the
+    pipeline stage manifest) record exactly how many buckets/rows the cap
+    dropped — the repo's no-silent-truncation rule."""
 
-    fp = audio_fingerprints(clips, id_col, frame=frame, bands=bands)
-    if with_metrics == "observe":
-        # metrics ride the caller's own action (pairs.py observe mode):
-        # no second action over fp, so no eager checkpoint barrier and no
-        # cached fingerprint table — the decode output streams straight
-        # into the candidate join's single exchange
-        cand, metrics = candidate_pairs(
-            fp, ["word"], id_col, bucket_cap=bucket_cap, with_metrics="observe"
-        )
-    elif with_metrics:
-        # the eager metrics aggregation is a second action over fp and
-        # must not re-decode every clip; localCheckpoint (not persist) so
-        # the cached blocks are reclaimed once the caller drops the
-        # DataFrame instead of leaking for the session lifetime
-        fp = fp.localCheckpoint(eager=True)
-        cand, metrics = candidate_pairs(
-            fp, ["word"], id_col, bucket_cap=bucket_cap, with_metrics=True
-        )
-    else:
-        cand = candidate_pairs(fp, ["word"], id_col, bucket_cap=bucket_cap)
-    verified = pair_audio_invariants(cand, clips, id_col, min_snr_db=min_snr_db)
-    pairs = (
-        verified.filter(F.col("pcm_ok"))
-        .select("id_a", "id_b", F.round("snr_db", 3).alias("snr_db"))
+    def verify(cand: DataFrame) -> DataFrame:
+        return pair_audio_invariants(cand, clips, id_col, min_snr_db=min_snr_db).filter(
+            F.col("pcm_ok")
+        ).select("id_a", "id_b", F.round("snr_db", 3).alias("snr_db"))
+
+    return near_dup_pairs(
+        audio_fingerprints(clips, id_col, frame=frame, bands=bands), ["word"], id_col,
+        verify, bucket_cap=bucket_cap, with_metrics=with_metrics,
     )
-    return (pairs, metrics) if with_metrics else pairs
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cc_net_spark.multimodal.verify import decoded_score, near_dup_pairs, pair_scores, verify_pairs
+
 SUPPORTED_CODECS = ("rgb8_raw",)
 STUB_CODECS = ("jpeg", "png")
 
@@ -212,45 +214,14 @@ def pair_image_psnr(
     pairs: DataFrame, images: DataFrame, id_col: str = "img_id"
 ) -> DataFrame:
     """(id_a, id_b, psnr_db double) — exact pixel verification for
-    candidate pairs (tiny input); dimension mismatch => -inf (rejected)."""
-    side = images.select(id_col, "bytes", "width", "height", "codec")
-    a = side.select(
-        F.col(id_col).alias("id_a"), F.col("bytes").alias("_ba"),
-        F.col("width").alias("_wa"), F.col("height").alias("_ha"),
-        F.col("codec").alias("_ca"),
-    )
-    b = side.select(
-        F.col(id_col).alias("id_b"), F.col("bytes").alias("_bb"),
-        F.col("width").alias("_wb"), F.col("height").alias("_hb"),
-        F.col("codec").alias("_cb"),
-    )
-    joined = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = np.full(len(pdf), -np.inf)
-            # zip, not itertuples: pandas mangles underscore-prefixed names
-            cols = zip(
-                pdf["_ca"], pdf["_ba"], pdf["_wa"], pdf["_ha"],
-                pdf["_cb"], pdf["_bb"], pdf["_wb"], pdf["_hb"],
-            )
-            for i, (ca, ba, wa, ha, cb, bb, wb, hb) in enumerate(cols):
-                try:
-                    ia = decode_image(ca, bytes(ba), wa, ha)
-                    ib = decode_image(cb, bytes(bb), wb, hb)
-                except NotImplementedError:
-                    continue
-                out[i] = psnr_db(ia, ib)
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"],
-                    "id_b": pdf["id_b"],
-                    "psnr_db": np.where(np.isfinite(out), out, 1e9 * np.sign(out)),
-                }
-            )
-
-    return joined.mapInPandas(
-        compute, schema="id_a string, id_b string, psnr_db double"
+    candidate pairs (shared payload verify, ``verify.verify_pairs``);
+    dimension mismatch => -inf (rejected)."""
+    cols = ("codec", "bytes", "width", "height")
+    score = decoded_score(decode_image, psnr_db, -np.inf)
+    return verify_pairs(
+        pairs, images, id_col, cols,
+        lambda pdf: {"psnr_db": pair_scores(pdf, cols, score)},
+        "psnr_db double",
     )
 
 
@@ -264,31 +235,18 @@ def image_near_dup_pairs(
 ):
     """Near-duplicate image pairs by PIXEL CONTENT: dHash buckets
     (skew-capped, the shared candidate machinery) -> exact pixel PSNR
-    >= threshold. Mirrors ``audio_near_dup_pairs``; with_metrics=True
-    returns (pairs, PairGenMetrics) for the no-silent-truncation rule."""
-    from cc_net_spark.operators.pairs import candidate_pairs
+    >= threshold. Mirrors ``audio_near_dup_pairs``; with_metrics returns
+    (pairs, metrics) for the no-silent-truncation rule."""
 
-    fp = image_fingerprints(images, id_col)
-    if with_metrics == "observe":
-        # metrics inside the caller's action — no checkpoint barrier, no
-        # cached fingerprint table (see audio_near_dup_pairs)
-        cand, metrics = candidate_pairs(
-            fp, ["dhash"], id_col, bucket_cap=bucket_cap, with_metrics="observe"
-        )
-    elif with_metrics:
-        # localCheckpoint, not persist: blocks reclaimed when the caller
-        # drops the DataFrame (see audio_near_dup_pairs)
-        fp = fp.localCheckpoint(eager=True)
-        cand, metrics = candidate_pairs(
-            fp, ["dhash"], id_col, bucket_cap=bucket_cap, with_metrics=True
-        )
-    else:
-        cand = candidate_pairs(fp, ["dhash"], id_col, bucket_cap=bucket_cap)
-    verified = pair_image_psnr(cand, images, id_col)
-    pairs = verified.filter(F.col("psnr_db") >= min_psnr_db).select(
-        "id_a", "id_b", F.round("psnr_db", 3).alias("psnr_db")
+    def verify(cand: DataFrame) -> DataFrame:
+        return pair_image_psnr(cand, images, id_col).filter(
+            F.col("psnr_db") >= min_psnr_db
+        ).select("id_a", "id_b", F.round("psnr_db", 3).alias("psnr_db"))
+
+    return near_dup_pairs(
+        image_fingerprints(images, id_col), ["dhash"], id_col, verify,
+        bucket_cap=bucket_cap, with_metrics=with_metrics,
     )
-    return (pairs, metrics) if with_metrics else pairs
 
 
 # roles per group in the planted image corpus: 0 base, 1 noisy near-dup,

@@ -19,6 +19,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from cc_net_spark.multimodal.verify import decoded_score, near_dup_pairs, pair_scores, verify_pairs
 
 SUPPORTED_CODECS = ("rgb8_frames",)
 STUB_CODECS = ("h264", "vp9")
@@ -94,8 +97,6 @@ def frame_sample(
 # join -> exact aligned-frame PSNR verification.
 # ---------------------------------------------------------------------------
 
-from pyspark.sql import functions as F
-
 
 def video_fingerprints(
     videos: DataFrame, id_col: str = "vid_id", *, every: int = 2
@@ -135,46 +136,16 @@ def pair_video_psnr(
     pairs: DataFrame, videos: DataFrame, id_col: str = "vid_id"
 ) -> DataFrame:
     """(id_a, id_b, psnr_db double) — exact aligned-frame verification for
-    candidate pairs; shape mismatch (dims or frame count) => -inf."""
-    side = videos.select(id_col, "bytes", "width", "height", "n_frames", "codec")
-    a = side.select(
-        F.col(id_col).alias("id_a"), F.col("bytes").alias("_ba"),
-        F.col("width").alias("_wa"), F.col("height").alias("_ha"),
-        F.col("n_frames").alias("_na"), F.col("codec").alias("_ca"),
-    )
-    b = side.select(
-        F.col(id_col).alias("id_b"), F.col("bytes").alias("_bb"),
-        F.col("width").alias("_wb"), F.col("height").alias("_hb"),
-        F.col("n_frames").alias("_nb"), F.col("codec").alias("_cb"),
-    )
-    joined = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
+    candidate pairs (shared payload verify, ``verify.verify_pairs``);
+    shape mismatch (dims or frame count) => -inf."""
+    from cc_net_spark.multimodal.image import psnr_db
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cc_net_spark.multimodal.image import psnr_db
-
-        for pdf in batches:
-            out = np.full(len(pdf), -np.inf)
-            cols = zip(
-                pdf["_ca"], pdf["_ba"], pdf["_wa"], pdf["_ha"], pdf["_na"],
-                pdf["_cb"], pdf["_bb"], pdf["_wb"], pdf["_hb"], pdf["_nb"],
-            )
-            for i, (ca, ba, wa, ha, na, cb, bb, wb, hb, nb) in enumerate(cols):
-                try:
-                    va = decode_video(ca, bytes(ba), wa, ha, na)
-                    vb = decode_video(cb, bytes(bb), wb, hb, nb)
-                except NotImplementedError:
-                    continue
-                out[i] = psnr_db(va, vb)
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"],
-                    "id_b": pdf["id_b"],
-                    "psnr_db": np.where(np.isfinite(out), out, 1e9 * np.sign(out)),
-                }
-            )
-
-    return joined.mapInPandas(
-        compute, schema="id_a string, id_b string, psnr_db double"
+    cols = ("codec", "bytes", "width", "height", "n_frames")
+    score = decoded_score(decode_video, psnr_db, -np.inf)
+    return verify_pairs(
+        pairs, videos, id_col, cols,
+        lambda pdf: {"psnr_db": pair_scores(pdf, cols, score)},
+        "psnr_db double",
     )
 
 
@@ -190,32 +161,17 @@ def video_near_dup_pairs(
     """Near-duplicate videos by FRAME CONTENT: sampled-frame dHash words
     (skew-capped candidate join, the shared machinery) -> exact aligned
     PSNR >= threshold. Mirrors audio_near_dup_pairs / image_near_dup_pairs;
-    with_metrics=True returns (pairs, PairGenMetrics)."""
-    from cc_net_spark.operators.pairs import candidate_pairs
+    with_metrics returns (pairs, metrics)."""
 
-    fp = video_fingerprints(videos, id_col, every=every)
-    if with_metrics == "observe":
-        # metrics inside the caller's action — no checkpoint barrier, no
-        # cached fingerprint table (see audio_near_dup_pairs)
-        cand, metrics = candidate_pairs(
-            fp, ["frame_idx", "fhash"], id_col, bucket_cap=bucket_cap,
-            with_metrics="observe",
-        )
-    elif with_metrics:
-        # localCheckpoint, not persist: blocks reclaimed when the caller
-        # drops the DataFrame (see audio_near_dup_pairs)
-        fp = fp.localCheckpoint(eager=True)
-        cand, metrics = candidate_pairs(
-            fp, ["frame_idx", "fhash"], id_col, bucket_cap=bucket_cap,
-            with_metrics=True,
-        )
-    else:
-        cand = candidate_pairs(fp, ["frame_idx", "fhash"], id_col, bucket_cap=bucket_cap)
-    verified = pair_video_psnr(cand, videos, id_col)
-    out = verified.filter(F.col("psnr_db") >= min_psnr_db).select(
-        "id_a", "id_b", F.round("psnr_db", 3).alias("psnr_db")
+    def verify(cand: DataFrame) -> DataFrame:
+        return pair_video_psnr(cand, videos, id_col).filter(
+            F.col("psnr_db") >= min_psnr_db
+        ).select("id_a", "id_b", F.round("psnr_db", 3).alias("psnr_db"))
+
+    return near_dup_pairs(
+        video_fingerprints(videos, id_col, every=every), ["frame_idx", "fhash"],
+        id_col, verify, bucket_cap=bucket_cap, with_metrics=with_metrics,
     )
-    return (out, metrics) if with_metrics else out
 
 
 # roles per group in the planted video corpus: 0 base, 1 noisy near-dup,

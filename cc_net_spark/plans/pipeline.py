@@ -193,25 +193,31 @@ def build_stages(
 ) -> list[Stage]:
     idc, txt = cfg.id_col, cfg.text_col
 
-    def load_clips(spark: SparkSession) -> DataFrame:
+    def load_clips(spark: SparkSession, *cols: str, kernel: bool = False) -> DataFrame:
         # explicit projection => Parquet never reads the audio payload.
         # CONTRACT: the clips table's id column is a key (input_hint
         # schema) — one row per clip_id. The pair stages' assume_unique
         # paths count on it; a corpus with repeated ids must be deduped
         # upstream (the incremental handler does so per batch).
         # parquet_meta.read_parquet: schema from ONE driver-side footer
-        # read => no footer-inference Spark job per stage that opens clips
+        # read => no footer-inference Spark job per stage that opens clips.
+        # kernel=True: the scan feeds a Python kernel, so its splits are
+        # compute-sized (kernel_scan_session); JVM-only reads keep
+        # Spark's IO-sized splits.
         from cc_net_spark.sources.parquet_meta import read_parquet
 
-        return read_parquet(spark, clips_path).select(idc, txt)
+        if kernel:
+            spark = kernel_scan_session(spark, clips_path)
+        return read_parquet(spark, clips_path).select(*(cols or (idc, txt)))
 
     def stage_exact_hashes(spark: SparkSession) -> DataFrame:
-        return ed.build_hashes(ed.paragraph_hashes(load_clips(spark), txt, idc))
+        clips = load_clips(spark, kernel=True)
+        return ed.build_hashes(ed.paragraph_hashes(clips, txt, idc))
 
     def _raw_signatures(spark: SparkSession) -> DataFrame:
         # THE one corpus scan: every downstream pair family reads this table
         sig = fused_signatures(
-            load_clips(spark), txt, idc,
+            load_clips(spark, kernel=True), txt, idc,
             shingle_size=cfg.shingle_size, num_perm=cfg.num_perm,
             keep_shingles=cfg.keep_shingles,
             substring_length=cfg.substring_length,
@@ -334,9 +340,8 @@ def build_stages(
         # (pairs, drop-metrics) so the manifest records any capped
         # fingerprint buckets (no silent truncation)
         from cc_net_spark.multimodal.audio import audio_near_dup_pairs
-        from cc_net_spark.sources.parquet_meta import read_parquet
 
-        clips = read_parquet(spark, clips_path).select(idc, "codec", "bytes")
+        clips = load_clips(spark, idc, "codec", "bytes", kernel=True)
         pairs, resolve = audio_near_dup_pairs(
             clips, idc, bucket_cap=cfg.bucket_cap, min_snr_db=cfg.audio_min_snr_db,
             with_metrics="observe",
@@ -587,13 +592,34 @@ def tuned_scan_conf(spark: SparkSession, total_bytes: int, waves: int = 3) -> di
     split never rises above Spark's 128 MB default, so at 100 TB this
     returns the default IO-sized behavior (the rule only bites when input
     is small relative to the cluster — exactly when balance, not
-    per-task overhead, dominates)."""
+    per-task overhead, dominates).
+
+    The balance is not free: every Python task costs a fixed ~0.25 s
+    (an identity mapInPandas over 1/4/16/64 partitions took
+    0.25/0.4/1.1/3.9 s on a 4-core VM, against 0.07-0.13 s for the same
+    JVM-only job), so ``waves=3`` costs about 0.75 s of fixed wall time
+    on a small input — a price only a Python kernel's compute repays.
+    The rule therefore applies only to scans that feed one
+    (``kernel_scan_session``); a JVM read split this way just runs more
+    empty and tiny tasks."""
     slots = spark.sparkContext.defaultParallelism
     split = min(128 << 20, max(256 << 10, total_bytes // max(1, waves * slots)))
     return {
         "spark.sql.files.maxPartitionBytes": str(split),
         "spark.sql.files.openCostInBytes": str(min(4 << 20, split // 4)),
     }
+
+
+def kernel_scan_session(spark: SparkSession, path: str) -> SparkSession:
+    """A clone of ``spark`` whose file scans split by ``tuned_scan_conf``
+    for the table at ``path``. A file scan takes its split sizes from the
+    session that created it, so a DataFrame read through the clone
+    carries the tuned splits while every other read (the stage tables,
+    the clips id scans) keeps Spark's defaults — also when stages run
+    concurrently from driver threads, which a session-wide setting
+    cannot scope."""
+    conf = tuned_scan_conf(spark, _input_bytes(spark, path))
+    return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession(), conf)
 
 
 def run_near_dup_pipeline(
@@ -635,22 +661,9 @@ def run_near_dup_pipeline(
                 f"see NearDupConfig.validate_ids)"
             )
     runner = StageRunner(spark, workdir, use_snapshots=use_snapshots)
-    # pipeline-scoped scan-split tuning (see tuned_scan_conf): sized from
-    # the source table; every stage scan (clips + materialized stage
-    # tables, which are the same order of magnitude) balances across
-    # slots. Restored after the run — session-global conf, so the
-    # pipeline sets it once up front rather than per concurrent stage.
-    scan_conf = tuned_scan_conf(spark, _input_bytes(spark, clips_path))
-    saved = {k: spark.conf.get(k) for k in scan_conf}
-    for k, v in scan_conf.items():
-        spark.conf.set(k, v)
-    try:
-        manifests = runner.run(
-            build_stages(clips_path, cfg, workdir),
-            force=force,
-            max_parallel=cfg.max_parallel_stages,
-        )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    manifests = runner.run(
+        build_stages(clips_path, cfg, workdir),
+        force=force,
+        max_parallel=cfg.max_parallel_stages,
+    )
     return runner.load("clusters"), manifests

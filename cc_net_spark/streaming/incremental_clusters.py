@@ -589,12 +589,21 @@ def _parquet_footer_rows(path: str) -> int | None:
     import pyarrow.parquet as pq
 
     p = Path(path)
-    try:
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in (sorted(p.rglob("*.parquet")) if p.is_dir() else [p])
+    # the files Spark's reader would read: a crash-left _temporary/ dir
+    # and hidden or underscore-prefixed names are skipped, partition
+    # dirs (_batch_id=N) are not
+    files = [p] if not p.is_dir() else [
+        f for f in sorted(p.rglob("*.parquet"))
+        if not any(
+            n.startswith(".") or (n.startswith("_") and "=" not in n)
+            for n in f.relative_to(p).parts
         )
-    except OSError:
+    ]
+    try:
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except Exception:
+        # any unreadable footer (pyarrow raises ArrowInvalid on a
+        # truncated file, OSError on a vanished one) only loses the hint
         return None
 
 

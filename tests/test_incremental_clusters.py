@@ -485,3 +485,36 @@ def test_crashed_clusters_swap_recovers_without_id_loss(spark, tmp_path):
     assert not (tmp_path / "state_precompact").exists()
     got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
     assert got == _batch_truth(spark)
+
+
+def test_parquet_footer_rows_reads_what_spark_reads(tmp_path):
+    """The fold's footer-only sizing hint counts the files Spark's reader
+    would read — not a crash-left ``_temporary`` attempt or a hidden
+    file — and an unreadable footer only loses the hint (None), never
+    fails the fold."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cc_net_spark.streaming.incremental_clusters import _parquet_footer_rows
+
+    def write(rel, n):
+        f = tmp_path / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"x": list(range(n))}), f)
+        return f
+
+    write("_batch_id=0/part-0.parquet", 3)
+    write("_batch_id=1/part-0.parquet", 4)
+    write("_temporary/0/_temporary/attempt_0/part-1.parquet", 100)
+    write("_batch_id=1/.part-2.parquet", 100)
+    write("_batch_id=1/_part-3.parquet", 100)
+    assert _parquet_footer_rows(str(tmp_path)) == 7
+
+    # a truncated leftover inside _temporary/ is never opened
+    partial = tmp_path / "_temporary" / "partial.parquet"
+    partial.write_bytes(write("_batch_id=2/part-0.parquet", 5).read_bytes()[:20])
+    assert _parquet_footer_rows(str(tmp_path)) == 12
+
+    # a truncated visible file: pyarrow raises ArrowInvalid -> no hint
+    (tmp_path / "_batch_id=2" / "part-1.parquet").write_bytes(partial.read_bytes())
+    assert _parquet_footer_rows(str(tmp_path)) is None

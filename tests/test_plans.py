@@ -48,6 +48,31 @@ def test_clustering_never_reads_audio_payload(spark, clips_path, tmp_path):
     assert "bytes" not in plan_of(edges_df), "edges stage reads the audio payload"
 
 
+def test_scan_split_tuning_is_scoped_to_kernel_scans(spark, clips_path, tmp_path):
+    """The compute-sized splits of ``tuned_scan_conf`` reach only the
+    clips scans that feed a Python kernel (signatures here); the session
+    — and with it every JVM read of the stage tables — keeps Spark's
+    IO-sized defaults, during and after a pipeline run."""
+    from cc_net_spark.plans.pipeline import (
+        NearDupConfig,
+        _input_bytes,
+        build_stages,
+        run_near_dup_pipeline,
+        tuned_scan_conf,
+    )
+
+    key = "spark.sql.files.maxPartitionBytes"
+    default = spark.conf.get(key)
+    want = tuned_scan_conf(spark, _input_bytes(spark, clips_path))[key]
+    assert want != default
+    cfg = NearDupConfig(fused_pairs=True, include_exact_hashes=False)
+    sig = build_stages(clips_path, cfg)[0].build(spark)[0]
+    assert sig.sparkSession.conf.get(key) == want
+    assert spark.conf.get(key) == default
+    run_near_dup_pipeline(spark, clips_path, str(tmp_path / "wd"), cfg)
+    assert spark.conf.get(key) == default
+
+
 def test_broadcast_join_in_orders_by_segment(spark):
     from cc_net_spark import queries as Q
 
