@@ -625,7 +625,10 @@ def _explain_extra_merges(spark: SparkSession, both, clips_path: str) -> dict:
         .select("clip_id", "transcript")
         .join(F.broadcast(ids), "clip_id")
     )
-    ssig = simhash_signatures(texts, "transcript", "clip_id")
+    # the SimHash basis the bench's pipeline ran with (trigrams by
+    # default): the unigram basis re-derives distributional merges the
+    # pipeline never made
+    ssig = simhash_signatures(texts, "transcript", "clip_id", ngram=SIMHASH_NGRAM)
     msig = shingle_signatures(
         texts, "transcript", "clip_id", keep_shingles=False
     ).select("clip_id", "sig")

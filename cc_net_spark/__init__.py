@@ -21,4 +21,10 @@ Design notes (Spark-first, not a port):
   anywhere in the hot path.
 """
 
+from cc_net_spark.worker_imports import install_in_spark_worker
+
 __version__ = "0.1.0"
+
+# inside a Spark Python worker: stop re-reading unchanged zip archives on
+# every task (worker_imports)
+install_in_spark_worker()

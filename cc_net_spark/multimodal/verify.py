@@ -35,11 +35,16 @@ def verify_pairs(
     then ran as ONE task beside idle slots (1.45 s, over half of an
     audio near-dup op); a repartition-by-number exchange is never
     coalesced, and the broadcast payload joins keep its partitioning.
-    One partition per slot, not ``spark.sql.shuffle.partitions``: each
-    Python task costs a fixed ~0.25 s — an identity mapInPandas over
-    1/4/16/64 partitions took 0.25/0.4/1.1/3.9 s on a 4-core VM, against
-    0.07-0.13 s for the same job in the JVM — so a second wave costs
-    more than it balances. Pair rows carry two payloads each, which is
+    One partition per slot, not ``spark.sql.shuffle.partitions``. Each
+    Python task used to cost a fixed ~0.29 s, nearly all of it the
+    worker re-reading the directories of ``pyspark.zip`` and the other
+    archives on its path at task start; with those re-reads skipped
+    (``cc_net_spark.worker_imports``) an identity
+    mapInPandas over 1/4/16/64 partitions takes 0.15/0.22/0.42/1.13 s on
+    a 4-core VM (0.34/0.44/1.22/4.63 s before), ~0.065 s per extra wave
+    of tasks. A second wave still loses: two partitions per slot read
+    653.7 against 802.4 clips/s (median of 4 paired ``audio_payload``
+    runs, 1 of 4 better). Pair rows carry two payloads each, which is
     what the session's byte bound on Arrow batches is for
     (``session.get_spark``)."""
 

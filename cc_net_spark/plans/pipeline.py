@@ -594,14 +594,17 @@ def tuned_scan_conf(spark: SparkSession, total_bytes: int, waves: int = 3) -> di
     is small relative to the cluster — exactly when balance, not
     per-task overhead, dominates).
 
-    The balance is not free: every Python task costs a fixed ~0.25 s
-    (an identity mapInPandas over 1/4/16/64 partitions took
-    0.25/0.4/1.1/3.9 s on a 4-core VM, against 0.07-0.13 s for the same
-    JVM-only job), so ``waves=3`` costs about 0.75 s of fixed wall time
-    on a small input — a price only a Python kernel's compute repays.
-    The rule therefore applies only to scans that feed one
-    (``kernel_scan_session``); a JVM read split this way just runs more
-    empty and tiny tasks."""
+    The balance is not free. Each Python task used to cost a fixed
+    ~0.29 s, nearly all of it the worker re-reading the directories of
+    ``pyspark.zip`` and the other archives on its path at task start;
+    with those re-reads skipped (``cc_net_spark.worker_imports``) an
+    identity mapInPandas over 1/4/16/64 partitions takes
+    0.15/0.22/0.42/1.13 s on a 4-core VM (0.34/0.44/1.22/4.63 s before;
+    0.07-0.13 s for the same JVM-only job), so ``waves=3`` costs about
+    0.15 s of fixed wall time on a small input — a price only a Python
+    kernel's compute repays. The rule therefore applies only to scans
+    that feed one (``kernel_scan_session``); a JVM read split this way
+    just runs more empty and tiny tasks."""
     slots = spark.sparkContext.defaultParallelism
     split = min(128 << 20, max(256 << 10, total_bytes // max(1, waves * slots)))
     return {

@@ -1,4 +1,5 @@
-"""Cheap contract checks on bench.py internals (no Spark sessions)."""
+"""Cheap contract checks on bench.py internals (Spark only for the
+sampled extra-merge re-derivation)."""
 import importlib
 import os
 import sys
@@ -201,3 +202,28 @@ def test_archived_record_artifact_has_contract_keys():
         assert k in s, k
     assert s["archived_floor"]["raw_efficiency"] > 0
     assert d["dup_pair_recall"] >= 0.99
+
+
+def test_extra_merges_rederive_simhash_on_the_pipeline_basis(spark, tmp_path):
+    """A word permutation of a document has the same unigram multiset, so
+    its unigram SimHash is identical (Hamming 0), while the pipeline's
+    trigram basis puts the two far apart: re-deriving the sampled merge
+    on the unigram basis would vouch for a merge the pipeline's SimHash
+    never makes."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["".join(rng.choices("abcdefghij", k=5)) for _ in range(60)]
+    words = [rng.choice(vocab) for _ in range(300)]
+    shuffled = rng.sample(words, len(words))
+    clips = str(tmp_path / "clips")
+    spark.createDataFrame(
+        [("a", " ".join(words)), ("b", " ".join(shuffled))],
+        "clip_id string, transcript string",
+    ).write.parquet(clips)
+    both = spark.createDataFrame(
+        [("c", 0, "a"), ("c", 1, "b")], "cluster_id string, _e int, clip_id string"
+    )
+    got = bench._explain_extra_merges(spark, both, clips)
+    assert got["pairs_checked"] == 1
+    assert got["simhash_ok_frac"] == 0.0
