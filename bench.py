@@ -1083,6 +1083,15 @@ def run_scaling(tmp: str) -> dict:
     return scaling
 
 
+def quality_floors_ok(quality: dict) -> bool:
+    """True when dup-pair recall, pair precision and ARI all reach 0.99
+    (ROADMAP aim 3's floors); a missing or non-numeric value fails."""
+    return all(
+        isinstance(quality.get(k), (int, float)) and quality[k] >= 0.99
+        for k in ("dup_pair_recall", "pair_precision", "ari")
+    )
+
+
 def compact_summary(full: dict, full_artifact_rel: str | None = None) -> dict:
     """The ONE stdout line, sized to survive the driver's bounded tail
     capture (round 4's artifact recorded ``"parsed": null`` because the
@@ -1099,8 +1108,9 @@ def compact_summary(full: dict, full_artifact_rel: str | None = None) -> dict:
     }
     for k in (
         "throughput_clips_per_sec", "clustered_rows", "dup_pair_recall",
-        "pair_precision", "ari", "n_clusters", "n_clusters_expected",
-        "extra_merges", "multimodal_pairs", "headline_int_ids", "aqe",
+        "pair_precision", "ari", "quality_floors_ok", "n_clusters",
+        "n_clusters_expected", "extra_merges", "multimodal_pairs",
+        "headline_int_ids", "aqe",
     ):
         if k in full:
             out[k] = full[k]
@@ -1243,6 +1253,7 @@ def main() -> None:
                 clips_path=clips_path,
             )
         )
+        extras["quality_floors_ok"] = quality_floors_ok(extras)
 
         # chunk-level exact dedup over the driver documents table
         from cc_net_spark import queries as Q

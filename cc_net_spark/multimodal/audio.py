@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cc_net_spark.multimodal.verify import decoded_score, near_dup_pairs, pair_scores, verify_pairs
+from cc_net_spark.multimodal.verify import decoded, near_dup_pairs, pair_scores, verify_pairs
 
 SUPPORTED_CODECS = ("pcm_s16le",)
 STUB_CODECS = ("flac", "opus")
@@ -96,6 +96,14 @@ def decode_clip(codec: str, blob: bytes) -> tuple[int, np.ndarray]:
     raise ValueError(f"unknown codec: {codec}")
 
 
+def decode_clip_int16(codec: str, blob: bytes) -> np.ndarray:
+    """``decode_clip``'s samples before float scaling: raw int16 for
+    ``pcm_s16le``, the same errors (and stubs) for every other codec."""
+    if codec == "pcm_s16le":
+        return wav_decode_int16(blob)[1]
+    return decode_clip(codec, blob)[1]
+
+
 def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
     """Signal-to-noise ratio of `test` against reference PCM, in dB."""
     n = min(len(ref), len(test))
@@ -110,6 +118,13 @@ def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
     if p_sig == 0.0:
         return float("-inf")
     return 10.0 * np.log10(p_sig / p_noise)
+
+
+def snr_db_int16(ref: np.ndarray, test: np.ndarray) -> float:
+    """``snr_db`` of two ``decode_clip_int16`` sample arrays, bit for bit
+    the value over their ``decode_clip`` float32 PCM: int16 / 32768 is
+    exact in float32, and float64 holds it unchanged."""
+    return snr_db(ref / 32768.0, test / 32768.0)
 
 
 # ---------------------------------------------------------------------------
@@ -155,25 +170,25 @@ def pair_audio_invariants(
     """
     if "transcript" not in clips.columns:
         clips = clips.withColumn("transcript", F.lit(None).cast("string"))
-    # a stubbed codec scores NaN (null snr_db, pcm_ok false): undecided,
-    # unlike the -1e9 of a measured mismatch
-    score = decoded_score(lambda codec, blob: decode_clip(codec, blob)[1], snr_db, np.nan)
+    pcm = decoded(decode_clip_int16)
 
-    def kernel(pdf: pd.DataFrame) -> dict:
+    def prepare(codec: str, blob: bytes, transcript: str | None) -> tuple:
         from cc_net_spark.functions.normalize import normalize_for_dedup
 
-        snrs = pair_scores(pdf, ("codec", "bytes"), score)
+        return pcm(codec, bytes(blob)), normalize_for_dedup(transcript or "")
+
+    def kernel(a: list, b: list) -> dict:
+        # a stubbed codec scores NaN (null snr_db, pcm_ok false):
+        # undecided, unlike the -1e9 of a measured mismatch
+        snrs = pair_scores([x[0] for x in a], [y[0] for y in b], snr_db_int16, np.nan)
         return {
             "snr_db": snrs,
-            "transcript_equal": [
-                normalize_for_dedup(x or "") == normalize_for_dedup(y or "")
-                for x, y in zip(pdf["transcript_a"], pdf["transcript_b"])
-            ],
+            "transcript_equal": [x[1] == y[1] for x, y in zip(a, b)],
             "pcm_ok": snrs >= min_snr_db,
         }
 
     return verify_pairs(
-        pairs, clips, id_col, ("codec", "bytes", "transcript"), kernel,
+        pairs, clips, id_col, ("codec", "bytes", "transcript"), prepare, kernel,
         "snr_db double, transcript_equal boolean, pcm_ok boolean",
     )
 

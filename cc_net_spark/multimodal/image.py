@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cc_net_spark.multimodal.verify import decoded_score, near_dup_pairs, pair_scores, verify_pairs
+from cc_net_spark.multimodal.verify import decoded, near_dup_pairs, pair_scores, verify_pairs
 
 SUPPORTED_CODECS = ("rgb8_raw",)
 STUB_CODECS = ("jpeg", "png")
@@ -217,10 +217,9 @@ def pair_image_psnr(
     candidate pairs (shared payload verify, ``verify.verify_pairs``);
     dimension mismatch => -inf (rejected)."""
     cols = ("codec", "bytes", "width", "height")
-    score = decoded_score(decode_image, psnr_db, -np.inf)
     return verify_pairs(
-        pairs, images, id_col, cols,
-        lambda pdf: {"psnr_db": pair_scores(pdf, cols, score)},
+        pairs, images, id_col, cols, decoded(decode_image),
+        lambda a, b: {"psnr_db": pair_scores(a, b, psnr_db, -np.inf)},
         "psnr_db double",
     )
 

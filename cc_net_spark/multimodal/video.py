@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cc_net_spark.multimodal.verify import decoded_score, near_dup_pairs, pair_scores, verify_pairs
+from cc_net_spark.multimodal.verify import decoded, near_dup_pairs, pair_scores, verify_pairs
 
 SUPPORTED_CODECS = ("rgb8_frames",)
 STUB_CODECS = ("h264", "vp9")
@@ -141,10 +141,9 @@ def pair_video_psnr(
     from cc_net_spark.multimodal.image import psnr_db
 
     cols = ("codec", "bytes", "width", "height", "n_frames")
-    score = decoded_score(decode_video, psnr_db, -np.inf)
     return verify_pairs(
-        pairs, videos, id_col, cols,
-        lambda pdf: {"psnr_db": pair_scores(pdf, cols, score)},
+        pairs, videos, id_col, cols, decoded(decode_video),
+        lambda a, b: {"psnr_db": pair_scores(a, b, psnr_db, -np.inf)},
         "psnr_db double",
     )
 

@@ -53,9 +53,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        # ...and by bytes: a payload verify row carries two payloads
-        # (~28 KB for audio), so 4096 rows are ~115 MB held per Python
-        # worker per batch; text batches (~5 MB) never reach the bound
+        # ...and by bytes: the payload scans feeding Python kernels
+        # (fingerprints, metadata) carry one payload per row (~14 KB for
+        # audio), so 4096 rows are ~57 MB held per Python worker per
+        # batch; text batches (~5 MB) never reach the bound
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 << 20))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")

@@ -181,6 +181,17 @@ def test_compact_summary_is_small_and_keeps_contract_keys():
     assert compact["queries"] == full["queries"]
 
 
+def test_quality_floors_ok_needs_all_three_floors():
+    ok = {"dup_pair_recall": 1.0, "pair_precision": 0.99, "ari": 0.995}
+    assert bench.quality_floors_ok(ok)
+    for k in ok:
+        assert not bench.quality_floors_ok({**ok, k: 0.989})
+        assert not bench.quality_floors_ok({**ok, k: None})
+        assert not bench.quality_floors_ok({j: v for j, v in ok.items() if j != k})
+    full = {"metric": "m", "value": 1.0, **ok, "quality_floors_ok": True}
+    assert bench.compact_summary(full)["quality_floors_ok"] is True
+
+
 def test_archived_record_artifact_has_contract_keys():
     """The driver reads one JSON line with metric/value/unit/queries/sf
     (+ scaling, probes, recall); pin the shape against the archived
