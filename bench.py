@@ -52,11 +52,10 @@ SCALING_REPS = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "2"))
 # dip otherwise records pure weather (e.g. the archived 0.501-efficiency
 # artifact whose same-code matched-window measure was 0.757).
 SCALING_TARGET = float(os.environ.get("SPARK_GRAFT_SCALING_TARGET", "0.8"))
-# 600 s (was 420): once the lo floor pins, top-up spends the budget on
-# hi-only samples (~45-140 s each under throttle) — the extra headroom
-# buys ~2 more hi samples in a degraded window, and session-11 measured
-# the hi floor converging in exactly that best-of regime (38.5 -> 37.6
-# -> 36.9 across one window series)
+# 600 s (was 420): a top-up leg takes ~45-140 s under throttle, so the
+# extra headroom buys ~2 more samples in a degraded window; the hi floor
+# was measured converging in that best-of regime (38.5 -> 37.6 -> 36.9
+# across one window series)
 SCALING_TOPUP_BUDGET = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET", "600"))
 # headline top-up: clips/sec floor below which the run is a burst-credit
 # dip worth re-sampling. 1800 (was 1000, the round-2 figure): the
@@ -65,18 +64,10 @@ SCALING_TOPUP_BUDGET = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET", "600")
 # wall-clock; 0 disables.
 HEADLINE_TARGET_CPS = float(os.environ.get("SPARK_GRAFT_HEADLINE_TARGET_CPS", "1800"))
 HEADLINE_TOPUP_BUDGET = float(os.environ.get("SPARK_GRAFT_HEADLINE_BUDGET", "240"))
-# realistic transcript sizes (~1.5 KB) so per-row compute, not per-stage
-# overhead, dominates the scaling measurement
-SIZE_SCALE = int(os.environ.get("SPARK_GRAFT_SIZE_SCALE", "3"))
 # SimHash feature n-gram (NearDupConfig.simhash_ngram): trigram default
 # kills the toy-vocabulary distributional merges (precision 0.013 -> ~1);
 # 1 restores the unigram workload every r2-r4 artifact recorded
 SIMHASH_NGRAM = int(os.environ.get("SPARK_GRAFT_SIMHASH_NGRAM", "3"))
-# one-action fused shape (NearDupConfig.cache_signatures): the fused
-# edges job caches the signature scan executor-local instead of
-# committing a parquet signatures stage first — one fewer action +
-# commit + plan barrier (core-invariant driver time)
-CACHE_SIG = os.environ.get("SPARK_GRAFT_CACHE_SIG", "0") == "1"
 
 
 # scaling-leg cluster stand-in: "executors" (default) = local-cluster
@@ -108,10 +99,9 @@ EXEC_MEM_MB = int(os.environ.get("SPARK_GRAFT_EXEC_MEM_MB", "6144"))
 
 
 def _wait_executors(spark: SparkSession, n_exec: int, timeout: float = 90.0) -> None:
-    """Block until all executors registered: defaultParallelism (and the
-    stage-concurrency auto-tune that reads it) reports only the already-
-    registered cores, so sizing decisions taken before registration would
-    silently configure for a smaller cluster."""
+    """Block until all executors registered: defaultParallelism reports
+    only the already-registered cores, so sizing decisions taken before
+    registration would silently configure for a smaller cluster."""
     sc = spark.sparkContext
     t_end = time.time() + timeout
     while time.time() < t_end:
@@ -128,11 +118,10 @@ def _wait_executors(spark: SparkSession, n_exec: int, timeout: float = 90.0) -> 
 def make_spark(cores: int, executors: bool = False) -> SparkSession:
     from cc_net_spark.session import get_spark
 
-    # SPARK_GRAFT_SHUFFLE_PARTS: A/B knob. 4-waves-per-slot (cores*4) was
-    # measured EQUAL to one-wave (max(8, cores)) at bench scale in a
-    # matched window (29.0 vs 29.3 s at 8 cores, 60k clips) — AQE
-    # coalescing already rebalances; keep the long-recorded default.
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "0")) or max(8, cores)
+    # one wave per slot: 4 waves per slot (cores*4) measured EQUAL at
+    # bench scale in a matched window (29.0 vs 29.3 s at 8 cores, 60k
+    # clips) — AQE coalescing already rebalances
+    parts = max(8, cores)
     if not executors:
         return get_spark(
             app_name=f"cc_net_spark_bench_{cores}",
@@ -341,21 +330,12 @@ def run_leg(cores: int, clips_path: str, n: int) -> None:
     os.environ.setdefault("SPARK_GRAFT_KEEP_SHINGLES", "0")
     spin = spin_rate(cores)
     membw = membw_rate(cores)
-    # Legs default to the FUSED pipeline shape (one edges job unions the
-    # four pair families) — session-9 interleaved A/B at 120k clips,
-    # geometry 1x1 vs 4x1 executors (BENCH/BENCH_r04_fused_leg_ab.jsonl):
-    # fused won BOTH legs in BOTH reps (hi -17%: 50.2 vs 60.3 s; lo -4%)
-    # -> raw eff 0.601 vs 0.519 in the same throttled windows. The staged
-    # shape pays ~3 extra stage-table commits + manifest barriers that
-    # the fused union packs into one job. SPARK_GRAFT_LEG_FUSED=0
-    # restores the staged (resumable-stage) shape for A/Bs.
-    fused = os.environ.get("SPARK_GRAFT_LEG_FUSED", "1") == "1"
     executors = SCALE_MODE == "executors"
     spark = make_spark(cores, executors=executors)
     workdir = tempfile.mkdtemp(prefix=f"bench_leg_{cores}_")
     try:
         warm_workers(spark, cores)
-        t, _ = timed(cluster_job, spark, clips_path, fused, workdir)
+        t, _ = timed(cluster_job, spark, clips_path, workdir)
         quality = cluster_quality(spark, workdir, n)
         t_ctl, _ = timed(control_job, spark)
     finally:
@@ -373,10 +353,11 @@ def run_leg(cores: int, clips_path: str, n: int) -> None:
         "dup_pair_recall": quality["dup_pair_recall"],
         "mode": SCALE_MODE,
         "commit": _git_rev(),
-        "size_scale": SIZE_SCALE,
-        "fused": fused,
+        # fixed shape keys: archived_scaling_floor matches legs on them
+        "size_scale": 3,
+        "fused": True,
         "simhash_ngram": SIMHASH_NGRAM,
-        "cache_sig": CACHE_SIG and fused,
+        "cache_sig": False,
         **(
             {"executors": max(1, cores // EXEC_CORES), "exec_cores": EXEC_CORES}
             if executors
@@ -429,27 +410,20 @@ def control_job(spark: SparkSession, n_tasks: int = CONTROL_TASKS) -> int:
 def cluster_job(
     spark: SparkSession,
     clips_path: str,
-    fused: bool = True,
     workdir: str | None = None,
     int_ids: bool | None = None,
 ) -> int:
     """The headline near-dup clustering job — the REAL product pipeline
-    (StageRunner DAG: signatures -> LSH/verify -> exact -> substring ->
-    edges -> CC -> clusters).
+    in its fused shape (StageRunner DAG: signatures -> edges, one job
+    unioning the pair families -> clusters), which the headline and both
+    scaling legs run.
 
-    fused=True unions the four pair families into one edges job — the
-    highest-throughput shape on one saturated box (branch tasks pack the
-    idle IO/JVM gaps; measured equal to staged-parallel at 32 cores).
-    fused=False materializes each family as its own resumable stage —
-    what the scaling legs run — with stage-level concurrency AUTO-TUNED
-    to the available slots (min(4, cores//2), override via
-    SPARK_GRAFT_STAGE_PARALLEL): the four pair stages are independent
-    given the signatures table, and running them concurrently packs the
-    scheduling/IO gaps exactly the way a multi-executor cluster packs
-    branches onto different executors. Measured at 60k clips: 8-core leg
-    52 s sequential -> 29 s at parallel=4; at 2 cores concurrency only
-    adds scheduling overhead (74 -> 84 s), so the auto-tune keeps that
-    leg sequential."""
+    Fused, not staged: in an interleaved A/B at 120k clips
+    (1x1 vs 4x1 executors, BENCH/BENCH_r04_fused_leg_ab.jsonl) fused won
+    both legs in both reps (hi -17%: 50.2 vs 60.3 s; lo -4%), raw
+    efficiency 0.601 vs 0.519 — the staged shape pays extra stage-table
+    commits and manifest barriers that the fused union packs into one
+    job."""
     import shutil as _shutil
     import tempfile as _tempfile
 
@@ -460,16 +434,11 @@ def cluster_job(
     try:
         cfg = NearDupConfig(
             jaccard_threshold=0.5, max_hamming=4,
-            fused_pairs=fused, include_exact_hashes=False,
+            fused_pairs=True, include_exact_hashes=False,
             # keep_shingles=False is the extreme-scale configuration
             # (signature-estimated Jaccard verify, ~5x smaller signatures
             # table — pipeline.py): A/B knob for the scaling study
             keep_shingles=os.environ.get("SPARK_GRAFT_KEEP_SHINGLES", "1") == "1",
-            # stage concurrency: slot-proportional auto-tune (see
-            # docstring); env var overrides for A/B studies
-            max_parallel_stages=int(
-                os.environ.get("SPARK_GRAFT_STAGE_PARALLEL", "0")
-            ) or max(1, min(4, spark.sparkContext.defaultParallelism // 2)),
             # fixed-width surrogate ids through the pair families + CC
             # (see NearDupConfig.int_ids). Headline passes True (the
             # max-throughput config: best-of -20% at 32 cores); the
@@ -487,9 +456,6 @@ def cluster_job(
             # unigram for A/Bs). Changes the WORKLOAD (pair volume), so
             # it is part of every leg record and the archived-floor match
             simhash_ngram=SIMHASH_NGRAM,
-            # one-action fused shape (signatures cached executor-local
-            # instead of a committed parquet stage) — A/B knob
-            cache_signatures=CACHE_SIG and fused,
         )
         clusters, manifests = run_near_dup_pipeline(spark, clips_path, workdir, cfg)
         # row count from the clusters stage manifest (Parquet footers,
@@ -748,20 +714,17 @@ def archived_scaling_floor(
         "aqe": os.environ.get("SPARK_GRAFT_AQE", "true").lower()
         not in ("0", "false", "no"),
     }
-    # legs recorded before session 11 lack these two fields but were all
-    # run at the historical defaults (size_scale=3, fused legs) — treat
-    # absence as those defaults so the existing archive stays matchable,
-    # while a non-default A/B run (smaller corpus rows, staged shape)
-    # recorded since can never pollute a default-config floor
-    want_shape = {"size_scale": (SIZE_SCALE, 3),
-                  "fused": (os.environ.get("SPARK_GRAFT_LEG_FUSED", "1") == "1",
-                            True),
+    # (live value, value assumed when absent): the oldest archived legs
+    # lack size_scale/fused but all ran size_scale=3 fused legs, so
+    # absence matches those; an archived non-default leg (smaller rows,
+    # staged shape, cached signatures) can never seed a live floor
+    want_shape = {"size_scale": (3, 3),
+                  "fused": (True, True),
                   # legs recorded before round 5 were all unigram SimHash;
                   # the trigram workload has far fewer pair rows, so the
                   # two must never share a floor
                   "simhash_ngram": (SIMHASH_NGRAM, 1),
-                  # one-action cached-signatures shape vs two-stage shape
-                  "cache_sig": (CACHE_SIG, False)}
+                  "cache_sig": (False, False)}
     best: dict[int, tuple[dict, str]] = {}
     try:
         names = sorted(os.listdir(archive_dir))
@@ -840,8 +803,10 @@ def run_scaling(tmp: str) -> dict:
         # 64 output files => the scan-split tuning (pipeline.tuned_scan_conf)
         # has row-group granularity to balance tasks across both leg core
         # counts (a file is unsplittable below its row groups)
+        # size_scale=3: realistic ~1.5 KB transcripts, so per-row compute,
+        # not per-stage overhead, dominates the scaling measurement
         synth.generate_clips(
-            s0, N_SCALING, seed=42, with_audio=False, size_scale=SIZE_SCALE,
+            s0, N_SCALING, seed=42, with_audio=False, size_scale=3,
             partitions=64,
         ).write.mode("overwrite").parquet(scaling_path)
     finally:
@@ -856,12 +821,11 @@ def run_scaling(tmp: str) -> dict:
         mode: str,
         reps: int = SCALING_REPS,
         legs: dict[int, list[dict]] | None = None,
-        cores_list: tuple[int, ...] | None = None,
     ) -> dict[int, list[dict]]:
         legs = legs if legs is not None else {lo_cores: [], hi_cores: []}
         env = dict(os.environ, SPARK_GRAFT_SCALE_MODE=mode)
         for _rep in range(reps):
-            for cores in cores_list or (lo_cores, hi_cores):
+            for cores in (lo_cores, hi_cores):
                 proc = subprocess.run(
                     [sys.executable, os.path.abspath(__file__), "--leg", str(cores), scaling_path],
                     capture_output=True,
@@ -926,39 +890,17 @@ def run_scaling(tmp: str) -> dict:
             and time.time() - t_topup0 < SCALING_TOPUP_BUDGET
         )
 
-    def _lo_pinned() -> bool:
-        """True once the lo floor is established: >= 2 samples within 3%
-        AND hi-only top-up was explicitly opted into.
-
-        Session-10 measured the 1-core leg near-deterministic across
-        window grades (127.6-127.7 s, spread ~0.1%) — re-measuring it
-        wastes ~60% of each top-up pair's budget, so hi-only sampling is
-        tempting. But it is also STRUCTURALLY BIASED: hi's min() falls
-        monotonically with extra draws while lo stays frozen at 2
-        samples, so the best-of ratio can only drift up — and session
-        11's own drift correction showed the lo floor moves ~8% across
-        box eras, i.e. it is NOT the constant the optimization assumed.
-        Default is therefore SYMMETRIC pairs (equal reps per leg, each
-        pair sharing a weather window); SPARK_GRAFT_LO_PINNED_TOPUP=1
-        restores hi-only for budget-constrained A/B hunts, and the
-        artifact's reps_per_leg + paired-median fields make whichever
-        regime ran visible."""
-        if os.environ.get("SPARK_GRAFT_LO_PINNED_TOPUP", "0") != "1":
-            return False
-        s = [l["seconds"] for l in legs[lo_cores]]
-        return len(s) >= 2 and (max(s) - min(s)) / min(s) < 0.03
-
     def _topup_pair() -> bool:
-        """One interleaved rep pair — or a hi-only sample once the lo
-        floor is pinned — into a scratch dict, merged only on full
-        success (guard b). Returns False on failure."""
+        """One interleaved rep pair into a scratch dict, merged only on
+        full success (guard b). Returns False on failure. Pairs stay
+        symmetric: hi-only sampling once the lo floor looked pinned was
+        structurally biased (hi's min() keeps falling while lo's stays
+        frozen, so the ratio can only drift up), and the lo floor moved
+        ~8% across box eras."""
         nonlocal legs, topup_reps
         attempt = {c: list(v) for c, v in legs.items()}
         try:
-            run_block(
-                mode, reps=1, legs=attempt,
-                cores_list=(hi_cores,) if _lo_pinned() else None,
-            )
+            run_block(mode, reps=1, legs=attempt)
         except RuntimeError as exc:
             print(f"scaling top-up rep failed (keeping prior reps): {exc}",
                   file=sys.stderr)
@@ -1185,7 +1127,7 @@ def main() -> None:
         from cc_net_spark.sources import synth
 
         synth.generate_clips(
-            spark, N_CLIPS, seed=42, with_audio=False, size_scale=SIZE_SCALE
+            spark, N_CLIPS, seed=42, with_audio=False, size_scale=3
         ).write.mode("overwrite").parquet(clips_path)
         warm_workers(spark, CPUS)
 
@@ -1203,7 +1145,7 @@ def main() -> None:
 
         def headline_rep(rep: int) -> int:
             return cluster_job(
-                spark, clips_path, True, os.path.join(tmp, f"headline_stages_{rep}"),
+                spark, clips_path, os.path.join(tmp, f"headline_stages_{rep}"),
                 int_ids=headline_int_ids,
             )
 

@@ -29,18 +29,16 @@ import time
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_CLIPS = int(os.environ.get("SPARK_GRAFT_CLIPS", "20000"))
-SIZE_SCALE = int(os.environ.get("SPARK_GRAFT_SIZE_SCALE", "3"))
 PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
 
 
 def make_spark():
     from cc_net_spark.session import get_spark
 
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "0")) or max(8, CPUS)
     return get_spark(
         app_name="cc_net_spark_bench_extra",
         master=f"local[{CPUS}]",
-        shuffle_partitions=parts,
+        shuffle_partitions=max(8, CPUS),
     )
 
 
@@ -52,7 +50,7 @@ def _setup(spark, tmp: str) -> str:
 
     clips_path = os.path.join(tmp, "clips.parquet")
     synth.generate_clips(
-        spark, N_CLIPS, seed=42, with_audio=False, size_scale=SIZE_SCALE
+        spark, N_CLIPS, seed=42, with_audio=False, size_scale=3
     ).write.mode("overwrite").parquet(clips_path)
     import bench
 
@@ -85,7 +83,7 @@ def build_registry(spark, ctx: dict):
 
         wd = os.path.join(ctx["tmp"], f"hx_{ctx['hx']}")
         ctx["hx"] += 1
-        n = bench.cluster_job(spark, ctx["clips_path"], True, wd, int_ids=True)
+        n = bench.cluster_job(spark, ctx["clips_path"], wd, int_ids=True)
         _sh.rmtree(wd, ignore_errors=True)
         return n
 

@@ -329,62 +329,56 @@ class StageRunner:
         Completed stages (manifest + data + matching input/external
         lineage) are skipped.
 
-        ``max_parallel > 1`` runs INDEPENDENT stages (same topological
-        level, e.g. the four pair families that all read only the
-        signatures table) concurrently from driver threads: Spark's
-        scheduler interleaves their jobs across the executor slots, so
-        the per-stage driver-side barriers (planning, commit, footer
-        scan) overlap instead of summing — the Amdahl fixed cost that
-        caps scaling efficiency on short stages. Results and manifests
-        are identical to the sequential order (stage outputs are
-        independent files; each level is a barrier)."""
+        Stages run level by level (a level = every stage whose in-list
+        inputs are committed). A level with one stage to run, or any
+        level when ``max_parallel == 1``, runs inline on the caller's
+        thread, in list order, so its jobs keep the caller's job group.
+        ``max_parallel > 1`` runs the stages of a wider level (e.g. the
+        four pair families that all read only the signatures table)
+        concurrently from driver threads: Spark's scheduler interleaves
+        their jobs across the executor slots, so the per-stage
+        driver-side barriers (planning, commit, footer scan) overlap
+        instead of summing. Results and manifests are identical either
+        way (stage outputs are independent files; each level is a
+        barrier)."""
+        from concurrent.futures import ThreadPoolExecutor
+
         # fresh external fingerprints per run(): resume across separate
         # run() calls must still observe source-table changes
         self._ext_cache.clear()
-        if max_parallel > 1:
-            return self._run_parallel(stages, force=force, max_parallel=max_parallel)
-        results: dict[str, dict] = {}
-        for st in stages:
-            if not force and self.is_complete(st):
-                results[st.name] = {**self.read_manifest(st.name), "skipped": True}
-                continue
-            results[st.name] = self._run_one(st)
-        return results
-
-    def _run_parallel(
-        self, stages: list[Stage], force: bool, max_parallel: int
-    ) -> dict[str, dict]:
-        from concurrent.futures import ThreadPoolExecutor
-
         results: dict[str, dict] = {}
         remaining = list(stages)
         in_list = {s.name for s in stages}
-        with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-            while remaining:
-                # ready = all in-list inputs already committed this run
-                level = [
-                    s
-                    for s in remaining
-                    if all(i in results or i not in in_list for i in s.inputs)
-                ]
-                if not level:
-                    raise RuntimeError(
-                        "stage dependency cycle or missing input among: "
-                        + ", ".join(s.name for s in remaining)
-                    )
-                todo: list[Stage] = []
-                for st in level:
-                    if not force and self.is_complete(st):
-                        results[st.name] = {
-                            **self.read_manifest(st.name),
-                            "skipped": True,
-                        }
-                    else:
-                        todo.append(st)
-                futs = {st.name: pool.submit(self._run_one, st) for st in todo}
-                for name, fut in futs.items():
-                    results[name] = fut.result()
-                remaining = [s for s in remaining if s.name not in results]
+        while remaining:
+            # ready = all in-list inputs already committed this run
+            level = [
+                s
+                for s in remaining
+                if all(i in results or i not in in_list for i in s.inputs)
+            ]
+            if not level:
+                raise RuntimeError(
+                    "stage dependency cycle or missing input among: "
+                    + ", ".join(s.name for s in remaining)
+                )
+            todo: list[Stage] = []
+            for st in level:
+                if not force and self.is_complete(st):
+                    results[st.name] = {
+                        **self.read_manifest(st.name),
+                        "skipped": True,
+                    }
+                else:
+                    todo.append(st)
+            if len(todo) > 1 and max_parallel > 1:
+                with ThreadPoolExecutor(max_workers=max_parallel) as pool:
+                    futs = {st.name: pool.submit(self._run_one, st) for st in todo}
+                    for name, fut in futs.items():
+                        results[name] = fut.result()
+            else:
+                for st in todo:
+                    results[st.name] = self._run_one(st)
+            remaining = [s for s in remaining if s.name not in results]
         return results
 
     def _run_one(self, st: Stage) -> dict:

@@ -1,6 +1,8 @@
 """The flagship near-duplicate detection + clustering pipeline.
 
-DAG (each stage a checkpointed Parquet/Iceberg table, resumable):
+Two shapes (both checkpointed Parquet/Iceberg stages, resumable):
+
+  staged (default; per-family resume granularity):
 
   clips ──> signatures  (ONE scan + ONE normalize: MinHash sigs + shingles
          │               + SimHash + winnowed substring grams + full-text
@@ -12,14 +14,21 @@ DAG (each stage a checkpointed Parquet/Iceberg table, resumable):
          │      ├─> simhash_pairs   (bit bands -> SALTED bucket join -> Hamming verify)
          │      ├─> exact_pairs     (full-transcript tkey buckets)
          │      └─> substring_pairs (explode grams -> capped bucket join)
+         ├─> audio_pairs   (include_audio_pass only)
          ├─> exact_hashes  (paragraph sha1-u64 groupBy — the cc_net build-side
          │                  artifact; paragraph granularity, so it scans clips)
-         └────────────> edges (union) -> components (alt-star CC) -> clusters
+         └────────────> clusters (pair tables unioned inline -> alt-star CC)
 
-(default fold_edges=True: the union feeds CC directly — CC's round-0
-checkpoint already materializes the canonical edge set, so a separate
-edges table is a redundant second write of the same rows; see
-NearDupConfig.fold_edges)
+  fused (fused_pairs=True; fewest materializations):
+
+  clips ──> signatures ──> edges (all pair families, one union) ──> clusters
+         └─> exact_hashes  (include_exact_hashes, as above)
+
+The staged shape writes no edges table: CC's round-0 checkpoint already
+materializes the canonical edge set, and the pair tables stay the resume
+points. The fused shape keeps its edges stage — the single
+materialization that protects CC's sizing count from recomputing all
+four pair families.
 
 Skew handling: every pair generator runs through the capped bucket join
 (``operators/pairs.py``) with drop metrics recorded in the stage manifest;
@@ -35,6 +44,7 @@ the payload (verify via ``.explain``: ReadSchema excludes ``bytes``).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,17 +90,6 @@ class NearDupConfig:
     # matters less than latency. include_exact_hashes toggles the cc_net
     # hash-table artifact stage (not consumed by clustering).
     fused_pairs: bool = False
-    # cache_signatures (fused_pairs only): skip the materialized
-    # signatures stage — the fused edges job persists the signature scan
-    # executor-local (DISK_ONLY) and the four pair families read the
-    # cache. ONE action instead of two: saves the signatures stage
-    # commit + parquet read-back + edges plan barrier (~2.5-3 s of
-    # core-invariant driver time), at the cost of the signatures resume
-    # checkpoint (an executor loss recomputes lost cache partitions from
-    # source; a driver loss reruns the edges stage). validate_ids
-    # "observe" is skipped in this shape (its Observation rides the
-    # signatures write); "strict" still works.
-    cache_signatures: bool = False
     include_exact_hashes: bool = True
     # cluster-profile metrics (n_clusters distinct count) cost two extra
     # Spark jobs on the final table — opt-in (manifests already carry
@@ -117,18 +116,6 @@ class NearDupConfig:
     # slots, overlapping the per-stage driver barriers (see
     # StageRunner.run). 1 keeps the fully sequential order.
     max_parallel_stages: int = 1
-    # staged mode only: skip the materialized 'edges' stage and feed the
-    # clusters stage the pair tables directly. The edges table's ONLY
-    # consumer is the distinct->CC step, and connected_components
-    # checkpoints the canonical edge set as its round-0 cut anyway — the
-    # staged edges parquet was a REDUNDANT second materialization of the
-    # same rows (at 10^12-clip scale, a full write+read of the edge set;
-    # locally, ~5 Spark jobs of serial barrier). Resume granularity is
-    # unchanged where it matters: the pair tables stay checkpoints, and
-    # edges are a cheap union of them. fused_pairs ignores this (its
-    # edges stage is the single materialization protecting CC's sizing
-    # count from recomputing all four pair families).
-    fold_edges: bool = True
     # int_ids: run the pair families + CC over a FIXED-WIDTH surrogate id
     # (sid = xxhash64(clip_id), added JVM-side to the signatures table)
     # instead of the string clip_id, mapping back to strings in one
@@ -214,7 +201,7 @@ def build_stages(
         clips = load_clips(spark, kernel=True)
         return ed.build_hashes(ed.paragraph_hashes(clips, txt, idc))
 
-    def _raw_signatures(spark: SparkSession) -> DataFrame:
+    def stage_signatures(spark: SparkSession) -> DataFrame:
         # THE one corpus scan: every downstream pair family reads this table
         sig = fused_signatures(
             load_clips(spark, kernel=True), txt, idc,
@@ -228,10 +215,6 @@ def build_stages(
             # surrogate id, JVM-side (whole-stage codegen, no UDF cost);
             # 8 bytes/row in the signatures parquet
             sig = sig.withColumn("sid", F.xxhash64(F.col(idc)))
-        return sig
-
-    def stage_signatures(spark: SparkSession) -> DataFrame:
-        sig = _raw_signatures(spark)
         if cfg.validate_ids == "none":
             return sig
         # null-id contract check riding the stage's own write action
@@ -355,26 +338,15 @@ def build_stages(
             )
         return out, {"pairgen": lambda: resolve().__dict__}
 
-    def stage_edges(
-        spark: SparkSession,
-        exact_pairs: DataFrame,
-        minhash_pairs: DataFrame,
-        simhash_pairs: DataFrame,
-        substring_pairs: DataFrame,
-        audio_pairs: DataFrame | None = None,
-    ) -> DataFrame:
-        def tag(df: DataFrame, kind: str) -> DataFrame:
-            return df.select("id_a", "id_b", F.lit(kind).alias("kind"))
-
-        edges = (
-            tag(exact_pairs, "exact")
-            .unionByName(tag(minhash_pairs, "minhash"))
-            .unionByName(tag(simhash_pairs, "simhash"))
-            .unionByName(tag(substring_pairs, "substring"))
+    def stage_edges(pairs: dict[str, DataFrame]) -> DataFrame:
+        """Union of pair tables keyed by family, each row tagged with it."""
+        return reduce(
+            DataFrame.unionByName,
+            (
+                df.select("id_a", "id_b", F.lit(kind).alias("kind"))
+                for kind, df in pairs.items()
+            ),
         )
-        if audio_pairs is not None:
-            edges = edges.unionByName(tag(audio_pairs, "audio"))
-        return edges
 
     def _manifest_rows(stage_name: str) -> int | None:
         if workdir is None:
@@ -420,23 +392,17 @@ def build_stages(
         # operator can skip its sizing count() job
         return _cluster_edges(spark, edges, _manifest_rows("edges"))
 
-    def stage_clusters_folded(
-        spark: SparkSession,
-        exact_pairs: DataFrame,
-        minhash_pairs: DataFrame,
-        simhash_pairs: DataFrame,
-        substring_pairs: DataFrame,
-        audio_pairs: DataFrame | None = None,
+    def stage_clusters_from_pairs(
+        spark: SparkSession, **pair_tables: DataFrame
     ) -> DataFrame:
-        # fold_edges: union the pair tables inline (no materialized edges
-        # stage — see NearDupConfig.fold_edges). The pair manifests' row
-        # sum is an upper bound on distinct canonical edges, so the CC
-        # sizing count() is still skipped when they are all known.
+        # staged shape: the pair tables are unioned inline (no edges
+        # table, see the module docstring). Their manifests' row sum is
+        # an upper bound on distinct canonical edges, so the CC sizing
+        # count() is still skipped when they are all known.
         edges = stage_edges(
-            spark, exact_pairs, minhash_pairs, simhash_pairs, substring_pairs,
-            audio_pairs,
+            {name.removesuffix("_pairs"): df for name, df in pair_tables.items()}
         )
-        rows = [_manifest_rows(s) for s in edge_inputs]
+        rows = [_manifest_rows(name) for name in pair_tables]
         edge_count = sum(rows) if all(r is not None for r in rows) else None
         return _cluster_edges(spark, edges, edge_count)
 
@@ -446,69 +412,33 @@ def build_stages(
         return {"n_rows": agg["n"], "n_clusters": n_clusters}
 
     def stage_edges_fused(spark: SparkSession, signatures: DataFrame):
-        def tag(df: DataFrame, kind: str) -> DataFrame:
-            return df.select("id_a", "id_b", F.lit(kind).alias("kind"))
-
         simhash_pairs, sim_metrics = stage_simhash_pairs(spark, signatures)
-        edges = (
-            tag(stage_minhash_pairs(spark, signatures), "minhash")
-            .unionByName(tag(simhash_pairs, "simhash"))
-            .unionByName(tag(stage_exact_pairs(spark, signatures), "exact"))
-            .unionByName(tag(stage_substring_pairs(spark, signatures), "substring"))
-        )
+        pairs = {
+            "minhash": stage_minhash_pairs(spark, signatures),
+            "simhash": simhash_pairs,
+            "exact": stage_exact_pairs(spark, signatures),
+            "substring": stage_substring_pairs(spark, signatures),
+        }
         metrics = {"simhash_pairgen": sim_metrics["pairgen"]}
         if cfg.include_audio_pass:
-            audio, audio_metrics = stage_audio_pairs(spark)
-            edges = edges.unionByName(tag(audio, "audio"))
+            pairs["audio"], audio_metrics = stage_audio_pairs(spark)
             metrics["audio_pairgen"] = audio_metrics["pairgen"]
-        return edges, metrics
+        return stage_edges(pairs), metrics
 
     metrics_fn = dup_ratio if cfg.collect_metrics else None
     ext = [clips_path]
-    head = (
-        [Stage("exact_hashes", stage_exact_hashes, external_inputs=ext)]
-        if cfg.include_exact_hashes
-        else []
-    )
-    def stage_edges_fused_cached(spark: SparkSession):
-        """ONE-ACTION fused shape (cache_signatures=True): the signature
-        scan is persisted executor-local (DISK_ONLY — recomputable from
-        source on executor loss, Spark's standard cache tier) INSIDE the
-        edges job instead of committing a parquet stage first. Trades
-        the signatures resume checkpoint for one fewer action + stage
-        commit + edges plan barrier (~2.5-3 s of core-count-invariant
-        driver time per run — the Amdahl cost that caps short-job
-        scaling). The four families read the cache instead of the
-        parquet read-back; results are identical (parity-tested)."""
-        from pyspark import StorageLevel
-
-        sig = _raw_signatures(spark).persist(StorageLevel.DISK_ONLY)
-        edges, metrics = stage_edges_fused(spark, sig)
-        # StageRunner resolves callable metrics right AFTER the stage's
-        # write action — the earliest point the cache is no longer
-        # needed. Without this the executor-local cache (a full corpus
-        # scan's worth of blocks) is retained for the session lifetime.
-        metrics["sig_cache_released"] = lambda: bool(sig.unpersist()) or True
-        return edges, metrics
-
-    if cfg.fused_pairs and cfg.cache_signatures:
-        return [
-            *head,
-            Stage("edges", stage_edges_fused_cached, external_inputs=ext,
-                  params=_sig_params(cfg)),
-            Stage(
-                "clusters",
-                stage_clusters,
-                inputs=["edges"],
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            ),
-        ]
+    head = [
+        *(
+            [Stage("exact_hashes", stage_exact_hashes, external_inputs=ext)]
+            if cfg.include_exact_hashes
+            else []
+        ),
+        Stage("signatures", stage_signatures, external_inputs=ext,
+              params=_sig_params(cfg)),
+    ]
     if cfg.fused_pairs:
         return [
             *head,
-            Stage("signatures", stage_signatures, external_inputs=ext,
-              params=_sig_params(cfg)),
             # the fused edges stage reads only the signatures table for the
             # text families; the audio pass (if enabled) reads clips too
             Stage("edges", stage_edges_fused, inputs=["signatures"], external_inputs=ext),
@@ -520,47 +450,27 @@ def build_stages(
                 metrics_fn=metrics_fn,
             ),
         ]
-    audio_stages = (
-        [Stage("audio_pairs", stage_audio_pairs, external_inputs=ext)]
-        if cfg.include_audio_pass
-        else []
-    )
-    edge_inputs = [
-        "exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs",
-        *(["audio_pairs"] if cfg.include_audio_pass else []),
-    ]
-    tail = (
-        [
-            Stage(
-                "clusters",
-                stage_clusters_folded,
-                inputs=edge_inputs,
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            )
-        ]
-        if cfg.fold_edges
-        else [
-            Stage("edges", stage_edges, inputs=edge_inputs),
-            Stage(
-                "clusters",
-                stage_clusters,
-                inputs=["edges"],
-                external_inputs=ext,
-                metrics_fn=metrics_fn,
-            ),
-        ]
-    )
-    return [
-        *head,
-        Stage("signatures", stage_signatures, external_inputs=ext,
-              params=_sig_params(cfg)),
+    pair_stages = [
         Stage("exact_pairs", stage_exact_pairs, inputs=["signatures"]),
         Stage("minhash_pairs", stage_minhash_pairs, inputs=["signatures"]),
         Stage("simhash_pairs", stage_simhash_pairs, inputs=["signatures"]),
         Stage("substring_pairs", stage_substring_pairs, inputs=["signatures"]),
-        *audio_stages,
-        *tail,
+        *(
+            [Stage("audio_pairs", stage_audio_pairs, external_inputs=ext)]
+            if cfg.include_audio_pass
+            else []
+        ),
+    ]
+    return [
+        *head,
+        *pair_stages,
+        Stage(
+            "clusters",
+            stage_clusters_from_pairs,
+            inputs=[st.name for st in pair_stages],
+            external_inputs=ext,
+            metrics_fn=metrics_fn,
+        ),
     ]
 
 

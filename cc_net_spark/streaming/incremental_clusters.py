@@ -76,6 +76,12 @@ from cc_net_spark.streaming.incremental_neardup import (
 )
 
 CLUSTER_STATE_FORMAT = 1
+# planner of a fold whose input bounds fit ``small_fold_rows`` (see
+# IncrementalClusters.__init__)
+SMALL_FOLD_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "8",
+}
 
 
 def _assign_t(id_col: str) -> StructType:
@@ -109,7 +115,6 @@ class IncrementalClusters:
         driver_threshold: int = 2_000_000,
         max_alias_hops: int = 20,
         small_fold_rows: int = 200_000,
-        small_fold_shuffle_parts: int = 8,
     ):
         self.state_path = state_path
         self.cassign_path = _join_path(state_path, "cassign")
@@ -122,16 +127,15 @@ class IncrementalClusters:
         # batch (``update(..., pairs_rows=, ids_rows=)`` — parquet
         # footers via fold_new_batches) and ids + 4*pairs stays under
         # ``small_fold_rows``, the fold runs with AQE off and
-        # ``small_fold_shuffle_parts`` shuffle partitions: a micro-batch
+        # 8 shuffle partitions (``SMALL_FOLD_CONFS``): a micro-batch
         # fold's shuffles carry KBs, and its wall is serial job barriers
         # (AQE's per-stage jobs) plus per-task overhead on session-sized
         # exchanges — the same planner contract as IncrementalNearDup's
         # small_batch_mode, but derived from measured input size instead
         # of a caller flag, so corpus-sized backfill folds keep the full
         # session planner. Plan-only: outputs are identical either way
-        # (parity-tested). small_fold_shuffle_parts <= 0 disables.
+        # (parity-tested).
         self.small_fold_rows = small_fold_rows
-        self.small_fold_shuffle_parts = small_fold_shuffle_parts
         # alias chains deepen by at most 1 per merge that lands on an
         # already-aliased root BETWEEN compactions; a bound this high is
         # unreachable in practice and turns a resolution cycle (which
@@ -294,17 +298,8 @@ class IncrementalClusters:
             if ids_rows is not None and pairs_rows is not None
             else None
         )
-        if (
-            bound is not None
-            and bound <= self.small_fold_rows
-            and self.small_fold_shuffle_parts > 0
-        ):
-            with _conf_overrides(spark, {
-                "spark.sql.adaptive.enabled": "false",
-                "spark.sql.shuffle.partitions": str(
-                    self.small_fold_shuffle_parts
-                ),
-            }):
+        if bound is not None and bound <= self.small_fold_rows:
+            with _conf_overrides(spark, SMALL_FOLD_CONFS):
                 return self._update(batch_ids, pairs, batch_id,
                                     pairs_rows=pairs_rows)
         return self._update(batch_ids, pairs, batch_id,

@@ -86,10 +86,17 @@ STATE_FORMAT = 2
 # broadcast-hinted (pairs.candidate_pairs / _family_candidates), so AQE's
 # skew-join splitting is a second line of defense that costs more jobs
 # than it buys on micro-batches. Large or untrusted batches should keep
-# the session defaults (AQE on).
+# the session defaults (AQE on). With AQE off, every shuffle in the probe
+# would otherwise run the SESSION's partition count — sized for corpus
+# jobs, not for a micro-batch whose shuffles carry KBs by this mode's own
+# contract. 8 caps useful parallelism per exchange at any cluster size
+# (the serial job barriers, not task slots, bound probe latency; measured
+# alternating same-session A/B at 32 cores: minhash probe 7.7 -> 4.8 s,
+# embedding probe 7.0 -> 4.2 s best-of).
 SMALL_BATCH_CONFS = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "256",
+    "spark.sql.shuffle.partitions": "8",
 }
 
 
@@ -226,7 +233,6 @@ class IncrementalNearDup:
         emb_bands: int = 4,
         emb_seed: int = 7,
         small_batch_mode: bool = False,
-        small_batch_shuffle_parts: int = 8,
         state_filter_keys: int = 512,
     ):
         unknown = set(families) - set(FAMILIES)
@@ -292,16 +298,6 @@ class IncrementalNearDup:
         # is plan-independent (tested); choose it when batches are small
         # relative to state and skew is already bounded by the caps.
         self.small_batch_mode = small_batch_mode
-        # small_batch_shuffle_parts: with AQE off, every shuffle in the
-        # probe would otherwise run the SESSION's partition count —
-        # sized for corpus jobs, not for a micro-batch whose shuffles
-        # carry KBs by this mode's own contract. 8 caps useful
-        # parallelism per exchange at any cluster size (the serial job
-        # barriers, not task slots, bound probe latency; measured
-        # alternating same-session A/B at 32 cores: minhash probe
-        # 7.7 -> 4.8 s, embedding probe 7.0 -> 4.2 s best-of). <= 0
-        # keeps the session value; irrelevant outside small_batch_mode.
-        self.small_batch_shuffle_parts = small_batch_shuffle_parts
         self._meta_checked = False
         # one file-listing/schema-inference per state table per batch;
         # cleared at the top of process_batch so a batch never sees its
@@ -682,12 +678,7 @@ class IncrementalNearDup:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if not self.small_batch_mode:
             return self._process_batch(batch, batch_id)
-        confs = dict(SMALL_BATCH_CONFS)
-        if self.small_batch_shuffle_parts > 0:
-            confs["spark.sql.shuffle.partitions"] = str(
-                self.small_batch_shuffle_parts
-            )
-        with _conf_overrides(batch.sparkSession, confs):
+        with _conf_overrides(batch.sparkSession, SMALL_BATCH_CONFS):
             return self._process_batch(batch, batch_id)
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:

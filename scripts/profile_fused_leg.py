@@ -75,7 +75,7 @@ def main():
     workdir = tempfile.mkdtemp(prefix="profile_fused_")
     t0 = time.time()
     try:
-        bench.cluster_job(spark, clips, True, workdir)
+        bench.cluster_job(spark, clips, workdir)
     finally:
         wall = time.time() - t0
         shutil.rmtree(workdir, ignore_errors=True)

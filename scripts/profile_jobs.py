@@ -45,13 +45,11 @@ def main() -> None:
 
     # get_spark defaults spark.ui.enabled=false; the profiler needs the
     # UI's REST API, so extra_conf re-enables it. Shuffle partitions
-    # follow bench.make_spark (including the SPARK_GRAFT_SHUFFLE_PARTS
-    # A/B knob) so profiled plans match benched plans.
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "0")) or max(8, cores)
+    # follow bench.make_spark so profiled plans match benched plans.
     spark = get_spark(
         app_name="profile_jobs",
         master=f"local[{cores}]",
-        shuffle_partitions=parts,
+        shuffle_partitions=max(8, cores),
         extra_conf={"spark.ui.enabled": "true"},
     )
     sc = spark.sparkContext

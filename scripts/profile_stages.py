@@ -1,10 +1,11 @@
 """Per-stage wall-clock profile of the scaling-leg job.
 
-Runs the SAME job as ``bench.py --leg`` (staged near-dup pipeline,
-fused=False, audio-free synth corpus) at one core count, in this
-process's own JVM, and prints the per-stage ``wall_seconds`` recorded in
-the StageRunner manifests — the feedback loop for attacking the fixed
-(core-count-invariant) stage costs that Amdahl-cap scaling efficiency.
+Runs the scaling leg's pipeline config (``bench.py --leg``, audio-free
+synth corpus) in the STAGED shape, so each pair family is its own stage,
+at one core count in this process's own JVM, and prints the per-stage
+``wall_seconds`` recorded in the StageRunner manifests — the feedback
+loop for attacking the fixed (core-count-invariant) stage costs that
+Amdahl-cap scaling efficiency.
 
 Usage:
     python scripts/profile_stages.py <cores> <clips_parquet> [reps]
@@ -32,9 +33,8 @@ def main() -> None:
         from cc_net_spark.sources import synth
 
         spark = get_spark(app_name="profile_gen", master="local[32]")
-        size_scale = int(os.environ.get("SPARK_GRAFT_SIZE_SCALE", "3"))
         synth.generate_clips(
-            spark, n, seed=42, with_audio=False, size_scale=size_scale,
+            spark, n, seed=42, with_audio=False, size_scale=3,
             partitions=64,
         ).write.mode("overwrite").parquet(path)
         spark.stop()

@@ -60,7 +60,7 @@ def main() -> None:
             path = os.path.join(tmp, f"clips_{n}.parquet")
             synth.generate_clips(
                 spark, n, seed=42, with_audio=False,
-                size_scale=bench.SIZE_SCALE,
+                size_scale=3,
             ).write.mode("overwrite").parquet(path)
             corpora[n] = path
             # incremental state: history = the whole transcript corpus
@@ -89,7 +89,7 @@ def main() -> None:
             for n in sizes:
                 wd = os.path.join(tmp, f"hx_{n}_{rnd}")
                 t0 = time.time()
-                bench.cluster_job(spark, corpora[n], True, wd, int_ids=True)
+                bench.cluster_job(spark, corpora[n], wd, int_ids=True)
                 res[n]["headline_s"].append(round(time.time() - t0, 3))
                 shutil.rmtree(wd, ignore_errors=True)
                 bid = state[n]

@@ -31,7 +31,9 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--generate", type=int, default=0,
                     help="synthesise N clips into --clips first (smoke mode)")
     ap.add_argument("--fused", action="store_true",
-                    help="single-materialization edges stage")
+                    help="fused shape: signatures -> edges -> clusters "
+                         "(default: staged, one resumable stage per pair "
+                         "family)")
     ap.add_argument("--keep-shingles", action="store_true", default=False,
                     help="store shingle arrays and verify exact Jaccard "
                          "(default: extreme-scale estimated-Jaccard mode)")

@@ -43,7 +43,7 @@ if not os.path.exists(os.path.join(CLIPS, "_SUCCESS")):
         from cc_net_spark.sources import synth
 
         synth.generate_clips(
-            s0, N, seed=42, with_audio=False, size_scale=bench.SIZE_SCALE,
+            s0, N, seed=42, with_audio=False, size_scale=3,
             partitions=64,
         ).write.mode("overwrite").parquet(CLIPS)
     finally:
@@ -83,19 +83,15 @@ _want = {
     "aqe": env.get("SPARK_GRAFT_AQE", "true").lower()
     not in ("0", "false", "no"),
 }
-# absence-tolerant shape keys (same defaults-matching discipline as
-# bench.archived_scaling_floor): a leg recorded with a non-default
-# SPARK_GRAFT_SIZE_SCALE (smaller, faster rows) or the staged shape
-# must not seed a default-config session's floors
+# (live value, value assumed when absent), as in
+# bench.archived_scaling_floor: a leg recorded with smaller rows, the
+# staged shape or cached signatures must not seed this session's floors
 _want_shape = {
-    "size_scale": (int(env.get("SPARK_GRAFT_SIZE_SCALE", "3")), 3),
-    "fused": (env.get("SPARK_GRAFT_LEG_FUSED", "1") == "1", True),
+    "size_scale": (3, 3),
+    "fused": (True, True),
     # pre-round-5 legs are all unigram-SimHash workloads (absence = 1)
     "simhash_ngram": (int(env.get("SPARK_GRAFT_SIMHASH_NGRAM", "3")), 1),
-    # one-action cached-signatures shape vs two-stage shape — mirrors
-    # bench.archived_scaling_floor so a CACHE_SIG=1 leg can never seed
-    # a default two-stage session's floors
-    "cache_sig": (env.get("SPARK_GRAFT_CACHE_SIG", "0") == "1", False),
+    "cache_sig": (False, False),
 }
 if os.path.exists(OUT):
     with open(OUT) as f:

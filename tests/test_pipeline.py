@@ -111,48 +111,59 @@ def test_fused_pipeline_matches_staged(spark, clips_path, tmp_path):
     b = {r["clip_id"]: r["cluster_id"] for r in fused.collect()}
     assert a == b
     assert set(m) == {"signatures", "edges", "clusters"}
-    # ONE-ACTION fused shape (cache_signatures): signatures persisted
-    # executor-local inside the edges job instead of a committed parquet
-    # stage — exact same clusters, no signatures stage in the manifests
-    cached_cfg = replace(fused_cfg, cache_signatures=True)
-    cached, mc = run_near_dup_pipeline(
-        spark, clips_path, str(tmp_path / "wc"), cached_cfg
-    )
-    c = {r["clip_id"]: r["cluster_id"] for r in cached.collect()}
-    assert c == a
-    assert set(mc) == {"edges", "clusters"}
 
 
-def test_fold_edges_matches_materialized_edges(spark, clips_path, tmp_path):
-    """fold_edges=True (default) feeds the pair tables straight into CC;
-    it must produce exactly the clusters of the materialized-edges shape,
-    write NO edges table, and still skip CC's sizing count (edge_count
-    from the pair-stage manifests)."""
-    from dataclasses import replace
+def test_staged_pipeline_feeds_pair_tables_into_clusters(spark, clips_path, tmp_path):
+    """The staged shape feeds the pair tables straight into CC: it writes
+    NO edges table or manifest, the clusters stage's lineage is the four
+    pair stages, and their manifests exist before clusters runs, so CC's
+    sizing count is skipped (edge_count from the pair-stage manifests).
+    Cluster parity with the fused shape is test_fused_pipeline_matches_staged."""
     from pathlib import Path
 
-    folded_work = tmp_path / "wfold"
-    folded, mf = run_near_dup_pipeline(spark, clips_path, str(folded_work), CFG)
-    unfolded, mu = run_near_dup_pipeline(
-        spark, clips_path, str(tmp_path / "wunfold"), replace(CFG, fold_edges=False)
-    )
-    a = {r["clip_id"]: r["cluster_id"] for r in folded.collect()}
-    b = {r["clip_id"]: r["cluster_id"] for r in unfolded.collect()}
-    assert a == b
-    assert "edges" not in mf and not (folded_work / "edges").exists()
-    assert "edges" in mu
-    # the folded clusters manifest carries the pair-stage lineage directly
-    assert set(mf["clusters"]["input_fingerprints"]) == {
+    work = tmp_path / "wstaged"
+    _, m = run_near_dup_pipeline(spark, clips_path, str(work), CFG)
+    assert "edges" not in m and not (work / "edges").exists()
+    assert not (work / "_manifest" / "edges.json").exists()
+    # the clusters manifest carries the pair-stage lineage directly
+    assert set(m["clusters"]["input_fingerprints"]) == {
         "exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs",
     }
     # edge_count plumbing: pair manifests exist before clusters runs, and
     # their row sum is below the driver threshold here, so CC must have
     # taken the driver union-find path (which only triggers with a known
-    # count or a sizing job; either way output parity above is the gate)
+    # count or a sizing job; either way output parity is the gate)
     assert all(
-        Path(folded_work, "_manifest", f"{s}.json").exists()
+        Path(work, "_manifest", f"{s}.json").exists()
         for s in ("exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs")
     )
+
+
+_PAIRS = ["exact_pairs", "minhash_pairs", "simhash_pairs", "substring_pairs"]
+
+
+@pytest.mark.parametrize("fused", [False, True])
+@pytest.mark.parametrize("exact_hashes", [False, True])
+@pytest.mark.parametrize("audio", [False, True])
+def test_build_stages_shapes(fused, exact_hashes, audio):
+    """Plan only (no run): the two pipeline shapes' stage lists and the
+    clusters stage's inputs, with the exact-hash artifact and the audio
+    pass each on and off."""
+    from cc_net_spark.plans.pipeline import build_stages
+
+    cfg = NearDupConfig(
+        fused_pairs=fused, include_exact_hashes=exact_hashes,
+        include_audio_pass=audio,
+    )
+    stages = build_stages("clips.parquet", cfg)
+    head = ["exact_hashes"] * exact_hashes + ["signatures"]
+    if fused:
+        expected, cluster_inputs = [*head, "edges", "clusters"], ["edges"]
+    else:
+        cluster_inputs = [*_PAIRS, *["audio_pairs"] * audio]
+        expected = [*head, *cluster_inputs, "clusters"]
+    assert [st.name for st in stages] == expected
+    assert stages[-1].inputs == cluster_inputs
 
 
 def test_external_input_change_invalidates_stage(spark, tmp_path):
