@@ -122,6 +122,17 @@ def shingle_signatures(
     return src.mapInPandas(compute, schema=out_schema)
 
 
+def band_structs(bands: int, rows_per_band: int, offset: int = 0) -> list[str]:
+    """One SQL ``struct(band, key)`` per LSH band: key = xxhash64 over
+    the band's signature slice, band numbered from ``offset`` (families
+    sharing one bucket table keep disjoint band ranges)."""
+    return [
+        f"struct({offset + i} AS band, xxhash64(slice(sig, {i * rows_per_band + 1},"
+        f" {rows_per_band})) AS key)"
+        for i in range(bands)
+    ]
+
+
 def lsh_bands(sig_df: DataFrame, id_col: str, *, bands: int, rows_per_band: int) -> DataFrame:
     """(id, band, key): band key = xxhash64 over a signature slice — JVM-side.
 
@@ -130,11 +141,7 @@ def lsh_bands(sig_df: DataFrame, id_col: str, *, bands: int, rows_per_band: int)
     ~300 ms of py4j round trips per plan construction (measured in the
     fused-leg driver-gap profile), vs one server-side parse here. Same
     analyzed plan either way."""
-    parts = ", ".join(
-        f"struct({i} AS band, xxhash64(slice(sig, {i * rows_per_band + 1},"
-        f" {rows_per_band})) AS key)"
-        for i in range(bands)
-    )
+    parts = ", ".join(band_structs(bands, rows_per_band))
     return sig_df.select(
         id_col, F.explode(F.expr(f"array({parts})")).alias("_b")
     ).select(id_col, F.col("_b.band").alias("band"), F.col("_b.key").alias("key"))

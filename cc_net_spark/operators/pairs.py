@@ -30,26 +30,69 @@ class PairGenMetrics:
     n_rows_dropped: int
 
 
-def _eager_metrics(b: DataFrame, bucket_cols: list[str], cap) -> PairGenMetrics:
+def _cap_sql(cap, groups: dict[str, str] | None) -> str | None:
+    """The bucket cap as a SQL expression over the bucket columns: one
+    integer, or (``cap`` a dict) a CASE over the ``groups`` predicates
+    giving each group its own cap. None means no cap."""
+    if cap is None:
+        return None
+    if not isinstance(cap, dict):
+        return str(int(cap))
+    whens = " ".join(f"WHEN {groups[g]} THEN {int(c)}" for g, c in cap.items())
+    return f"CASE {whens} END"
+
+
+def _kind_sql(groups: dict[str, str]) -> str:
+    """Each bucket's group label: the first group whose predicate holds."""
+    return "CASE " + " ".join(f"WHEN {p} THEN '{g}'" for g, p in groups.items()) + " END"
+
+
+def _metric_aggs(
+    groups: dict[str, str] | None, first: str, over: str, members: str = "1"
+) -> list[str]:
+    """Drop-counter aggregates, three per group (one set when ungrouped):
+    buckets (rows where ``first`` holds, one per bucket), dropped buckets
+    and dropped member rows (``over``: the bucket exceeds its cap;
+    ``members``: the member rows one input row stands for)."""
+    sel = {"": "true"} if not groups else {
+        f"_{g}": f"({_kind_sql(groups)}) = '{g}'" for g in groups
+    }
+    return [
+        f"coalesce(sum(CASE WHEN {s} AND {c} THEN {n} ELSE 0 END), 0) AS {name}{sfx}"
+        for sfx, s in sel.items()
+        for name, c, n in (
+            ("_nb", first, "1"),
+            ("_nbd", f"{first} AND {over}", "1"),
+            ("_nrd", over, members),
+        )
+    ]
+
+
+def _metrics_from_row(row, groups: dict[str, str] | None):
+    """PairGenMetrics from a ``_metric_aggs`` row; {label: PairGenMetrics}
+    when grouped."""
+    def one(sfx: str) -> PairGenMetrics:
+        return PairGenMetrics(
+            n_buckets=int(row[f"_nb{sfx}"]),
+            n_buckets_dropped=int(row[f"_nbd{sfx}"]),
+            n_rows_dropped=int(row[f"_nrd{sfx}"]),
+        )
+
+    if not groups:
+        return one("")
+    return {g: one(f"_{g}") for g in groups}
+
+
+def _eager_metrics(b: DataFrame, bucket_cols: list[str], cap_sql, groups=None):
     """One groupBy scan over the bucket table -> exact drop counters."""
-    eff = cap if cap is not None else float("inf")
     sizes = b.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_bsz"))
-    m = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("_bsz") > eff, 1).otherwise(0)).alias("dropped"),
-        F.sum(F.when(F.col("_bsz") > eff, F.col("_bsz")).otherwise(0)).alias(
-            "rows_dropped"
-        ),
-    ).collect()[0]
-    return PairGenMetrics(
-        n_buckets=m["n_buckets"] or 0,
-        n_buckets_dropped=m["dropped"] or 0,
-        n_rows_dropped=m["rows_dropped"] or 0,
-    )
+    over = f"_bsz > {cap_sql}" if cap_sql is not None else "false"
+    row = sizes.selectExpr(*_metric_aggs(groups, "true", over, "_bsz")).collect()[0]
+    return _metrics_from_row(row, groups)
 
 
 def _observed_metrics(
-    tagged: DataFrame, cap, id_col: str, part: str, fallback
+    tagged: DataFrame, cap_sql, id_col: str, part: str, fallback, groups=None
 ) -> tuple[DataFrame, "object"]:
     """Attach an Observation computing the drop metrics INSIDE the main
     action (zero extra jobs, zero extra scans — the eager path re-scans
@@ -58,7 +101,8 @@ def _observed_metrics(
     on exactly one row via ``id == min(id) over bucket`` — min rides the
     same unordered WindowExec that computes ``_bsz`` (no extra sort, no
     extra exchange), and ids are unique within a bucket by the caller's
-    dedup/assume_unique contract.
+    dedup/assume_unique contract. With ``groups`` the same Observation
+    carries one counter set per group.
 
     Retry semantics: Observation metrics are accumulator-backed; a stage
     re-attempt after shuffle-fetch failure can re-apply updates from
@@ -76,17 +120,11 @@ def _observed_metrics(
     tagged = tagged.selectExpr(
         "*", f"min(`{id_col}`) OVER (PARTITION BY {part}) AS _bmin"
     )
-    first = F.col(id_col) == F.col("_bmin")
-    over = F.col("_bsz") > cap if cap is not None else F.lit(False)
-    one_if = lambda c: F.coalesce(F.sum(F.when(c, 1).otherwise(0)), F.lit(0))  # noqa: E731
-    tagged = tagged.observe(
-        obs,
-        one_if(first).alias("_nb"),
-        one_if(first & over).alias("_nbd"),
-        one_if(over).alias("_nrd"),
-    ).drop("_bmin")
+    over = f"_bsz > {cap_sql}" if cap_sql is not None else "false"
+    aggs = _metric_aggs(groups, f"`{id_col}` = _bmin", over)
+    tagged = tagged.observe(obs, *[F.expr(a) for a in aggs]).drop("_bmin")
 
-    def resolve() -> PairGenMetrics:
+    def resolve():
         try:
             got = obs.get
         except Exception:
@@ -98,11 +136,7 @@ def _observed_metrics(
             # truncation: fall back to the eager one-job scan instead
             # (rare case, exact counters).
             return fallback()
-        return PairGenMetrics(
-            n_buckets=int(got["_nb"]),
-            n_buckets_dropped=int(got["_nbd"]),
-            n_rows_dropped=int(got["_nrd"]),
-        )
+        return _metrics_from_row(got, groups)
 
     return tagged, resolve
 
@@ -111,11 +145,12 @@ def candidate_pairs(
     bucketed: DataFrame,
     bucket_cols: list[str],
     id_col: str,
-    bucket_cap: int = 200,
+    bucket_cap: int | dict[str, int] = 200,
     with_metrics: bool = False,
     carry: list[str] | None = None,
     pair_filter=None,
     assume_unique: bool = False,
+    groups: dict[str, str] | None = None,
 ):
     """All unordered id pairs co-occurring in a bucket, ``id_a < id_b``.
 
@@ -128,13 +163,22 @@ def candidate_pairs(
     ``carry``: extra narrow columns of ``bucketed`` replicated onto both
     pair sides and emitted as ``<col>_a`` / ``<col>_b`` — lets a caller
     verify INLINE instead of joining the pairs back to a values table.
-    ``pair_filter``: a Column over the pair row (may reference carried
-    columns) applied BEFORE the distinct — when most candidates fail
-    verification (the usual LSH regime), filtering pre-distinct shrinks
-    the dedup shuffle from |candidates| to |matches|.
+    ``pair_filter``: a Column or SQL string over the pair row (may
+    reference carried columns and ``kind``) applied BEFORE the distinct —
+    when most candidates fail verification (the usual LSH regime),
+    filtering pre-distinct shrinks the dedup shuffle from |candidates| to
+    |matches|.
     ``assume_unique``: promise that ``bucketed`` already holds one row
     per (bucket, id) — true by construction for LSH band tables — which
     skips the defensive dropDuplicates shuffle.
+
+    ``groups``: several pair families sharing ONE bucket table (one
+    exchange, one self-join), told apart by their bucket columns —
+    label -> SQL predicate over ``bucket_cols``, the first that holds
+    names a bucket's group. The pairs then lead with a ``kind`` column
+    holding the label, the distinct keeps one row per (kind, id_a, id_b),
+    ``bucket_cap`` may be a dict giving each label its own cap, and the
+    drop metrics come back as {label: PairGenMetrics}.
 
     ``with_metrics="observe"``: the drop metrics are computed INSIDE the
     caller's own action via an Observation on the window-tagged rows
@@ -149,6 +193,7 @@ def candidate_pairs(
     b = bucketed.select(*bucket_cols, id_col, *carry)
     if not assume_unique:
         b = b.dropDuplicates([*bucket_cols, id_col])
+    cap = _cap_sql(bucket_cap, groups)
     # bucket sizes via a window count over the SAME shuffle the self-join
     # needs: the bucket table is exchanged ONCE (hash-partitioned + sorted
     # on the bucket cols by WindowExec), the size filter runs in place,
@@ -172,10 +217,10 @@ def candidate_pairs(
     resolve = None
     if with_metrics == "observe":
         tagged, resolve = _observed_metrics(
-            tagged, bucket_cap, id_col, part,
-            lambda: _eager_metrics(b, bucket_cols, bucket_cap),
+            tagged, cap, id_col, part,
+            lambda: _eager_metrics(b, bucket_cols, cap, groups), groups,
         )
-    kept = tagged.filter(f"_bsz >= 2 AND _bsz <= {int(bucket_cap)}").drop("_bsz")
+    kept = tagged.filter(f"_bsz >= 2 AND _bsz <= {cap}").drop("_bsz")
 
     bcols = [f"`{c}`" for c in bucket_cols]
     left = kept.selectExpr(
@@ -186,7 +231,9 @@ def candidate_pairs(
         *bcols, f"`{id_col}` AS id_b",
         *[f"`{c}` AS `{c}_b`" for c in carry],
     )
-    out_cols = ["id_a", "id_b"] + [f"{c}_{s}" for c in carry for s in ("a", "b")]
+    out_cols = ["id_a", "id_b"] + [f"`{c}_{s}`" for c in carry for s in ("a", "b")]
+    if groups:
+        out_cols.insert(0, f"{_kind_sql(groups)} AS kind")
     # MERGE hint: without it the planner broadcasts one side of the
     # self-join whenever the band table estimate fits the threshold —
     # which RECOMPUTES the whole exchange+window subtree for the build
@@ -197,12 +244,14 @@ def candidate_pairs(
     # 0.85 s vs 1.03 s warm, 1.1 vs 3.1 cold on the 20k-clip minhash
     # band join; identical rows), and sort-merge is the graceful-spill
     # choice at corpus scale anyway.
-    pairs = left.join(right.hint("merge"), bucket_cols, "inner").filter(
-        "id_a < id_b"
+    pairs = (
+        left.join(right.hint("merge"), bucket_cols, "inner")
+        .filter("id_a < id_b")
+        .selectExpr(*out_cols)
     )
     if pair_filter is not None:
         pairs = pairs.filter(pair_filter)
-    pairs = pairs.select(*out_cols).distinct()
+    pairs = pairs.distinct()
     if not with_metrics:
         return pairs
     if with_metrics == "observe":
@@ -210,7 +259,7 @@ def candidate_pairs(
     # drop-metrics need the over-cap buckets the window filter discarded:
     # one separate groupBy over b (cheap — b derives from a materialized
     # stage table, so this is a JVM-side re-scan, no UDF recompute)
-    return pairs, _eager_metrics(b, bucket_cols, bucket_cap)
+    return pairs, _eager_metrics(b, bucket_cols, cap, groups)
 
 
 def salted_candidate_pairs(
@@ -262,13 +311,12 @@ def salted_candidate_pairs(
     tagged = b.selectExpr(
         "*", f"count(1) OVER (PARTITION BY {part}) AS _bsz"
     )
-    resolve = None
+    resolve, cap = None, _cap_sql(bucket_cap, None)
     if with_metrics == "observe":
         # observe BEFORE the cap filter so dropped buckets are counted
         # (same zero-extra-pass contract as candidate_pairs)
         tagged, resolve = _observed_metrics(
-            tagged, bucket_cap, id_col, part,
-            lambda: _eager_metrics(b, bucket_cols, bucket_cap),
+            tagged, cap, id_col, part, lambda: _eager_metrics(b, bucket_cols, cap),
         )
     if bucket_cap is not None:
         tagged = tagged.filter(f"_bsz <= {int(bucket_cap)}")
@@ -345,7 +393,7 @@ def salted_candidate_pairs(
         return pairs, resolve
     # metrics need the over-cap buckets the filter discarded (see
     # candidate_pairs): a separate cheap groupBy over b
-    return pairs, _eager_metrics(b, bucket_cols, bucket_cap)
+    return pairs, _eager_metrics(b, bucket_cols, cap)
 
 
 def salted_bucket_sizes(bucketed: DataFrame, bucket_cols: list[str]) -> DataFrame:

@@ -79,25 +79,30 @@ def simhash_from_token_hashes(
     return simhash64(tok_flat, tok_offsets)
 
 
-def _band_exprs(max_hamming: int) -> list:
-    """k+1 contiguous bit bands covering the 64-bit signature. Each band
-    is one server-side-parsed SQL expression (not a py4j Column chain) —
-    same plan, ~1 gateway round trip per band instead of ~6."""
+def band_structs(max_hamming: int, offset: int = 0) -> list[str]:
+    """k+1 contiguous bit bands covering the 64-bit signature, one SQL
+    ``struct(band, key)`` each, band numbered from ``offset`` (families
+    sharing one bucket table keep disjoint band ranges)."""
     n_bands = max_hamming + 1
     widths = [64 // n_bands] * n_bands
     widths[-1] += 64 - sum(widths)
-    exprs = []
+    structs = []
     start = 0
     for i, w in enumerate(widths):
         mask = (1 << w) - 1
-        exprs.append(
-            F.expr(
-                f"struct({i} AS band, shiftrightunsigned(simhash, {start})"
-                f" & {mask}L AS key)"
-            )
+        structs.append(
+            f"struct({offset + i} AS band, shiftrightunsigned(simhash, {start})"
+            f" & {mask}L AS key)"
         )
         start += w
-    return exprs
+    return structs
+
+
+def _band_exprs(max_hamming: int) -> list:
+    """``band_structs`` as Columns. Each band is one server-side-parsed
+    SQL expression (not a py4j Column chain) — same plan, ~1 gateway
+    round trip per band instead of ~6."""
+    return [F.expr(s) for s in band_structs(max_hamming)]
 
 
 def simhash_candidate_pairs(

@@ -10,10 +10,10 @@ Two shapes (both checkpointed Parquet/Iceberg stages, resumable):
          │               operators/signatures.py; round 2 paid ~4 separate
          │               scan+normalize passes here, the measured
          │               memory-bandwidth bottleneck)
-         │      ├─> minhash_pairs   (LSH bands -> capped bucket join -> Jaccard verify)
-         │      ├─> simhash_pairs   (bit bands -> SALTED bucket join -> Hamming verify)
          │      ├─> exact_pairs     (full-transcript tkey buckets)
-         │      └─> substring_pairs (explode grams -> capped bucket join)
+         │      ├─> minhash_pairs   (LSH bands -> Jaccard verify)
+         │      ├─> simhash_pairs   (bit bands -> inline Hamming filter)
+         │      └─> substring_pairs (winnowed gram buckets)
          ├─> audio_pairs   (include_audio_pass only)
          ├─> exact_hashes  (paragraph sha1-u64 groupBy — the cc_net build-side
          │                  artifact; paragraph granularity, so it scans clips)
@@ -21,8 +21,14 @@ Two shapes (both checkpointed Parquet/Iceberg stages, resumable):
 
   fused (fused_pairs=True; fewest materializations):
 
-  clips ──> signatures ──> edges (all pair families, one union) ──> clusters
+  clips ──> signatures ──> edges (all four text families in ONE bucket
+         │                        join, + audio_pairs when on) ──> clusters
          └─> exact_hashes  (include_exact_hashes, as above)
+
+Both shapes build their text pairs from the same family definitions
+(``operators/families.py``): each staged pair stage is the one bucket
+join over its own family, the fused edges stage the same join over all
+four — one exchange of bucket rows, one self-join, one pair distinct.
 
 The staged shape writes no edges table: CC's round-0 checkpoint already
 materializes the canonical edge set, and the pair tables stay the resume
@@ -30,11 +36,13 @@ points. The fused shape keeps its edges stage — the single
 materialization that protects CC's sizing count from recomputing all
 four pair families.
 
-Skew handling: every pair generator runs through the capped bucket join
-(``operators/pairs.py``) with drop metrics recorded in the stage manifest;
-SimHash — whose pigeonhole bands are narrow by construction, so big
-buckets are load imbalance rather than boilerplate — uses the salted
-full-recall join. AQE skew-join splitting covers the verification joins.
+Skew handling: every text family runs through the capped bucket join
+(``operators/pairs.py``), and its drop counters land in the stage
+manifest (``pairgen``; ``<family>_pairgen`` in the fused edges stage).
+SimHash is not salted: salting only ever touched buckets between
+bucket_cap/4 and the bucket_cap ceiling, whose at most cap*(cap-1)/2
+pairs (19 900 at 200) are never a straggler, and it cost two extra
+exchanges. AQE skew-join splitting covers the verification joins.
 
 Column pruning: the audio ``bytes`` column is touched by NO text stage —
 all stages select explicit text/metadata columns, so Parquet never reads
@@ -44,16 +52,14 @@ the payload (verify via ``.explain``: ReadSchema excludes ``bytes``).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cc_net_spark.operators import exact_dedup as ed
-from cc_net_spark.operators import minhash as mh
-from cc_net_spark.operators import simhash as sh
 from cc_net_spark.operators.connected_components import assign_clusters, connected_components
-from cc_net_spark.operators.pairs import candidate_pairs
+from cc_net_spark.operators.families import TextFamily, family_pairs, text_families
 from cc_net_spark.operators.signatures import fused_signatures
 from cc_net_spark.plans.dag import Stage, StageRunner
 
@@ -248,75 +254,17 @@ def build_stages(
 
         return sig, {"id_validation": _check}
 
-    def pair_view(signatures: DataFrame) -> DataFrame:
-        """The signatures table as the pair families consume it: with
-        int_ids, the string id column is swapped for the sid surrogate
-        under the SAME column name, so every downstream stage is
-        id-type-agnostic."""
-        if cfg.int_ids:
-            return signatures.drop(idc).withColumnRenamed("sid", idc)
-        return signatures
+    families = text_families(cfg)
+    # with int_ids the pair families run on the sid surrogate, so every
+    # pair table and the CC graph are in sid space
+    pair_id = "sid" if cfg.int_ids else idc
 
-    def stage_exact_pairs(spark: SparkSession, signatures: DataFrame) -> DataFrame:
-        # full-transcript exact duplicates under normalize_for_dedup:
-        # bucket = tkey (sha1-u64 of the whole normalized transcript),
-        # already computed by the fused signature scan
-        # signatures is one row per id -> (tkey, id) unique by construction
-        signatures = pair_view(signatures)
-        return candidate_pairs(
-            signatures.select(idc, "tkey"), ["tkey"], idc,
-            bucket_cap=cfg.bucket_cap, assume_unique=True,
-        )
+    def stage_family_pairs(family: TextFamily):
+        def build(spark: SparkSession, signatures: DataFrame):
+            pairs, resolve = family_pairs(signatures, [family], pair_id)
+            return pairs, {"pairgen": lambda: resolve()[family.kind]}
 
-    def stage_minhash_pairs(spark: SparkSession, signatures: DataFrame) -> DataFrame:
-        signatures = pair_view(signatures)
-        cand = mh.minhash_candidate_pairs(
-            signatures, idc,
-            bands=cfg.bands, rows_per_band=cfg.rows_per_band, bucket_cap=cfg.bucket_cap,
-        )
-        if cfg.keep_shingles:
-            return mh.verify_jaccard(
-                cand, signatures, idc, threshold=cfg.jaccard_threshold
-            )
-        return mh.estimated_jaccard(
-            cand, signatures, idc, threshold=cfg.jaccard_threshold
-        ).withColumnRenamed("jaccard_est", "jaccard")
-
-    def stage_simhash_pairs(spark: SparkSession, signatures: DataFrame):
-        # salt buckets above bucket_cap/4 (load spreading, full recall up
-        # to the ceiling), DROP above bucket_cap: SimHash values
-        # concentrate on templated/boilerplate corpora, where a band
-        # bucket can hold a constant fraction of the corpus — salting
-        # spreads quadratic work but cannot shrink it, so the
-        # pathological ceiling stays (same output as a plain cap, minus
-        # the straggler task). Because the ceiling DROPS pairs, the drop
-        # counters are always recorded into the stage manifest (the band
-        # table derives from the materialized signatures parquet, so the
-        # metrics pass is one cheap JVM-side re-scan, no UDF recompute).
-        # inline_verify: the 8-byte signature rides the pair join and the
-        # Hamming filter runs BEFORE the pair distinct — the dedup shuffle
-        # holds |matches| rows instead of |candidates| (measured 3.4M
-        # candidates -> ~2% matches on the bench corpus) and the two
-        # verify join-backs disappear
-        # with_metrics="observe": drop counters computed inside the stage
-        # write itself (no second scan of the band table, no extra job)
-        pairs, resolve = sh.simhash_candidate_pairs(
-            pair_view(signatures).select(idc, "simhash"), idc,
-            max_hamming=cfg.max_hamming,
-            bucket_cap=max(2, cfg.bucket_cap // 4),
-            drop_above=cfg.bucket_cap,
-            with_metrics="observe",
-            inline_verify=True,
-        )
-        return pairs, {"pairgen": lambda: resolve().__dict__}
-
-    def stage_substring_pairs(spark: SparkSession, signatures: DataFrame) -> DataFrame:
-        # grams are np.unique/winnowed per doc and signatures is one row
-        # per id -> (gram, id) unique by construction
-        grams = pair_view(signatures).select(idc, F.explode("grams").alias("gram"))
-        return candidate_pairs(
-            grams, ["gram"], idc, bucket_cap=cfg.gram_cap, assume_unique=True
-        )
+        return build
 
     def stage_audio_pairs(spark: SparkSession):
         # the ONLY stage that reads the audio payload; returns
@@ -324,7 +272,10 @@ def build_stages(
         # fingerprint buckets (no silent truncation)
         from cc_net_spark.multimodal.audio import audio_near_dup_pairs
 
-        clips = load_clips(spark, idc, "codec", "bytes", kernel=True)
+        # the scan keeps its kernel splits but joins the caller's session:
+        # an Observation resolves only in the session that runs the query,
+        # and the fused edges write (runner's session) carries these pairs
+        clips = in_session(load_clips(spark, idc, "codec", "bytes", kernel=True), spark)
         pairs, resolve = audio_near_dup_pairs(
             clips, idc, bucket_cap=cfg.bucket_cap, min_snr_db=cfg.audio_min_snr_db,
             with_metrics="observe",
@@ -412,18 +363,16 @@ def build_stages(
         return {"n_rows": agg["n"], "n_clusters": n_clusters}
 
     def stage_edges_fused(spark: SparkSession, signatures: DataFrame):
-        simhash_pairs, sim_metrics = stage_simhash_pairs(spark, signatures)
-        pairs = {
-            "minhash": stage_minhash_pairs(spark, signatures),
-            "simhash": simhash_pairs,
-            "exact": stage_exact_pairs(spark, signatures),
-            "substring": stage_substring_pairs(spark, signatures),
+        edges, resolve = family_pairs(signatures, families, pair_id)
+        metrics = {
+            f"{f.kind}_pairgen": partial(lambda k: resolve()[k], f.kind)
+            for f in families
         }
-        metrics = {"simhash_pairgen": sim_metrics["pairgen"]}
         if cfg.include_audio_pass:
-            pairs["audio"], audio_metrics = stage_audio_pairs(spark)
+            audio, audio_metrics = stage_audio_pairs(spark)
+            edges = edges.unionByName(audio.selectExpr("id_a", "id_b", "'audio' AS kind"))
             metrics["audio_pairgen"] = audio_metrics["pairgen"]
-        return stage_edges(pairs), metrics
+        return edges, metrics
 
     metrics_fn = dup_ratio if cfg.collect_metrics else None
     ext = [clips_path]
@@ -451,10 +400,10 @@ def build_stages(
             ),
         ]
     pair_stages = [
-        Stage("exact_pairs", stage_exact_pairs, inputs=["signatures"]),
-        Stage("minhash_pairs", stage_minhash_pairs, inputs=["signatures"]),
-        Stage("simhash_pairs", stage_simhash_pairs, inputs=["signatures"]),
-        Stage("substring_pairs", stage_substring_pairs, inputs=["signatures"]),
+        *(
+            Stage(f"{f.kind}_pairs", stage_family_pairs(f), inputs=["signatures"])
+            for f in families
+        ),
         *(
             [Stage("audio_pairs", stage_audio_pairs, external_inputs=ext)]
             if cfg.include_audio_pass
@@ -533,6 +482,17 @@ def kernel_scan_session(spark: SparkSession, path: str) -> SparkSession:
     cannot scope."""
     conf = tuned_scan_conf(spark, _input_bytes(spark, path))
     return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession(), conf)
+
+
+def in_session(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``spark``. A file scan keeps the
+    split sizes of the session that read it (the relation carries that
+    session), while Observations built on the result register with
+    ``spark``."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, spark)
 
 
 def run_near_dup_pipeline(

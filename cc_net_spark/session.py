@@ -84,6 +84,12 @@ def get_spark(
         # wall in compressor CPU. Text-bearing tables compress the same
         # few percent either way.
         .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
+        # DataFrame call-site capture, pinned off: PySpark caches this flag
+        # process-wide from whichever thread wraps a Column first, and a
+        # thread with no active session caches False, so only False gives
+        # every thread the same value. On, each Column call walks the
+        # stack and the first one imports IPython into the driver.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
