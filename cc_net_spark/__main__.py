@@ -100,21 +100,17 @@ def _neardup(argv: list[str]) -> None:
                    help="corpus table holding history clip bytes for "
                         "--audio-exact-verify")
     p.add_argument("--compact-upto", type=int, default=None, metavar="N",
-                   help="compact state batches < N into one partition "
-                        "(writes <state>_compacted)")
+                   help="compact state batches < N into one partition, in "
+                        "place (next version + CURRENT flip)")
     p.add_argument("--compact-clusters-upto", type=int, default=None,
                    metavar="N",
-                   help="compact CLUSTER state batches < N (collapses "
-                        "alias chains; writes <clusters-state>_compacted; "
-                        "requires --clusters-state)")
-    p.add_argument("--pointer-state", action="store_true",
-                   help="manage --state as a pointer root (versioned "
-                        "trees + atomic CURRENT flip — the object-store-"
-                        "safe compaction layout)")
+                   help="compact CLUSTER state batches < N in place "
+                        "(collapses alias chains; requires "
+                        "--clusters-state)")
     p.add_argument("--compact-min-batches", type=int, default=None,
                    metavar="K",
-                   help="after the trigger drains, auto-compact + swap "
-                        "the state once it holds >= K batch partitions")
+                   help="after the trigger drains, auto-compact the state "
+                        "once it holds >= K batch partitions")
     p.add_argument("--clusters-state", default=None, metavar="DIR",
                    help="maintain incremental duplicate-CLUSTER state "
                         "(log-structured union-find) here: after the "
@@ -150,49 +146,37 @@ def _neardup(argv: list[str]) -> None:
     spark = get_spark(app_name="cc_net_spark_neardup")
     if a.compact_upto is not None or a.compact_clusters_upto is not None:
         if a.compact_upto is not None:
-            if a.pointer_state:
-                from cc_net_spark.streaming.incremental_neardup import (
-                    compact_state_pointer,
-                )
+            from cc_net_spark.streaming.incremental_neardup import (
+                maybe_compact_state,
+            )
 
-                did = compact_state_pointer(
-                    spark, a.state, upto_batch=a.compact_upto,
-                    min_batches=1, id_col=a.id_col,
-                )
-                print(f"neardup: pointer compaction "
-                      f"{'flipped CURRENT' if did else 'found nothing to do'} "
-                      f"under {a.state}")
-            else:
-                from cc_net_spark.streaming.incremental_neardup import (
-                    compact_state,
-                )
-
-                out = a.state.rstrip("/") + "_compacted"
-                compact_state(spark, a.state, out, upto_batch=a.compact_upto,
-                              id_col=a.id_col)
-                print(f"neardup: compacted state batches < {a.compact_upto} "
-                      f"-> {out}")
+            did = maybe_compact_state(
+                spark, a.state, upto_batch=a.compact_upto,
+                min_batches=1, id_col=a.id_col,
+            )
+            print(f"neardup: state batches < {a.compact_upto} "
+                  f"{'compacted' if did else 'had nothing to compact'} "
+                  f"in place under {a.state}")
         if a.compact_clusters_upto is not None:
             from cc_net_spark.streaming.incremental_clusters import (
                 compact_clusters_state,
             )
 
-            cout = a.clusters_state.rstrip("/") + "_compacted"
-            compact_clusters_state(
-                spark, a.clusters_state, cout,
+            did = compact_clusters_state(
+                spark, a.clusters_state,
                 upto_batch=a.compact_clusters_upto,
                 id_col=a.id_col, n_state_buckets=a.state_buckets,
             )
-            print(f"neardup: compacted cluster-state batches < "
-                  f"{a.compact_clusters_upto} -> {cout} (out-of-place; "
-                  f"swap or repoint like the LSH state)")
+            print(f"neardup: cluster-state batches < "
+                  f"{a.compact_clusters_upto} "
+                  f"{'compacted' if did else 'had nothing to compact'} "
+                  f"in place under {a.clusters_state}")
         return
     from cc_net_spark.streaming.incremental_neardup import run_incremental_near_dup
 
     run_incremental_near_dup(
         spark, a.input, a.schema, a.state, a.output, a.checkpoint,
         compact_min_batches=a.compact_min_batches,
-        pointer_state=a.pointer_state,
         text_col=a.text_col, id_col=a.id_col,
         threshold=a.threshold, bucket_cap=a.bucket_cap,
         families=tuple(a.families.split(",")),

@@ -4,11 +4,11 @@ Spark-native replacement for the reference's file-level idempotence
 (skip-if-output-exists at ``cc_net/mine.py:254-257,312-321`` and atomic
 tmp->rename at ``cc_net/mine.py:221-234``):
 
-* each stage materializes ONE Parquet table under ``workdir/<stage>``
-  (written to a tmp dir then atomically renamed — a crash mid-write can
-  never be mistaken for a completed stage),
+* each stage materializes ONE Parquet table under ``workdir/<stage>``,
 * a manifest JSON under ``workdir/_manifest/<stage>.json`` commits the
-  stage: per-partition (per output file) row counts read from the
+  stage — published with ``sources/hadoop_fs.commit_small_text``, the
+  engine's one commit protocol (see ``StageRunner._run_one`` for the
+  crash order): per-partition (per output file) row counts read from the
   Parquet FOOTERS (no Spark job — round 1 paid a full count() job per
   stage, which dominated the fixed cost that capped scaling efficiency),
 * the stage fingerprint is CONTENT-BASED (hash of the output file
@@ -24,18 +24,13 @@ tmp->rename at ``cc_net/mine.py:221-234``):
   whose recorded input + external fingerprints still match,
 * ``lineage()``/``metrics()``/``partition_metrics()`` expose the records
   as DataFrames (north rule: per-partition lineage + metrics).
-
-With an Iceberg catalog configured the same layer maps onto table
-snapshots + commit metadata; Parquet-directory mode is the dependency-free
-default used in this environment (no Iceberg runtime jar available).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
-import shutil
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -43,6 +38,8 @@ from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+import cc_net_spark.sources.hadoop_fs as hfs
 
 
 def _footer_stats_digest(md) -> str:
@@ -64,18 +61,25 @@ def _footer_stats_digest(md) -> str:
     return h.hexdigest()[:16]
 
 
-def _scan_files(files: list[Path], rel_to: Path) -> tuple[int, list[dict]]:
+def _scan_parquet_dir(path: Path) -> tuple[int, list[dict]]:
     """(total_rows, per-file partition records) from Parquet footers only —
-    metadata reads, no Spark job, no data IO."""
+    metadata reads, no Spark job, no data IO.
+
+    rglob: a stage written with partitionBy() nests its files under
+    key=value directories — a top-level-only glob would commit rows=0 and
+    an empty fingerprint, silently corrupting downstream skips. File
+    records carry the path RELATIVE to the stage dir so identically-named
+    part files in different partition dirs stay distinguishable in
+    partition_metrics()."""
     import pyarrow.parquet as pq
 
     parts: list[dict] = []
     total = 0
-    for f in files:
+    for f in sorted(path.rglob("*.parquet")):
         md = pq.ParquetFile(f).metadata
         parts.append(
             {
-                "file": str(f.relative_to(rel_to)),
+                "file": str(f.relative_to(path)),
                 "rows": md.num_rows,
                 "bytes": f.stat().st_size,
                 "stats": _footer_stats_digest(md),
@@ -84,22 +88,10 @@ def _scan_files(files: list[Path], rel_to: Path) -> tuple[int, list[dict]]:
         total += md.num_rows
     if not parts:
         raise RuntimeError(
-            f"stage output under {rel_to} lists no parquet files — refusing "
+            f"stage output under {path} lists no parquet files — refusing "
             "to commit an empty-listing manifest"
         )
     return total, parts
-
-
-def _scan_parquet_dir(path: Path) -> tuple[int, list[dict]]:
-    """(total_rows, per-file partition records) from Parquet footers only.
-
-    rglob: a stage written with partitionBy() nests its files under
-    key=value directories — a top-level-only glob would commit rows=0 and
-    an empty fingerprint, silently corrupting downstream skips. File
-    records carry the path RELATIVE to the stage dir so identically-named
-    part files in different partition dirs stay distinguishable in
-    partition_metrics()."""
-    return _scan_files(sorted(path.rglob("*.parquet")), path)
 
 
 def readback_schema_json(df: DataFrame) -> str:
@@ -163,17 +155,13 @@ def fingerprint_external(path: str | Path, spark: SparkSession | None = None) ->
     ``getActiveSession()`` is thread-local and returns None in worker
     threads (StageRunner's parallel mode always passes its own)."""
     if "://" in str(path):
-        from pyspark.sql import SparkSession
-
-        from cc_net_spark.sources.hadoop_fs import hadoop_fs
-
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError(
                 f"fingerprint_external({path}): scheme-URI inputs need an "
                 "active SparkSession for Hadoop FS listing"
             )
-        fs, jpath = hadoop_fs(spark, str(path))
+        fs, jpath = hfs.hadoop_fs(spark, str(path))
         if not fs.exists(jpath):
             return "missing"
         parts = []
@@ -224,22 +212,25 @@ class Stage:
     params: str | None = None
 
 
-class StageRunner:
-    """``use_snapshots=True`` materializes every stage through the
-    snapshot table layer (``sources/snapshots.SnapshotTable``): each run
-    commits an atomic snapshot per stage, so past stage outputs remain
-    readable (time travel) and a force re-run is a new snapshot rather
-    than an rm+rewrite — the Iceberg-backed deployment shape. The default
-    plain-Parquet mode keeps one directory per stage (smallest
-    footprint). Resume/skip semantics are identical in both modes (the
-    manifest fingerprints govern)."""
+def manifest_path(workdir: str | Path, stage: str) -> Path:
+    return Path(workdir) / "_manifest" / f"{stage}.json"
 
-    def __init__(
-        self, spark: SparkSession, workdir: str | Path, use_snapshots: bool = False
-    ):
+
+def read_manifest(
+    spark: SparkSession, workdir: str | Path, stage: str
+) -> dict | None:
+    """The committed manifest of ``stage`` under ``workdir``, or None —
+    the one manifest reader (StageRunner and the pipeline's row hints)."""
+    return hfs.read_committed(spark, str(manifest_path(workdir, stage)), json.loads)
+
+
+class StageRunner:
+    """Runs and resumes a list of ``Stage``s under ``workdir``; every
+    stage output is committed by its manifest (see ``_run_one``)."""
+
+    def __init__(self, spark: SparkSession, workdir: str | Path):
         self.spark = spark
         self.workdir = Path(workdir)
-        self.use_snapshots = use_snapshots
         # external-input fingerprints memoized per run() invocation: the
         # same source table is fingerprinted by every stage that reads it
         # (skip check + manifest write — up to 2x per stage, 6 stat
@@ -248,29 +239,23 @@ class StageRunner:
         # was never detectable anyway — the walk happens once per stage,
         # not per read), so one walk per path is equivalent.
         self._ext_cache: dict[str, str] = {}
-        (self.workdir / "_manifest").mkdir(parents=True, exist_ok=True)
-
-    def _table(self, stage: str):
-        from cc_net_spark.sources.snapshots import SnapshotTable
-
-        return SnapshotTable(self.spark, self.data_path(stage))
+        # manifests this runner committed or read since run() started: a
+        # manifest read is several py4j round trips (and a reply past
+        # ~8 KB stalls ~40 ms), so a run reads each prior manifest once
+        self._manifests: dict[str, dict | None] = {}
 
     # -- paths -------------------------------------------------------------
     def data_path(self, stage: str) -> Path:
         return self.workdir / stage
 
-    def manifest_path(self, stage: str) -> Path:
-        return self.workdir / "_manifest" / f"{stage}.json"
-
     # -- manifest ----------------------------------------------------------
-    def read_manifest(self, stage: str) -> dict | None:
-        p = self.manifest_path(stage)
-        if not p.exists():
-            return None
-        return json.loads(p.read_text())
+    def _manifest(self, stage: str) -> dict | None:
+        if stage not in self._manifests:
+            self._manifests[stage] = read_manifest(self.spark, self.workdir, stage)
+        return self._manifests[stage]
 
     def _fingerprint(self, stage: str) -> str:
-        m = self.read_manifest(stage)
+        m = self._manifest(stage)
         return m["fingerprint"] if m else ""
 
     def _ext_fp(self, path: str) -> str:
@@ -279,18 +264,8 @@ class StageRunner:
         return self._ext_cache[path]
 
     def is_complete(self, stage: Stage) -> bool:
-        m = self.read_manifest(stage.name)
-        if m is None:
-            return False
-        if self.use_snapshots:
-            # the manifest must describe the table's CURRENT snapshot: a
-            # table advanced out-of-band (sanctioned append/merge through
-            # SnapshotTable, or a crash between the snapshot commit and
-            # the manifest write) would otherwise be skipped while
-            # load() serves data the recorded lineage never saw
-            if m.get("snapshot_id") != self._table(stage.name).current_snapshot_id():
-                return False
-        elif not (self.data_path(stage.name) / "_SUCCESS").exists():
+        m = self._manifest(stage.name)
+        if m is None or not (self.data_path(stage.name) / "_SUCCESS").exists():
             return False
         if m.get("params") != stage.params:
             return False
@@ -302,14 +277,12 @@ class StageRunner:
 
     # -- execution ---------------------------------------------------------
     def load(self, stage_name: str) -> DataFrame:
-        if self.use_snapshots:
-            return self._table(stage_name).read()
         # manifests committed since round 4 record the stage's read-back
         # schema: passing it to the reader skips the footer-inference job
         # (1 Spark job per stage read — fixed serial latency locally, and
         # a real distributed footer scan on a 10^6-file table at cluster
         # scale). Older manifests fall back to inference.
-        m = self.read_manifest(stage_name)
+        m = self._manifest(stage_name)
         reader = self.spark.read
         if m and m.get("schema"):
             from pyspark.sql.types import StructType
@@ -319,7 +292,7 @@ class StageRunner:
 
     def rows(self, stage_name: str) -> int | None:
         """Committed row count of a completed stage (manifest lookup)."""
-        m = self.read_manifest(stage_name)
+        m = self._manifest(stage_name)
         return m["rows"] if m else None
 
     def run(
@@ -343,9 +316,11 @@ class StageRunner:
         barrier)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        # fresh external fingerprints per run(): resume across separate
-        # run() calls must still observe source-table changes
+        # fresh external fingerprints and manifests per run(): resume
+        # across separate run() calls must still observe source-table
+        # changes and commits made by another runner
         self._ext_cache.clear()
+        self._manifests.clear()
         results: dict[str, dict] = {}
         remaining = list(stages)
         in_list = {s.name for s in stages}
@@ -364,10 +339,7 @@ class StageRunner:
             todo: list[Stage] = []
             for st in level:
                 if not force and self.is_complete(st):
-                    results[st.name] = {
-                        **self.read_manifest(st.name),
-                        "skipped": True,
-                    }
+                    results[st.name] = {**self._manifest(st.name), "skipped": True}
                 else:
                     todo.append(st)
             if len(todo) > 1 and max_parallel > 1:
@@ -382,21 +354,26 @@ class StageRunner:
         return results
 
     def _run_one(self, st: Stage) -> dict:
-        # SPARK_GRAFT_STAGE_DEBUG=1: phase timing to stderr — the
-        # driver-side (core-count-invariant) cost decomposition per stage
-        dbg = os.environ.get("SPARK_GRAFT_STAGE_DEBUG") == "1"
-        marks: list[tuple[str, float]] = []
+        """Build, write and commit one stage, in this order:
 
-        def mark(label: str) -> None:
-            if dbg:
-                marks.append((label, time.time()))
+        1. Spark writes ``_tmp-<stage>-<uuid>`` (a failing build or write
+           leaves the previous commit untouched),
+        2. the stage's manifest is withdrawn (uncommit),
+        3. ``workdir/<stage>`` is replaced by the tmp dir,
+        4. the footer scan sizes the new output,
+        5. the manifest is committed (``commit_small_text``).
 
+        A crash anywhere before step 5 leaves the stage uncommitted, so
+        the next run re-runs it; the restart first deletes the stage's
+        ``_tmp-*`` leftovers."""
+        spark = self.spark
         t0 = time.time()
-        mark("start")
+        leftover = re.compile(rf"_tmp-{re.escape(st.name)}-[0-9a-f]{{8}}")
+        for p in self.workdir.glob("_tmp-*"):
+            if leftover.fullmatch(p.name):
+                hfs.fs_delete(spark, str(p))
         inputs = {name: self.load(name) for name in st.inputs}
-        mark("load_inputs")
-        built = st.build(self.spark, **inputs)
-        mark("build")
+        built = st.build(spark, **inputs)
         build_metrics: dict = {}
         if isinstance(built, tuple):
             df, build_metrics = built
@@ -405,25 +382,15 @@ class StageRunner:
 
         final = self.data_path(st.name)
         schema_json = readback_schema_json(df)
-        mark("schema_json")
-        snapshot_id = None
-        if self.use_snapshots:
-            table = self._table(st.name)
-            snapshot_id = table.overwrite(df)
-            files = [
-                final / f["path"] for f in table.manifest(snapshot_id)["files"]
-            ]
-            n_rows, partitions = _scan_files(files, final)
-        else:
-            tmp = self.workdir / f"_tmp-{st.name}-{uuid.uuid4().hex[:8]}"
-            df.write.mode("overwrite").parquet(str(tmp))
-            mark("write_action")
-            if final.exists():
-                shutil.rmtree(final)
-            os.rename(tmp, final)
-            # rows + per-partition records from footers: zero Spark jobs
-            n_rows, partitions = _scan_parquet_dir(final)
-            mark("footer_scan")
+        tmp = self.workdir / f"_tmp-{st.name}-{uuid.uuid4().hex[:8]}"
+        df.write.mode("overwrite").parquet(str(tmp))
+        mpath = str(manifest_path(self.workdir, st.name))
+        hfs.uncommit_small_text(spark, mpath)
+        self._manifests.pop(st.name, None)
+        hfs.fs_delete(spark, str(final))
+        hfs.fs_rename(spark, str(tmp), str(final))
+        # rows + per-partition records from footers: zero Spark jobs
+        n_rows, partitions = _scan_parquet_dir(final)
         # observe-mode metrics (operators/pairs._observed_metrics) are
         # callables resolvable only after the write action above ran
         build_metrics = {
@@ -435,23 +402,9 @@ class StageRunner:
             from pyspark.sql.types import StructType
 
             schema = StructType.fromJson(json.loads(schema_json))
-            reader = self.spark.read.schema(schema)
-            if self.use_snapshots:
-                # data lives under <root>/data/batch-*/ — reading the
-                # table ROOT yields zero rows; read the snapshot's own
-                # file list (already resolved above)
-                metrics_df = (
-                    reader.parquet(*[str(f) for f in files])
-                    if files
-                    else self.spark.createDataFrame([], schema)
-                )
-            else:
-                metrics_df = reader.parquet(str(final))
-            extra = st.metrics_fn(metrics_df)
+            extra = st.metrics_fn(spark.read.schema(schema).parquet(str(final)))
         else:
             extra = {}
-        extra = {**build_metrics, **extra}
-        mark("metrics")
         manifest = {
             "stage": st.name,
             "rows": n_rows,
@@ -464,31 +417,27 @@ class StageRunner:
             },
             "fingerprint": fingerprint_listing(partitions),
             "schema": schema_json,
-            "metrics": extra,
+            "metrics": {**build_metrics, **extra},
             **({"params": st.params} if st.params is not None else {}),
-            **({"snapshot_id": snapshot_id} if snapshot_id is not None else {}),
         }
-        self.manifest_path(st.name).write_text(json.dumps(manifest, indent=2))
-        if dbg:
-            import sys as _sys
-
-            prev = marks[0][1]
-            parts = []
-            for label, ts in marks[1:]:
-                parts.append(f"{label}={ts - prev:.3f}")
-                prev = ts
-            parts.append(f"manifest={time.time() - prev:.3f}")
-            print(
-                f"[stage-debug] {st.name}: " + " ".join(parts),
-                file=_sys.stderr, flush=True,
-            )
+        hfs.commit_small_text(spark, mpath, json.dumps(manifest, indent=2))
+        self._manifests[st.name] = manifest
         return manifest
 
     # -- lineage / metrics tables -------------------------------------------
+    def _committed(self) -> list[dict]:
+        """Every committed manifest under the workdir, by stage name."""
+        names = {
+            p.name.removesuffix(".tmp").removesuffix(".json")
+            for p in (self.workdir / "_manifest").glob("*.json*")
+            if p.name.endswith((".json", ".json.tmp")) and not p.name.startswith(".")
+        }
+        found = (read_manifest(self.spark, self.workdir, n) for n in sorted(names))
+        return [m for m in found if m is not None]
+
     def lineage(self) -> DataFrame:
         rows = []
-        for p in sorted((self.workdir / "_manifest").glob("*.json")):
-            m = json.loads(p.read_text())
+        for m in self._committed():
             deps = [
                 *m.get("input_fingerprints", {}).items(),
                 *m.get("external_fingerprints", {}).items(),
@@ -502,23 +451,21 @@ class StageRunner:
         )
 
     def metrics(self) -> DataFrame:
-        rows = []
-        for p in sorted((self.workdir / "_manifest").glob("*.json")):
-            m = json.loads(p.read_text())
-            rows.append(
-                (m["stage"], m["rows"], m["files"], m["wall_seconds"], json.dumps(m["metrics"]))
-            )
+        rows = [
+            (m["stage"], m["rows"], m["files"], m["wall_seconds"], json.dumps(m["metrics"]))
+            for m in self._committed()
+        ]
         return self.spark.createDataFrame(
             rows, "stage string, rows long, files long, wall_seconds double, metrics_json string"
         )
 
     def partition_metrics(self) -> DataFrame:
         """One row per (stage, output file): the per-partition metrics table."""
-        rows = []
-        for p in sorted((self.workdir / "_manifest").glob("*.json")):
-            m = json.loads(p.read_text())
-            for part in m.get("partitions", []):
-                rows.append((m["stage"], part["file"], part["rows"], part["bytes"]))
+        rows = [
+            (m["stage"], part["file"], part["rows"], part["bytes"])
+            for m in self._committed()
+            for part in m.get("partitions", [])
+        ]
         return self.spark.createDataFrame(
             rows, "stage string, file string, rows long, bytes long"
         )

@@ -61,7 +61,7 @@ from cc_net_spark.operators import exact_dedup as ed
 from cc_net_spark.operators.connected_components import assign_clusters, connected_components
 from cc_net_spark.operators.families import TextFamily, family_pairs, text_families
 from cc_net_spark.operators.signatures import fused_signatures
-from cc_net_spark.plans.dag import Stage, StageRunner
+from cc_net_spark.plans.dag import Stage, StageRunner, read_manifest
 
 
 @dataclass
@@ -299,16 +299,9 @@ def build_stages(
             ),
         )
 
-    def _manifest_rows(stage_name: str) -> int | None:
-        if workdir is None:
-            return None
-        import json as _json
-        from pathlib import Path as _Path
-
-        mpath = _Path(workdir) / "_manifest" / f"{stage_name}.json"
-        if mpath.exists():
-            return _json.loads(mpath.read_text())["rows"]
-        return None
+    def _manifest_rows(spark: SparkSession, stage_name: str) -> int | None:
+        m = read_manifest(spark, workdir, stage_name) if workdir else None
+        return m["rows"] if m else None
 
     def _cluster_edges(spark: SparkSession, edges: DataFrame, edge_count: int | None) -> DataFrame:
         # no pre-distinct: connected_components canonicalizes + dedups
@@ -341,7 +334,7 @@ def build_stages(
         # the edges stage manifest already knows its row count (an upper
         # bound on distinct canonical edges) — pass it down so the CC
         # operator can skip its sizing count() job
-        return _cluster_edges(spark, edges, _manifest_rows("edges"))
+        return _cluster_edges(spark, edges, _manifest_rows(spark, "edges"))
 
     def stage_clusters_from_pairs(
         spark: SparkSession, **pair_tables: DataFrame
@@ -353,7 +346,7 @@ def build_stages(
         edges = stage_edges(
             {name.removesuffix("_pairs"): df for name, df in pair_tables.items()}
         )
-        rows = [_manifest_rows(name) for name in pair_tables]
+        rows = [_manifest_rows(spark, name) for name in pair_tables]
         edge_count = sum(rows) if all(r is not None for r in rows) else None
         return _cluster_edges(spark, edges, edge_count)
 
@@ -501,12 +494,8 @@ def run_near_dup_pipeline(
     workdir: str,
     cfg: NearDupConfig | None = None,
     force: bool = False,
-    use_snapshots: bool = False,
 ) -> tuple[DataFrame, dict]:
-    """Run (or resume) the full pipeline; returns (clusters_df, manifests).
-
-    ``use_snapshots=True`` commits every stage through the snapshot table
-    layer (atomic snapshots, time travel, Iceberg-shaped deployment)."""
+    """Run (or resume) the full pipeline; returns (clusters_df, manifests)."""
     cfg = cfg or NearDupConfig()
     if cfg.validate_ids == "strict":
         # one aggregation over the id column, BEFORE any stage commits:
@@ -533,7 +522,7 @@ def run_near_dup_pipeline(
                 f"{cfg.id_col} values (must be a unique non-null key; "
                 f"see NearDupConfig.validate_ids)"
             )
-    runner = StageRunner(spark, workdir, use_snapshots=use_snapshots)
+    runner = StageRunner(spark, workdir)
     manifests = runner.run(
         build_stages(clips_path, cfg, workdir),
         force=force,

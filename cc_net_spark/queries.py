@@ -1970,10 +1970,10 @@ def q_incremental_near_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_incnd_body(subdir: str) -> str:
     return f"""
   WITH b AS (SELECT doc_id, band, key, CAST(_batch_id AS INT) AS bat
-             FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/bands/**/*.parquet',
+             FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/v0/bands/**/*.parquet',
                                hive_partitioning = 1)),
   sigs AS (SELECT doc_id, sig, simhash, tkey, CAST(_batch_id AS INT) AS bat
-           FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/sigs/**/*.parquet',
+           FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/v0/sigs/**/*.parquet',
                              hive_partitioning = 1)),
   sz AS (SELECT bat, band, key, count(*) AS n FROM b GROUP BY bat, band, key),
   within_cand AS (
@@ -2188,10 +2188,10 @@ def _sql_emb_ctes(subdir: str, idc: str) -> str:
     the text+embedding composed oracles."""
     return f"""
   eb AS (SELECT {idc}, band, key, CAST(_batch_id AS INT) AS bat
-         FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/embbands/**/*.parquet',
+         FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/v0/embbands/**/*.parquet',
                            hive_partitioning = 1)),
   ebsigs AS (SELECT {idc}, v, CAST(_batch_id AS INT) AS bat
-             FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/embsigs/**/*.parquet',
+             FROM read_parquet('{ORACLE_EXPORT}/{subdir}/state/v0/embsigs/**/*.parquet',
                                hive_partitioning = 1)),
   ebsz AS (SELECT bat, band, key, count(*) AS n FROM eb GROUP BY bat, band, key),
   eb_within AS (

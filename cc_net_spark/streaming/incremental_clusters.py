@@ -33,7 +33,10 @@ for history endpoints seen here for the first time; ``calias`` rows for
 every retired root. Both writes overwrite only this batch's own
 partition dir, and every read filters ``_batch_id < current``, so an
 at-least-once replay recomputes byte-identical output (same idempotence
-contract as the LSH state).
+contract as the LSH state). Like the LSH state, the state path is a
+pointer root whose live tree ``<root>/v<N>`` is resolved at the start of
+every fold and read; ``compact_clusters_state`` publishes the next
+version with the same ``CURRENT`` flip.
 
 Scale shape: per-batch IO and compute are bounded by the batch's pair
 volume (itself bounded by the near-dup caps) — history ``cassign`` reads
@@ -63,10 +66,14 @@ from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from cc_net_spark.operators.connected_components import connected_components
+import cc_net_spark.sources.hadoop_fs as hfs
 from cc_net_spark.sources.hadoop_fs import (
+    commit_small_text,
+    ensure_live_tree,
     hadoop_fs as _hadoop_fs,
-    read_small_text,
-    write_small_text,
+    live_tree,
+    publish_next,
+    read_committed,
 )
 from cc_net_spark.streaming.incremental_neardup import (
     _conf_overrides,
@@ -117,9 +124,6 @@ class IncrementalClusters:
         small_fold_rows: int = 200_000,
     ):
         self.state_path = state_path
-        self.cassign_path = _join_path(state_path, "cassign")
-        self.calias_path = _join_path(state_path, "calias")
-        self.meta_path = _join_path(state_path, "meta")
         self.id_col = id_col
         self.n_state_buckets = n_state_buckets
         self.driver_threshold = driver_threshold
@@ -144,6 +148,27 @@ class IncrementalClusters:
         self._meta_checked = False
 
     # -- layout helpers (same discipline as IncrementalNearDup) ---------
+
+    def _bind(self, live: str) -> None:
+        """Point the state-table paths at the live tree ``live``."""
+        self.cassign_path = _join_path(live, "cassign")
+        self.calias_path = _join_path(live, "calias")
+        self.meta_path = _join_path(live, "meta")
+
+    def _open(self, spark: SparkSession, *, write: bool) -> None:
+        """Resolve and bind the live tree — per fold and read, never
+        cached (a compaction moves it). A writer commits ``CURRENT ->
+        v0`` on the first fold and checks the meta marker; a reader
+        creates nothing: a root with no state yet binds its would-be
+        ``v0``, whose absent tables read as empty."""
+        if write:
+            self._bind(ensure_live_tree(spark, self.state_path))
+            self._check_meta(spark)
+        else:
+            self._bind(
+                live_tree(spark, self.state_path)
+                or _join_path(self.state_path, "v0")
+            )
 
     def _kb_expr(self, col: str):
         return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_state_buckets)).cast("int")
@@ -174,9 +199,8 @@ class IncrementalClusters:
         if self._meta_checked:
             return
         marker = _join_path(self.meta_path, "meta.json")
-        raw = read_small_text(spark, marker)
-        if raw is not None:
-            meta = _json.loads(raw)
+        meta = read_committed(spark, marker, _json.loads)
+        if meta is not None:
             if meta["n_state_buckets"] != self.n_state_buckets:
                 raise ValueError(
                     f"cluster state at {self.meta_path} was written with "
@@ -190,7 +214,7 @@ class IncrementalClusters:
                     f"engine format {CLUSTER_STATE_FORMAT} — rebuild state"
                 )
         else:
-            write_small_text(
+            commit_small_text(
                 spark, marker,
                 _json.dumps({
                     "n_state_buckets": self.n_state_buckets,
@@ -315,7 +339,7 @@ class IncrementalClusters:
     ) -> None:
         spark = batch_ids.sparkSession
         idc = self.id_col
-        self._check_meta(spark)
+        self._open(spark, write=True)
         # every persisted id is a string (the LSH state casts too);
         # self-pairs carry no merge information
         ids = (
@@ -442,6 +466,7 @@ class IncrementalClusters:
         are their own singleton cluster by definition)."""
         idc = self.id_col
         want = ids.select(F.col(idc).cast("string").alias(idc)).dropDuplicates([idc])
+        self._open(spark, write=False)
         assign = self._history(
             spark, self.cassign_path, before, self._bucket_ids(want, idc)
         )
@@ -463,6 +488,7 @@ class IncrementalClusters:
         the corpus-wide read (reporting/compaction); per-batch paths use
         the pruned ``resolve``/``update`` instead."""
         idc = self.id_col
+        self._open(spark, write=False)
         assign = self._history(spark, self.cassign_path, before, None)
         if assign is None:
             return spark.createDataFrame([], _assign_t(idc)).withColumnRenamed(
@@ -478,98 +504,93 @@ class IncrementalClusters:
 def compact_clusters_state(
     spark: SparkSession,
     state_path: str,
-    out_path: str,
     *,
     upto_batch: int,
     id_col: str = "clip_id",
     n_state_buckets: int = 64,
-) -> None:
-    """Collapse the assignment log below ``upto_batch``: every alias chain
-    is applied, ``cassign`` is rewritten as ONE partition (rebadged to
-    ``upto_batch - 1``, keeping the ``_kb`` layout so pruned lookups still
-    prune) and the compacted ``calias`` becomes empty. Partitions >=
-    ``upto_batch`` (possibly replayable) pass through verbatim — the same
-    out-of-place contract as ``incremental_neardup.compact_state`` (swap
-    or pointer-commit the result)."""
+) -> bool:
+    """Collapse the assignment log below ``upto_batch``, in place: every
+    alias chain is applied, ``cassign`` is rewritten as ONE partition
+    (rebadged to ``upto_batch - 1``, keeping the ``_kb`` layout so pruned
+    lookups still prune) and the compacted ``calias`` becomes empty.
+    Partitions >= ``upto_batch`` (possibly replayable) pass through
+    verbatim. Published like the LSH state (``maybe_compact_state``):
+    the next version is written out of place, ``CURRENT`` flips to it,
+    the old tree is deleted. Returns False for a root with no state."""
     ic = IncrementalClusters(
         state_path, id_col=id_col, n_state_buckets=n_state_buckets
     )
-    ic._check_meta(spark)
-    resolved = ic.current(spark, before=upto_batch).withColumnRenamed(
-        "cluster_id", "root"
-    )
-    kb = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_state_buckets)).cast("int")
-    (
-        resolved.withColumn("_kb", kb)
-        .repartition(min(16, n_state_buckets), F.col("_kb"))
-        .write.mode("overwrite")
-        .partitionBy("_kb")
-        .parquet(_join_path(out_path, "cassign", f"_batch_id={upto_batch - 1}"))
-    )
-    # all chains were applied above -> the compacted alias log is empty.
-    # Write the 0-row frame STRAIGHT INTO an explicit hive dir (an empty
-    # partitionBy write emits no files at all, and readers of the base
-    # path would then hit UNABLE_TO_INFER_SCHEMA instead of "no aliases")
-    (
-        spark.createDataFrame([], _ALIAS_T)
-        .write.mode("overwrite")
-        .parquet(_join_path(out_path, "calias", f"_batch_id={upto_batch - 1}", "_kb=0"))
-    )
-    # that nested write leaves its _SUCCESS one level too deep for the
-    # fold cursor's batch-level commit check (_fully_folded) — without a
-    # marker at _batch_id=<upto-1>/ the compacted batch would read as
-    # unfolded and a re-fold's overwrite would replace the corpus-wide
-    # compacted cassign partition with one batch's ids
-    write_small_text(
-        spark,
-        _join_path(out_path, "calias", f"_batch_id={upto_batch - 1}", "_SUCCESS"),
-        "",
-    )
-    for sub in ("cassign", "calias"):
-        df = _read_optional(spark, _join_path(state_path, sub))
-        if df is None:
-            continue
-        newer = df.filter(F.col("_batch_id") >= upto_batch)
-        # copy per batch DIR (not per row-derived id — a committed batch
-        # can hold zero alias rows) into explicit _batch_id= dirs so each
-        # keeps a BATCH-LEVEL _SUCCESS (a single partitionBy append would
-        # put the marker only at the table root, demoting every passed-
-        # through batch to "unfolded" after a swap); the replayable tail
-        # is a handful of batches, so the loop stays cheap
-        for b in _batch_dirs(spark, _join_path(state_path, sub)):
-            if b < upto_batch:
-                continue
-            (
-                newer.filter(F.col("_batch_id") == b)
-                .drop("_batch_id")
-                .write.mode("overwrite")
-                .partitionBy("_kb")
-                .parquet(_join_path(out_path, sub, f"_batch_id={b}"))
-            )
-            # carry the source batch's commit marker over VERBATIM: the
-            # copy job's own commit protocol always drops a _SUCCESS, but
-            # a torn source batch (no marker — crashed mid-fold) must stay
-            # torn so the fold cursor's idempotent re-fold can repair it
-            src_fs, src_marker = _hadoop_fs(
-                spark, _join_path(state_path, sub, f"_batch_id={b}", "_SUCCESS")
-            )
-            dst_fs, dst_marker = _hadoop_fs(
-                spark, _join_path(out_path, sub, f"_batch_id={b}", "_SUCCESS")
-            )
-            if src_fs.exists(src_marker):
-                write_small_text(
-                    spark,
-                    _join_path(out_path, sub, f"_batch_id={b}", "_SUCCESS"),
-                    "",
-                )
-            elif dst_fs.exists(dst_marker):
-                dst_fs.delete(dst_marker, False)
-    fs, src = _hadoop_fs(spark, _join_path(state_path, "meta", "meta.json"))
-    if fs.exists(src):
-        dst_fs, dst = _hadoop_fs(spark, _join_path(out_path, "meta", "meta.json"))
-        spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
-            fs, src, dst_fs, dst, False, spark._jsc.hadoopConfiguration()
+
+    def write(live: str, out_path: str) -> bool:
+        ic._bind(live)
+        ic._check_meta(spark)
+        meta = read_committed(spark, _join_path(live, "meta", "meta.json"))
+        commit_small_text(spark, _join_path(out_path, "meta", "meta.json"), meta)
+        # CURRENT still names ``live`` until publish_next flips it
+        resolved = ic.current(spark, before=upto_batch).withColumnRenamed(
+            "cluster_id", "root"
         )
+        kb = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_state_buckets)).cast("int")
+        (
+            resolved.withColumn("_kb", kb)
+            .repartition(min(16, n_state_buckets), F.col("_kb"))
+            .write.mode("overwrite")
+            .partitionBy("_kb")
+            .parquet(_join_path(out_path, "cassign", f"_batch_id={upto_batch - 1}"))
+        )
+        # all chains were applied above -> the compacted alias log is
+        # empty. Write the 0-row frame STRAIGHT INTO an explicit hive dir
+        # (an empty partitionBy write emits no files at all, and readers
+        # of the base path would then find no schema-bearing file
+        # instead of "no aliases")
+        calias_dir = _join_path(out_path, "calias", f"_batch_id={upto_batch - 1}")
+        (
+            spark.createDataFrame([], _ALIAS_T)
+            .write.mode("overwrite")
+            .parquet(_join_path(calias_dir, "_kb=0"))
+        )
+        # that nested write leaves its _SUCCESS one level too deep for the
+        # fold cursor's batch-level commit check (_fully_folded) — without
+        # a marker at _batch_id=<upto-1>/ the compacted batch would read
+        # as unfolded and a re-fold's overwrite would replace the corpus-
+        # wide compacted cassign partition with one batch's ids
+        hfs.write_small_text(spark, _join_path(calias_dir, "_SUCCESS"), "")
+        for sub in ("cassign", "calias"):
+            df = _read_optional(spark, _join_path(live, sub))
+            if df is None:
+                continue
+            newer = df.filter(F.col("_batch_id") >= upto_batch)
+            # copy per batch DIR (not per row-derived id — a committed
+            # batch can hold zero alias rows) into explicit _batch_id=
+            # dirs so each keeps a BATCH-LEVEL _SUCCESS (a single
+            # partitionBy append would put the marker only at the table
+            # root, demoting every passed-through batch to "unfolded");
+            # the replayable tail is a handful of batches, so the loop
+            # stays cheap
+            for b in _batch_dirs(spark, _join_path(live, sub)):
+                if b < upto_batch:
+                    continue
+                dst = _join_path(out_path, sub, f"_batch_id={b}")
+                (
+                    newer.filter(F.col("_batch_id") == b)
+                    .drop("_batch_id")
+                    .write.mode("overwrite")
+                    .partitionBy("_kb")
+                    .parquet(dst)
+                )
+                # carry the source batch's commit marker over VERBATIM:
+                # the copy job's own commit protocol always drops a
+                # _SUCCESS, but a torn source batch (no marker — crashed
+                # mid-fold) must stay torn so the fold cursor's
+                # idempotent re-fold can repair it
+                src_fs, src_marker = _hadoop_fs(
+                    spark, _join_path(live, sub, f"_batch_id={b}", "_SUCCESS")
+                )
+                if not src_fs.exists(src_marker):
+                    hfs.fs_delete(spark, _join_path(dst, "_SUCCESS"), False)
+        return True
+
+    return publish_next(spark, state_path, write)
 
 
 def _parquet_footer_rows(path: str) -> int | None:
@@ -685,6 +706,7 @@ def fold_new_batches(
     )
     flags_base = _join_path(output_path, "flags")
     pairs_base = _join_path(output_path, "pairs")
+    ic._open(spark, write=False)
     hwm, hwm_committed = _fold_cursor(spark, ic)
     todo = [
         b

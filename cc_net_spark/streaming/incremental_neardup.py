@@ -43,8 +43,12 @@ Keep-first semantics match the exact incremental path: a clip is a
 near-dup iff it matches an EARLIER batch (including a re-delivery of an
 id already ingested), or a smaller id within its own batch. Reference anchor: cc_net's hash-table merge across shards
 (``cc_net/dedup.py:92-124``) generalized from exact SHA1 paragraphs to
-MinHash near-duplicates. With an Iceberg catalog the state appends
-become snapshot commits (see ``sources/snapshots.py``).
+MinHash near-duplicates.
+
+The state path is a POINTER ROOT (``sources/hadoop_fs.py``): the live
+tree is ``<root>/v<N>``, named by ``<root>/CURRENT`` and resolved at the
+start of every batch; ``maybe_compact_state`` writes the next version
+out of place and flips ``CURRENT`` — no directory is ever renamed.
 """
 
 from __future__ import annotations
@@ -57,9 +61,11 @@ from cc_net_spark.operators.minhash import lsh_bands
 from cc_net_spark.operators.pairs import candidate_pairs
 from cc_net_spark.operators.signatures import fused_signatures
 from cc_net_spark.sources.hadoop_fs import (
+    commit_small_text,
+    ensure_live_tree,
     hadoop_fs as _hadoop_fs,
-    read_small_text,
-    write_small_text,
+    publish_next,
+    read_committed,
 )
 
 FAMILIES = ("minhash", "simhash", "exact", "audio", "embedding")
@@ -151,21 +157,27 @@ def _run_parallel(thunks) -> list:
 
 
 def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet dir that may not exist yet. Works on any Hadoop
-    filesystem (a local Path.exists() check would silently misreport on
-    s3a/hdfs); an absent or empty dir reads as None instead of a
-    schema-inference crash. The FS existence precheck skips the
-    expensive first-AnalysisException path for missing tables."""
+    """Read a parquet dir that may not exist yet, or hold no data file
+    (only ``_SUCCESS`` markers) — None then. The decision is one Hadoop
+    listing probe for a file Spark would read (~25 ms, any scheme), made
+    BEFORE any ``spark.read``: a read that fails schema inference costs
+    0.2-0.7 s, and in a session that has used an ``Observation`` it also
+    logs an ``ExecutionListenerBus`` ERROR."""
     fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return None
-    try:
-        return spark.read.parquet(path)
-    except Exception as exc:  # AnalysisException; message-gated
-        msg = str(exc)
-        if "UNABLE_TO_INFER_SCHEMA" in msg or "PATH_NOT_FOUND" in msg:
-            return None
-        raise
+    base = fs.makeQualified(jpath).toUri().getPath().rstrip("/")
+    files = fs.listFiles(jpath, True)
+    while files.hasNext():
+        rel = files.next().getPath().toUri().getPath()[len(base):]
+        # Spark skips hidden and _-prefixed names (a crash-left
+        # _temporary/ attempt, _SUCCESS), but not _batch_id=N partitions
+        if not any(
+            n.startswith((".", "_")) and "=" not in n
+            for n in rel.split("/")
+        ):
+            return spark.read.parquet(path)
+    return None
 
 
 class IncrementalNearDup:
@@ -251,15 +263,6 @@ class IncrementalNearDup:
                 "per batch without a driver action)"
             )
         self.state_path = state_path
-        self.sigs_path = _join_path(state_path, "sigs")
-        self.bands_path = _join_path(state_path, "bands")
-        self.simbands_path = _join_path(state_path, "simbands")
-        self.exactkeys_path = _join_path(state_path, "exactkeys")
-        self.audiosigs_path = _join_path(state_path, "audiosigs")
-        self.audiowords_path = _join_path(state_path, "audiowords")
-        self.embsigs_path = _join_path(state_path, "embsigs")
-        self.embbands_path = _join_path(state_path, "embbands")
-        self.meta_path = _join_path(state_path, "meta")
         self.output_path = output_path
         self.text_col = text_col
         self.id_col = id_col
@@ -308,6 +311,25 @@ class IncrementalNearDup:
         import threading
 
         self._read_lock = threading.Lock()
+
+    def _bind(self, live: str) -> None:
+        """Point the state-table paths at the live tree ``live``."""
+        self.sigs_path = _join_path(live, "sigs")
+        self.bands_path = _join_path(live, "bands")
+        self.simbands_path = _join_path(live, "simbands")
+        self.exactkeys_path = _join_path(live, "exactkeys")
+        self.audiosigs_path = _join_path(live, "audiosigs")
+        self.audiowords_path = _join_path(live, "audiowords")
+        self.embsigs_path = _join_path(live, "embsigs")
+        self.embbands_path = _join_path(live, "embbands")
+        self.meta_path = _join_path(live, "meta")
+
+    def _open_state(self, spark: SparkSession) -> None:
+        """Resolve the live state tree — per batch, never cached: a
+        compaction between batches moves it — committing ``CURRENT ->
+        v0`` on the first write, then check the meta marker."""
+        self._bind(ensure_live_tree(spark, self.state_path))
+        self._check_meta(spark)
 
     def _kb_expr(self, cols: list[str]):
         """The state-bucket of a key: stable hash of the key columns mod
@@ -428,25 +450,9 @@ class IncrementalNearDup:
                     "spark.sql.parquet.pushdown.inFilterThreshold", str(want)
                 )
 
-        # a POINTER root passed as a plain state path would silently
-        # write sigs/ beside v0/ and ignore all pointer-resolved history
-        # — the same loud-mismatch convention as the bucket-count check
-        _ptr_fs, _ptr = _hadoop_fs(spark, _join_path(self.state_path, "CURRENT"))
-        if _ptr_fs.exists(_ptr):
-            raise ValueError(
-                f"{self.state_path} is a pointer-managed root (CURRENT "
-                f"present) — resolve it with init_state_pointer() / "
-                f"pointer_state=True instead of using it as a state tree"
-            )
-        # a compaction swap that crashed mid-window leaves the live state
-        # tree missing with the original parked at _precompact — heal it
-        # BEFORE the meta probe (which would otherwise see "fresh state"
-        # and silently restart dedup history from empty)
-        recover_state_swap(spark, self.state_path)
         marker = _join_path(self.meta_path, "meta.json")
-        raw = read_small_text(spark, marker)
-        if raw is not None:
-            meta = _json.loads(raw)
+        meta = read_committed(spark, marker, _json.loads)
+        if meta is not None:
             stored = meta["n_state_buckets"]
             if stored != self.n_state_buckets:
                 raise ValueError(
@@ -469,7 +475,7 @@ class IncrementalNearDup:
                     f"version); mixing formats silently loses recall"
                 )
         else:
-            write_small_text(
+            commit_small_text(
                 spark, marker,
                 _json.dumps({
                     "n_state_buckets": self.n_state_buckets,
@@ -687,7 +693,7 @@ class IncrementalNearDup:
         if batch.isEmpty():
             # writing a 0-row batch would create an empty state dir
             return
-        self._check_meta(spark)
+        self._open_state(spark)
         self._read_cache.clear()
         # a malformed shard can repeat a clip_id within one batch; keep
         # one row per id so every downstream table (sigs state, flags,
@@ -1261,10 +1267,10 @@ def compact_state(
     ``upto_batch`` into ONE partition per table — small-file compaction
     plus dedupe of replay leftovers (one row per id in ``sigs``, per
     (id, band, key) in ``bands``; the earliest batch wins, preserving
-    keep-first). The analogue of ``incremental.compact_hashes`` and of
-    Iceberg's ``rewrite_data_files``. Out-of-place: writes under
-    ``out_path``; the caller swaps paths (or snapshot-commits) once
-    finished.
+    keep-first). The analogue of Iceberg's ``rewrite_data_files``.
+    Tree to tree and out-of-place: reads the state tree ``state_path``,
+    writes ``out_path``; ``maybe_compact_state`` publishes the result as
+    the root's next version.
 
     ``upto_batch`` is ENFORCED, not advisory: pass the stream
     checkpoint's next batch id (every batch < upto_batch is committed
@@ -1282,12 +1288,12 @@ def compact_state(
     overrides ``parquet.block.size`` for the compacted files — smaller
     groups = finer skipping granularity (and testability at small
     scale); None keeps the Parquet default (128 MB)."""
-    fs_, jcur = _hadoop_fs(spark, _join_path(state_path, "CURRENT"))
-    if fs_.exists(jcur):
+    fs, jcur = _hadoop_fs(spark, _join_path(state_path, "CURRENT"))
+    if fs.exists(jcur):
         raise ValueError(
-            f"{state_path} is a pointer-managed root — compacting it "
-            f"directly would read zero tables and report success. Use "
-            f"compact_state_pointer(), or pass the CURRENT-resolved tree."
+            f"{state_path} is a pointer root, not a state tree — compacting "
+            f"it would read zero tables and report success; use "
+            f"maybe_compact_state()"
         )
     tables = (
         ("sigs", [id_col]),
@@ -1299,12 +1305,9 @@ def compact_state(
         ("embsigs", [id_col]),
         ("embbands", [id_col, "band", "key"]),
     )
-    fs, src = _hadoop_fs(spark, _join_path(state_path, "meta", "meta.json"))
-    if fs.exists(src):
-        dst_fs, dst = _hadoop_fs(spark, _join_path(out_path, "meta", "meta.json"))
-        spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
-            fs, src, dst_fs, dst, False, spark._jsc.hadoopConfiguration()
-        )
+    meta = read_committed(spark, _join_path(state_path, "meta", "meta.json"))
+    if meta is not None:
+        commit_small_text(spark, _join_path(out_path, "meta", "meta.json"), meta)
     for sub, keys in tables:
         df = _read_optional(spark, _join_path(state_path, sub))
         if df is None:  # family not enabled -> table absent
@@ -1339,58 +1342,6 @@ def compact_state(
         )
 
 
-def recover_state_swap(spark: SparkSession, state_path: str) -> bool:
-    """Heal a compaction swap that crashed mid-window. The swap is two
-    renames (live -> ``_precompact``, ``_compacting`` -> live); a crash
-    between them leaves NO live tree — a naive restart would then see
-    "no state", silently rebuild from empty, and lose all dedup recall.
-    Recovery: if the live tree is missing but ``_precompact`` exists,
-    delete the (possibly incomplete) ``_compacting`` tree and rename the
-    original back; if BOTH live and ``_precompact`` exist (crash after
-    the second rename, before the cleanup delete), the live tree is the
-    complete compacted one — just drop the leftover. Returns True iff it
-    changed anything. Called automatically by ``maybe_compact_state``
-    and on the first ``process_batch`` of a handler lifetime.
-
-    The both-exist inference requires ATOMIC renames (each tree is then
-    all-or-nothing); ``maybe_compact_state`` refuses to start a swap on
-    schemes where rename is copy+delete, so that precondition holds
-    wherever a swap can actually have happened."""
-    fs, live = _hadoop_fs(spark, state_path)
-    _, old = _hadoop_fs(spark, state_path.rstrip("/") + "_precompact")
-    _, tmp = _hadoop_fs(spark, state_path.rstrip("/") + "_compacting")
-    if fs.exists(live):
-        if fs.exists(old):
-            fs.delete(old, True)
-            return True
-        return False
-    if not fs.exists(old):
-        return False
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-    if not fs.rename(old, live):
-        raise RuntimeError(
-            f"swap recovery: rename {state_path}_precompact -> {state_path} failed"
-        )
-    return True
-
-
-# schemes whose directory rename is a single atomic metadata operation.
-# On object stores (s3a/s3/gs/wasb/oss/cos) rename is per-object
-# copy+delete: a crash mid-rename leaves BOTH trees partial, and no
-# local recovery can distinguish "live is complete" from "live lost
-# rows" — the auto-swap refuses there (compact out-of-place with
-# ``compact_state`` and flip a catalog/snapshot pointer instead, which
-# is how an Iceberg deployment does it anyway).
-_ATOMIC_RENAME_SCHEMES = frozenset(
-    {"file", "hdfs", "viewfs", "webhdfs", "abfs", "abfss", "o3fs", "ofs"}
-)
-
-
-def _rename_is_atomic(scheme: str | None) -> bool:
-    return (scheme or "file") in _ATOMIC_RENAME_SCHEMES
-
-
 def _n_state_batches(spark: SparkSession, state_path: str) -> int | None:
     """Number of ``_batch_id=`` partitions in the state's signature
     table (text, else audio, else embedding) — None if no state exists
@@ -1408,127 +1359,6 @@ def _n_state_batches(spark: SparkSession, state_path: str) -> int | None:
     return None
 
 
-_STATE_TABLE_NAMES = (
-    "sigs", "bands", "simbands", "exactkeys",
-    "audiosigs", "audiowords", "embsigs", "embbands",
-)
-
-
-def _read_pointer(spark: SparkSession, root: str) -> str | None:
-    """Read + validate ``<root>/CURRENT``. Rolls a crashed pointer
-    commit forward (``CURRENT.tmp`` left by ``_commit_pointer``), and
-    FAILS LOUDLY on an unparseable pointer or on a root that holds
-    state tables but no pointer — both would otherwise resolve to an
-    empty tree and silently restart dedup history (the same loud-
-    mismatch convention as the n_state_buckets meta marker)."""
-    import re as _re
-
-    marker = _join_path(root, "CURRENT")
-    fs, jmark = _hadoop_fs(spark, marker)
-    _, jtmp = _hadoop_fs(spark, marker + ".tmp")
-    if not fs.exists(jmark) and fs.exists(jtmp):
-        # crashed between delete(CURRENT) and rename(tmp) — roll forward
-        if not fs.rename(jtmp, jmark):
-            raise RuntimeError(f"pointer roll-forward failed at {marker}")
-    cur = read_small_text(spark, marker)
-    if cur is None:
-        for sub in _STATE_TABLE_NAMES:
-            _, jp = _hadoop_fs(spark, _join_path(root, sub))
-            if fs.exists(jp):
-                raise ValueError(
-                    f"{root} holds a plain (non-pointer) state tree — "
-                    f"initializing a pointer here would orphan its dedup "
-                    f"history. Keep using it without pointer_state, or "
-                    f"move it to {root}/v0 and write 'v0' to {marker}."
-                )
-        return None
-    cur = cur.strip()
-    if not _re.fullmatch(r"v\d+", cur):
-        raise ValueError(
-            f"{marker} contains {cur!r} (expected v<N>) — refusing to "
-            f"resolve a corrupt pointer to an empty tree"
-        )
-    return cur
-
-
-def _commit_pointer(spark: SparkSession, root: str, version: str) -> None:
-    """Commit a new pointer value. On object stores a small-object
-    overwrite is one atomic PUT; on file/HDFS ``create(overwrite)`` is
-    truncate-then-write, so the commit goes through ``CURRENT.tmp`` +
-    rename, and ``_read_pointer`` rolls the one crash window (between
-    delete and rename) forward."""
-    marker = _join_path(root, "CURRENT")
-    fs, jmark = _hadoop_fs(spark, marker)
-    _, jtmp = _hadoop_fs(spark, marker + ".tmp")
-    write_small_text(spark, marker + ".tmp", version)
-    if fs.exists(jmark):
-        fs.delete(jmark, False)
-    if not fs.rename(jtmp, jmark):
-        raise RuntimeError(f"pointer commit failed at {marker}")
-
-
-def init_state_pointer(spark: SparkSession, root: str) -> str:
-    """Initialize (or resolve) a POINTER-MANAGED state root: the live
-    state tree is ``<root>/<contents of root/CURRENT>``. Returns the
-    live tree path, creating ``CURRENT -> v0`` on first use. This is
-    the object-store-safe layout: compaction never renames directories —
-    it writes a fresh versioned tree and flips the one-line CURRENT
-    file (the catalog-pointer pattern an Iceberg deployment uses for
-    every commit). A root that already holds a PLAIN state tree is
-    refused loudly (pointer-izing it would orphan its history)."""
-    cur = _read_pointer(spark, root)
-    if cur is None:
-        _commit_pointer(spark, root, "v0")
-        cur = "v0"
-    return _join_path(root, cur)
-
-
-def compact_state_pointer(
-    spark: SparkSession,
-    root: str,
-    *,
-    upto_batch: int,
-    min_batches: int = 8,
-    id_col: str = "clip_id",
-) -> bool:
-    """Pointer-flip compaction for a root managed by
-    ``init_state_pointer`` — the compaction path that is safe on EVERY
-    filesystem, object stores included (``maybe_compact_state``'s
-    rename swap refuses those). Protocol: drop orphan version trees
-    from crashed attempts, compact the live tree out-of-place to the
-    next version, overwrite CURRENT (the atomic commit), delete the old
-    tree. A crash before the flip leaves an orphan new tree; after the
-    flip, an orphan old tree — both invisible to readers (which resolve
-    through CURRENT) and reclaimed by the next compaction. Run only
-    while the stream is stopped. Returns True iff a compaction
-    happened."""
-    import re as _re
-
-    cur = _read_pointer(spark, root)
-    if cur is None:
-        return False
-    live = _join_path(root, cur)
-    # orphan sweep FIRST (before the size guard): a crash after a flip
-    # but before the old-tree delete must not leak a full state copy
-    # until the next compaction happens to trigger
-    fs, jroot = _hadoop_fs(spark, root)
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if st.isDirectory() and name != cur and _re.fullmatch(r"v\d+", name):
-            fs.delete(st.getPath(), True)
-    n_batches = _n_state_batches(spark, live)
-    if n_batches is None or n_batches < min_batches:
-        return False
-    nxt = f"v{int(cur[1:]) + 1}"
-    compact_state(
-        spark, live, _join_path(root, nxt), upto_batch=upto_batch, id_col=id_col
-    )
-    _commit_pointer(spark, root, nxt)
-    _, jlive = _hadoop_fs(spark, live)
-    fs.delete(jlive, True)
-    return True
-
-
 def maybe_compact_state(
     spark: SparkSession,
     state_path: str,
@@ -1537,51 +1367,25 @@ def maybe_compact_state(
     min_batches: int = 8,
     id_col: str = "clip_id",
 ) -> bool:
-    """Compact the state IF it has accumulated >= ``min_batches`` batch
-    partitions, then atomically swap the compacted tree in (the
-    operational wrapper around ``compact_state`` — small-file growth is
-    otherwise unbounded under a long-running stream).
-
-    Swap protocol: compact out-of-place to ``<state>_compacting``, rename
-    the live tree to ``<state>_precompact``, rename the compacted tree to
-    ``<state>``, delete the old tree. The protocol (and
-    ``recover_state_swap``'s crash inference) is only sound where
-    ``FileSystem.rename`` is atomic — on object stores it is per-object
-    copy+delete and a mid-rename crash leaves both trees PARTIAL, so the
-    swap refuses non-atomic schemes outright (see
-    ``_ATOMIC_RENAME_SCHEMES``). Run only while the stream is stopped
-    (``Trigger.AvailableNow`` between invocations), which is also
-    required for correctness of ``upto_batch``. Returns True iff a
+    """Compact the state root IF its live tree has accumulated >=
+    ``min_batches`` batch partitions (small-file growth is otherwise
+    unbounded under a long-running stream): ``compact_state`` writes the
+    next version out of place, ``CURRENT`` flips to it, the old tree is
+    deleted (``hadoop_fs.publish_next`` — crash-safe on every scheme,
+    object stores included). Orphan trees of a crashed attempt are swept
+    even when the threshold then says no. Run only while the stream is
+    stopped (``Trigger.AvailableNow`` between invocations), which is
+    also required for correctness of ``upto_batch``. Returns True iff a
     compaction happened."""
-    fs, probe_dir = _hadoop_fs(spark, _join_path(state_path, "sigs"))
-    if not _rename_is_atomic(probe_dir.toUri().getScheme()):
-        raise RuntimeError(
-            f"maybe_compact_state: rename is not atomic on "
-            f"'{probe_dir.toUri().getScheme()}' — a crashed swap would be "
-            f"unrecoverable. Use compact_state(out_path=...) and flip a "
-            f"catalog/snapshot pointer instead."
-        )
-    recover_state_swap(spark, state_path)
-    n_batches = _n_state_batches(spark, state_path)
-    if n_batches is None or n_batches < min_batches:
-        return False
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    tmp = state_path.rstrip("/") + "_compacting"
-    old = state_path.rstrip("/") + "_precompact"
-    # recover_state_swap above guarantees _precompact is gone; only a
-    # half-written compaction output from a crashed attempt can remain
-    _, p = _hadoop_fs(spark, tmp)
-    if fs.exists(p):
-        fs.delete(p, True)
-    compact_state(spark, state_path, tmp, upto_batch=upto_batch, id_col=id_col)
-    if not fs.rename(jvm_path(state_path), jvm_path(old)):
-        raise RuntimeError(f"compaction swap: rename {state_path} -> {old} failed")
-    if not fs.rename(jvm_path(tmp), jvm_path(state_path)):
-        # roll back so the live state survives
-        fs.rename(jvm_path(old), jvm_path(state_path))
-        raise RuntimeError(f"compaction swap: rename {tmp} -> {state_path} failed")
-    fs.delete(jvm_path(old), True)
-    return True
+
+    def write(live: str, nxt: str) -> bool:
+        n_batches = _n_state_batches(spark, live)
+        if n_batches is None or n_batches < min_batches:
+            return False
+        compact_state(spark, live, nxt, upto_batch=upto_batch, id_col=id_col)
+        return True
+
+    return publish_next(spark, state_path, write)
 
 
 def run_incremental_near_dup(
@@ -1592,7 +1396,6 @@ def run_incremental_near_dup(
     output_path: str,
     checkpoint_path: str,
     compact_min_batches: int | None = None,
-    pointer_state: bool = False,
     **kwargs,
 ):
     """Structured Streaming file-source wrapper, AvailableNow trigger —
@@ -1601,17 +1404,8 @@ def run_incremental_near_dup(
     ``compact_min_batches``: after the trigger drains (stream stopped),
     auto-compact the state once it holds that many batch partitions —
     ``upto_batch`` is the just-committed next batch id, which is exactly
-    the enforced-safety contract of ``compact_state``.
-
-    ``pointer_state``: manage ``state_path`` as a POINTER ROOT
-    (``init_state_pointer``): the live tree is versioned under it and
-    compaction commits by flipping the one-line CURRENT file instead of
-    renaming directories — the layout to use on object stores, where
-    ``maybe_compact_state``'s rename swap is refused."""
-    live_state = (
-        init_state_pointer(spark, state_path) if pointer_state else state_path
-    )
-    handler = IncrementalNearDup(live_state, output_path, **kwargs)
+    the enforced-safety contract of ``compact_state``."""
+    handler = IncrementalNearDup(state_path, output_path, **kwargs)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 4)
@@ -1627,8 +1421,7 @@ def run_incremental_near_dup(
     if compact_min_batches is not None:
         progress = q.lastProgress
         if progress is not None:
-            compact = compact_state_pointer if pointer_state else maybe_compact_state
-            compact(
+            maybe_compact_state(
                 spark,
                 state_path,
                 upto_batch=int(progress["batchId"]) + 1,

@@ -19,8 +19,7 @@ append-only sharded corpus where
 
 Reference anchor: cc_net's file-level idempotence (skip-if-output-exists,
 ``cc_net/mine.py:254-257,312-321``) applied to the graft's substring
-family; with ``use_snapshots=True`` every stage is an atomic snapshot
-commit (the Iceberg-shaped deployment, ``sources/snapshots.py``).
+family; every stage commits through the StageRunner's manifest commit.
 """
 
 from __future__ import annotations
@@ -50,7 +49,6 @@ def incremental_substring_pass(
     gram_cap: int = 100,
     min_length: int | None = None,
     verify: bool = True,
-    use_snapshots: bool = False,
 ) -> dict[str, dict]:
     """Run (or resume) the pass over every ``<corpus_root>/<shard>/`` dir.
 
@@ -86,7 +84,7 @@ def incremental_substring_pass(
             return str(corpus_root / name)
     if not shards:
         raise ValueError(f"no shard directories under {corpus_root}")
-    runner = StageRunner(spark, workdir, use_snapshots=use_snapshots)
+    runner = StageRunner(spark, workdir)
 
     stages: list[Stage] = []
     for s in shards:

@@ -40,8 +40,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--audio", action="store_true",
                     help="include the audio-payload near-dup pass")
     ap.add_argument("--force", action="store_true", help="ignore stage manifests")
-    ap.add_argument("--snapshots", action="store_true",
-                    help="commit stages through the snapshot table layer")
     ap.add_argument("--int-ids", action="store_true",
                     help="run pair families + CC over xxhash64 surrogate "
                          "longs (fixed-width shuffle keys; cluster_id "
@@ -80,7 +78,6 @@ def main(argv: list[str] | None = None) -> None:
         args.workdir,
         cfg,
         force=args.force,
-        use_snapshots=args.snapshots,
     )
     clusters.write.mode("overwrite").parquet(args.output)
 

@@ -10,6 +10,7 @@ from cc_net_spark.operators.connected_components import (
     assign_clusters,
     connected_components,
 )
+from cc_net_spark.sources.hadoop_fs import live_tree
 from cc_net_spark.streaming.incremental_clusters import (
     IncrementalClusters,
     compact_clusters_state,
@@ -18,6 +19,11 @@ from cc_net_spark.streaming.incremental_clusters import (
 
 def _ids(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "clip_id string")
+
+
+def _state(spark, root, table):
+    """A state table's path in the live tree of the pointer root."""
+    return f"{live_tree(spark, str(root))}/{table}"
 
 
 def _pairs(spark, pairs):
@@ -59,7 +65,7 @@ def test_incremental_equals_batch_cc_with_alias_chains(spark, tmp_path):
     got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
     assert got == _batch_truth(spark)
     # the scenario really exercised a 2-hop chain: both retirements exist
-    alias = spark.read.parquet(str(tmp_path / "state" / "calias"))
+    alias = spark.read.parquet(_state(spark, tmp_path / "state", "calias"))
     chains = {(r["old_root"], r["new_root"]) for r in alias.collect()}
     assert ("b", "a") in chains and ("a", "0") in chains
     # singletons kept their own id
@@ -108,21 +114,23 @@ def test_replay_is_idempotent(spark, tmp_path):
 
 def test_compaction_collapses_chains_and_preserves_results(spark, tmp_path):
     state = str(tmp_path / "state")
-    out = str(tmp_path / "compacted")
     ic = _run_batches(spark, state)
     want = sorted(map(tuple, ic.current(spark).collect()))
-    compact_clusters_state(
-        spark, state, out, upto_batch=len(BATCHES), n_state_buckets=8
+    assert compact_clusters_state(
+        spark, state, upto_batch=len(BATCHES), n_state_buckets=8
     )
-    ic2 = IncrementalClusters(out, n_state_buckets=8)
+    # compacted in place: the next version is live, the old tree is gone
+    assert live_tree(spark, state).endswith("/v1")
+    assert not (tmp_path / "state" / "v0").exists()
+    ic2 = IncrementalClusters(state, n_state_buckets=8)
     assert sorted(map(tuple, ic2.current(spark).collect())) == want
     # every alias chain was applied away
-    alias = spark.read.parquet(f"{out}/calias")
+    alias = spark.read.parquet(_state(spark, state, "calias"))
     assert alias.count() == 0
     # compacted assignments live in ONE rebadged partition, still bucketed
     batches = {
         f.split("_batch_id=")[1].split("/")[0]
-        for f in spark.read.parquet(f"{out}/cassign").inputFiles()
+        for f in spark.read.parquet(_state(spark, state, "cassign")).inputFiles()
     }
     assert batches == {str(len(BATCHES) - 1)}
     # and a later batch folds into the compacted state seamlessly —
@@ -314,7 +322,7 @@ def test_neardup_cli_folds_clusters_after_drain(spark, tmp_path):
     # the second fold touched only batch 1's partition dir
     from cc_net_spark.streaming.incremental_clusters import _batch_dirs
 
-    assert _batch_dirs(spark, str(tmp_path / "cstate" / "cassign")) == [0, 1]
+    assert _batch_dirs(spark, _state(spark, tmp_path / "cstate", "cassign")) == [0, 1]
     # clusters-only maintenance verb: no --state needed
     main([
         "neardup",
@@ -322,15 +330,13 @@ def test_neardup_cli_folds_clusters_after_drain(spark, tmp_path):
         "--compact-clusters-upto", "2",
         "--state-buckets", "8",
     ])
-    icc = IncrementalClusters(
-        str(tmp_path) + "/cstate_compacted", n_state_buckets=8
-    )
-    got_c = {r["clip_id"]: r["cluster_id"] for r in icc.current(spark).collect()}
+    assert live_tree(spark, str(tmp_path / "cstate")).endswith("/v1")
+    got_c = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
     assert got_c == got
 
 
 def test_fold_new_batches_after_compact_and_swap(spark, tmp_path):
-    """Folding after the documented compact+swap workflow must treat the
+    """Folding after an in-place compaction must treat the
     rebadged corpus-wide partition as FOLDED (regression: the compacted
     calias _SUCCESS used to land one hive level too deep, so the cursor
     re-folded batch upto-1 and its overwrite replaced the corpus-wide
@@ -344,11 +350,7 @@ def test_fold_new_batches_after_compact_and_swap(spark, tmp_path):
     _write_handler_output(spark, out, BATCHES, upto=2)
     assert fold_new_batches(spark, out, state, n_state_buckets=8) == [0, 1]
     want = _batch_truth(spark, BATCHES[:2])
-    # compact + swap (the workflow compact_clusters_state documents)
-    compacted = str(tmp_path / "state_compacted")
-    compact_clusters_state(spark, state, compacted, upto_batch=2, n_state_buckets=8)
-    shutil.rmtree(state)
-    shutil.move(compacted, state)
+    assert compact_clusters_state(spark, state, upto_batch=2, n_state_buckets=8)
     # prune older output partitions — exactly the case that made the bug
     # destructive: a re-fold of the rebadged partition can't recover them
     shutil.rmtree(f"{out}/flags/_batch_id=0")
@@ -367,26 +369,27 @@ def test_fold_new_batches_after_compact_and_swap(spark, tmp_path):
 
 def test_compaction_carries_passthrough_commit_markers(spark, tmp_path):
     """Batches >= upto pass through compaction with their BATCH-LEVEL
-    _SUCCESS intact (even a zero-alias batch), so a swap never demotes a
-    committed tail batch to 'unfolded'; a torn tail batch stays torn."""
+    _SUCCESS intact (even a zero-alias batch), so a compaction never
+    demotes a committed tail batch to 'unfolded'; a torn tail batch stays
+    torn."""
     import os
 
     from cc_net_spark.streaming.incremental_clusters import _fold_cursor
 
-    state, out = str(tmp_path / "state"), str(tmp_path / "compacted")
+    state = str(tmp_path / "state")
     ic = _run_batches(spark, state)  # batches 0..2
-    compact_clusters_state(spark, state, out, upto_batch=2, n_state_buckets=8)
-    ic2 = IncrementalClusters(out, n_state_buckets=8)
+    want = sorted(map(tuple, ic.current(spark).collect()))
+    assert compact_clusters_state(spark, state, upto_batch=2, n_state_buckets=8)
+    ic2 = IncrementalClusters(state, n_state_buckets=8)
+    ic2._open(spark, write=False)
     assert _fold_cursor(spark, ic2) == (2, True)
     # identical resolved assignments after the partial compaction
-    assert sorted(map(tuple, ic2.current(spark).collect())) == sorted(
-        map(tuple, ic.current(spark).collect())
-    )
-    # torn tail batch in the SOURCE stays torn in the copy
-    os.remove(f"{state}/calias/_batch_id=2/_SUCCESS")
-    out2 = str(tmp_path / "compacted2")
-    compact_clusters_state(spark, state, out2, upto_batch=2, n_state_buckets=8)
-    ic3 = IncrementalClusters(out2, n_state_buckets=8)
+    assert sorted(map(tuple, ic2.current(spark).collect())) == want
+    # a torn tail batch in the live tree stays torn in the next version
+    os.remove(_state(spark, state, "calias/_batch_id=2/_SUCCESS"))
+    assert compact_clusters_state(spark, state, upto_batch=2, n_state_buckets=8)
+    ic3 = IncrementalClusters(state, n_state_buckets=8)
+    ic3._open(spark, write=False)
     assert _fold_cursor(spark, ic3) == (2, False)
 
 
@@ -403,7 +406,7 @@ def test_fold_new_batches_refolds_a_partial_crashed_fold(spark, tmp_path):
     _write_handler_output(spark, out, BATCHES, upto=2)
     assert fold_new_batches(spark, out, state, n_state_buckets=8) == [0, 1]
     # simulate the torn batch-1 fold: calias committed marker missing
-    os.remove(str(tmp_path / "state" / "calias" / "_batch_id=1" / "_SUCCESS"))
+    os.remove(_state(spark, tmp_path / "state", "calias/_batch_id=1/_SUCCESS"))
     assert fold_new_batches(spark, out, state, n_state_buckets=8) == [1]
     ic = IncrementalClusters(state, n_state_buckets=8)
     got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
@@ -430,7 +433,7 @@ def test_small_fold_planner_is_plan_only(spark, tmp_path):
             t: sorted(
                 map(
                     tuple,
-                    spark.read.parquet(str(tmp_path / label / t))
+                    spark.read.parquet(_state(spark, tmp_path / label, t))
                     .drop("_kb", "_batch_id")
                     .collect(),
                 )
@@ -439,52 +442,6 @@ def test_small_fold_planner_is_plan_only(spark, tmp_path):
         }
     assert outs["small"] == outs["plain"]
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_crashed_clusters_swap_recovers_without_id_loss(spark, tmp_path):
-    """Crash-inject the compact+swap the CLI workflow documents for the
-    CLUSTERS state (same two-rename protocol as the LSH state): kill
-    between rename 1 (live -> _precompact) and rename 2 (_compacting ->
-    live), heal with recover_state_swap, restart the fold — every id
-    resolves exactly as before the crash, and a new batch still folds."""
-    import shutil
-
-    from cc_net_spark.streaming.incremental_clusters import fold_new_batches
-    from cc_net_spark.streaming.incremental_neardup import recover_state_swap
-
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    _write_handler_output(spark, out, BATCHES, upto=2)
-    assert fold_new_batches(spark, out, state, n_state_buckets=8) == [0, 1]
-    want = _batch_truth(spark, BATCHES[:2])
-    compact_clusters_state(
-        spark, state, f"{state}_compacting", upto_batch=2, n_state_buckets=8
-    )
-    # crash window: rename 1 done, rename 2 never happens — NO live tree
-    shutil.move(state, f"{state}_precompact")
-    assert not (tmp_path / "state").exists()
-    # a naive restart would see "no state" and rebuild from empty;
-    # recovery must delete the unswapped _compacting tree and restore
-    # the original
-    assert recover_state_swap(spark, state)
-    assert not (tmp_path / "state_compacting").exists()
-    assert not (tmp_path / "state_precompact").exists()
-    ic = IncrementalClusters(state, n_state_buckets=8)
-    got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
-    assert got == want  # no id lost, no assignment changed
-    # the fold restarts cleanly on the healed tree: already current,
-    # then a genuinely new batch folds on top
-    assert fold_new_batches(spark, out, state, n_state_buckets=8) == []
-    _write_handler_output(spark, out, BATCHES)
-    assert fold_new_batches(spark, out, state, n_state_buckets=8) == [2]
-    got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
-    assert got == _batch_truth(spark)
-    # crash AFTER rename 2 (leftover _precompact beside a complete live
-    # tree): recovery just drops the leftover, state untouched
-    shutil.copytree(state, f"{state}_precompact")
-    assert recover_state_swap(spark, state)
-    assert not (tmp_path / "state_precompact").exists()
-    got = {r["clip_id"]: r["cluster_id"] for r in ic.current(spark).collect()}
-    assert got == _batch_truth(spark)
 
 
 def test_parquet_footer_rows_reads_what_spark_reads(tmp_path):

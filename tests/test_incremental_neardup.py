@@ -5,6 +5,7 @@ import json
 
 from pyspark.sql import functions as F
 
+from cc_net_spark.sources.hadoop_fs import live_tree
 from cc_net_spark.streaming.incremental_neardup import (
     IncrementalNearDup,
     run_incremental_near_dup,
@@ -22,6 +23,11 @@ THIRD = " ".join(f"y{_L[i // 26]}{_L[i % 26]}" for i in range(40))
 
 def _batch(spark, rows):
     return spark.createDataFrame(rows, "clip_id string, transcript string")
+
+
+def _state(spark, root, table):
+    """A state table's path in the live tree of the pointer root."""
+    return f"{live_tree(spark, str(root))}/{table}"
 
 
 def test_cross_batch_and_within_batch_near_dups(spark, tmp_path):
@@ -59,7 +65,7 @@ def test_cross_batch_and_within_batch_near_dups(spark, tmp_path):
     assert not any(k == "history" and b in {"b0", "c0", "d0", "d1"} for _, b, k in pairs)
 
     # state writes ∝ batch (append-only, partitioned by _batch_id)
-    sigs = spark.read.parquet(str(tmp_path / "state" / "sigs"))
+    sigs = spark.read.parquet(_state(spark, tmp_path / "state", "sigs"))
     per_batch = {
         r["_batch_id"]: r["n"]
         for r in sigs.groupBy("_batch_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -88,9 +94,9 @@ def test_replay_is_idempotent(spark, tmp_path):
     nd.process_batch(b0, 0)
     nd.process_batch(b1, 1)
     assert snapshot() == first
-    assert spark.read.parquet(str(tmp_path / "state" / "sigs")).count() == 4
+    assert spark.read.parquet(_state(spark, tmp_path / "state", "sigs")).count() == 4
     assert (
-        spark.read.parquet(str(tmp_path / "state" / "bands")).count() == 4 * 32
+        spark.read.parquet(_state(spark, tmp_path / "state", "bands")).count() == 4 * 32
     )
 
 
@@ -120,7 +126,7 @@ def test_streaming_wrapper_resumes_from_checkpoint(spark, tmp_path):
     }
     assert flags == {"a0": False, "a1": False, "b0": True}
     # checkpoint means s0 was NOT reprocessed on the second run
-    sigs = spark.read.parquet(str(tmp_path / "state" / "sigs"))
+    sigs = spark.read.parquet(_state(spark, tmp_path / "state", "sigs"))
     assert sigs.count() == 3
 
 
@@ -128,8 +134,37 @@ def test_uri_state_paths_not_mangled():
     """s3a/hdfs state paths must survive path joining (pathlib would
     collapse 's3a://b' to 's3a:/b')."""
     nd = IncrementalNearDup("s3a://bucket/state", "hdfs://nn/out")
-    assert nd.sigs_path == "s3a://bucket/state/sigs"
-    assert nd.bands_path == "s3a://bucket/state/bands"
+    nd._bind("s3a://bucket/state/v0")
+    assert nd.sigs_path == "s3a://bucket/state/v0/sigs"
+    assert nd.bands_path == "s3a://bucket/state/v0/bands"
+
+
+def test_read_optional_decides_no_data_before_reading(spark, tmp_path, monkeypatch):
+    """A state dir holding only commit markers (``_batch_id=0/_SUCCESS``)
+    or a crash-left ``_temporary`` attempt has no data: one listing probe
+    says so BEFORE any ``spark.read`` — a read that fails schema
+    inference costs 0.2-0.7 s and, in a session that has used an
+    Observation, logs an ExecutionListenerBus ERROR."""
+    from pyspark.sql import DataFrameReader
+
+    from cc_net_spark.streaming.incremental_neardup import _read_optional
+
+    t = tmp_path / "t"
+    (t / "_batch_id=0").mkdir(parents=True)
+    (t / "_batch_id=0" / "_SUCCESS").write_text("")
+    (t / "_temporary" / "0").mkdir(parents=True)
+    (t / "_temporary" / "0" / "part-0.parquet").write_text("")
+    real = DataFrameReader.parquet
+
+    def no_read(self, *paths, **kw):
+        raise AssertionError(f"spark.read launched on {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert _read_optional(spark, str(t)) is None
+    assert _read_optional(spark, str(tmp_path / "absent")) is None
+    monkeypatch.setattr(DataFrameReader, "parquet", real)
+    spark.range(3).write.parquet(str(t / "_batch_id=1"))
+    assert _read_optional(spark, str(t)).count() == 3
 
 
 def test_empty_first_batch_does_not_wedge_the_stream(spark, tmp_path):
@@ -176,18 +211,25 @@ def test_compact_state_preserves_probe_results(spark, tmp_path):
     """compact_state rewrites N batch partitions into one (small-file
     maintenance, replay-leftover dedupe); a probe against the compacted
     state yields byte-identical pairs/flags."""
-    from cc_net_spark.streaming.incremental_neardup import compact_state
+    import shutil
+
+    from cc_net_spark.streaming.incremental_neardup import (
+        compact_state,
+        maybe_compact_state,
+    )
 
     nd = IncrementalNearDup(str(tmp_path / "state"), str(tmp_path / "out"))
     nd.process_batch(_batch(spark, [("a0", BASE), ("a1", OTHER)]), 0)
     nd.process_batch(_batch(spark, [("b0", THIRD)]), 1)
     nd.process_batch(_batch(spark, [("b0", THIRD)]), 1)  # replay leftover
 
-    # the stream checkpoint has committed batches 0 and 1 -> upto_batch=2
-    compact_state(
-        spark, str(tmp_path / "state"), str(tmp_path / "compacted"), upto_batch=2
+    # the stream checkpoint has committed batches 0 and 1 -> upto_batch=2;
+    # compact a COPY of the root so the original stays uncompacted
+    shutil.copytree(tmp_path / "state", tmp_path / "compacted")
+    assert maybe_compact_state(
+        spark, str(tmp_path / "compacted"), upto_batch=2, min_batches=1
     )
-    sigs = spark.read.parquet(str(tmp_path / "compacted" / "sigs"))
+    sigs = spark.read.parquet(_state(spark, tmp_path / "compacted", "sigs"))
     assert sigs.count() == 3  # one row per id, replay deduped
     # one partition, rebadged to upto_batch-1 so any later probe sees it
     assert [r["_batch_id"] for r in sigs.select("_batch_id").distinct().collect()] == [1]
@@ -213,7 +255,8 @@ def test_compact_state_preserves_probe_results(spark, tmp_path):
     # probe above appended batch 5 to the original state, so with
     # upto_batch=1 only batch 0 is rebadged; 1 and 5 survive verbatim.
     compact_state(
-        spark, str(tmp_path / "state"), str(tmp_path / "c2"), upto_batch=1
+        spark, live_tree(spark, str(tmp_path / "state")), str(tmp_path / "c2"),
+        upto_batch=1,
     )
     s2 = spark.read.parquet(str(tmp_path / "c2" / "sigs"))
     assert {
@@ -302,7 +345,7 @@ def test_multi_family_incremental(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out" / "metrics")).collect()
     }
     assert fams == {"minhash", "simhash", "exact"}
-    assert spark.read.parquet(str(tmp_path / "state" / "simbands")).count() > 0
+    assert spark.read.parquet(_state(spark, tmp_path / "state", "simbands")).count() > 0
 
     # replay stays idempotent across all families (repr-keyed sort:
     # nullable jaccard_est/hamming make raw tuples unorderable)
@@ -403,7 +446,7 @@ def test_audio_family_incremental(spark, tmp_path):
     }
     assert got == exp and len(exp) > 0
     # state persisted for future batches; per-family metrics recorded
-    assert spark.read.parquet(str(tmp_path / "state" / "audiosigs")).count() > 0
+    assert spark.read.parquet(_state(spark, tmp_path / "state", "audiosigs")).count() > 0
     fams = {
         r["family"]
         for r in spark.read.parquet(str(tmp_path / "out" / "metrics")).collect()
@@ -455,7 +498,7 @@ def test_audio_only_stream_without_transcripts(spark, tmp_path):
     assert m.get("audio_decode_failures") == 1
     # no text state was written (no transcript column existed)
     import os
-    assert not os.path.exists(str(tmp_path / "state" / "sigs"))
+    assert not os.path.exists(_state(spark, tmp_path / "state", "sigs"))
 
 
 def test_history_probe_prunes_state_buckets(spark, tmp_path, monkeypatch):
@@ -482,7 +525,9 @@ def test_history_probe_prunes_state_buckets(spark, tmp_path, monkeypatch):
         for i in range(40)
     ]
     nd.process_batch(_batch(spark, hist_rows), 0)
-    bands_dir = tmp_path / "state" / "bands" / "_batch_id=0"
+    import pathlib
+
+    bands_dir = pathlib.Path(_state(spark, tmp_path / "state", "bands")) / "_batch_id=0"
     n_disk_buckets = len([d for d in os.listdir(bands_dir) if d.startswith("_kb=")])
     assert n_disk_buckets > 40  # history really is spread wide
 
@@ -668,9 +713,10 @@ def test_audio_snr_stage_missing_bytes_fail_open(spark, tmp_path):
 
 def test_maybe_compact_state_thresholds_and_swap(spark, tmp_path):
     """Operational compaction: below the batch threshold nothing
-    happens; above it the state is compacted out-of-place and atomically
-    swapped in — later probes read the compacted tree and find the same
-    dups (n_state_buckets marker survives the swap)."""
+    happens; above it the state is compacted into the next version and
+    CURRENT flips to it — later probes of the SAME handler (which
+    resolves the live tree per batch) read the compacted tree and find
+    the same dups (n_state_buckets marker survives the flip)."""
     from cc_net_spark.streaming.incremental_neardup import (
         maybe_compact_state,
     )
@@ -686,12 +732,11 @@ def test_maybe_compact_state_thresholds_and_swap(spark, tmp_path):
         spark, state, upto_batch=3, min_batches=5
     )  # below threshold: untouched
     assert maybe_compact_state(spark, state, upto_batch=3, min_batches=3)
-    sigs = spark.read.parquet(f"{state}/sigs")
+    sigs = spark.read.parquet(_state(spark, state, "sigs"))
     assert sigs.count() == 3
     assert [r["_batch_id"] for r in sigs.select("_batch_id").distinct().collect()] == [2]
     import os
-    assert not os.path.exists(state + "_compacting")
-    assert not os.path.exists(state + "_precompact")
+    assert sorted(n for n in os.listdir(state) if n.startswith("v")) == ["v1"]
 
     # the SAME handler keeps working against the swapped state
     nd.process_batch(_batch(spark, [("b0", BASE)]), 5)
@@ -727,7 +772,7 @@ def test_streaming_wrapper_auto_compacts(spark, tmp_path):
         _json.dumps({"clip_id": "b0", "transcript": BASE})
     )
     run_incremental_near_dup(*args, compact_min_batches=2)
-    sigs = spark.read.parquet(str(tmp_path / "state" / "sigs"))
+    sigs = spark.read.parquet(_state(spark, tmp_path / "state", "sigs"))
     # two batches accumulated -> compacted into ONE partition
     assert sigs.select("_batch_id").distinct().count() == 1
     assert sigs.count() == 4
@@ -736,55 +781,6 @@ def test_streaming_wrapper_auto_compacts(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out" / "flags")).collect()
     }
     assert flags == {"a0": False, "a1": False, "a2": False, "b0": True}
-
-
-def test_swap_crash_recovery_restores_live_state(spark, tmp_path):
-    """A compaction swap that crashes between its two renames leaves NO
-    live state tree (original parked at _precompact, half-written tree
-    at _compacting). A fresh handler must heal the swap before probing —
-    otherwise it would silently restart dedup history from empty."""
-    import shutil
-
-    from cc_net_spark.streaming.incremental_neardup import recover_state_swap
-
-    state = str(tmp_path / "state")
-    nd = IncrementalNearDup(state, str(tmp_path / "out"))
-    nd.process_batch(_batch(spark, [("a0", BASE)]), 0)
-    nd.process_batch(_batch(spark, [("a1", OTHER)]), 1)
-
-    # simulate the crash window: live tree renamed away, compacted tree
-    # incomplete (just a fragment dir)
-    shutil.move(state, state + "_precompact")
-    (tmp_path / "state_compacting" / "sigs").mkdir(parents=True)
-
-    healed = recover_state_swap(spark, state)
-    assert healed
-    import os
-
-    assert os.path.exists(f"{state}/sigs")
-    assert not os.path.exists(state + "_compacting")
-    assert not os.path.exists(state + "_precompact")
-
-    # a NEW handler (fresh lifetime) heals implicitly and still sees the
-    # restored history: b0 matches a0 across the recovered state
-    shutil.move(state, state + "_precompact")
-    nd2 = IncrementalNearDup(state, str(tmp_path / "out"))
-    nd2.process_batch(_batch(spark, [("b0", BASE)]), 2)
-    flags = {
-        r["clip_id"]: r["is_near_dup"]
-        for r in spark.read.parquet(str(tmp_path / "out" / "flags"))
-        .filter(F.col("_batch_id") == 2)
-        .collect()
-    }
-    assert flags == {"b0": True}
-
-    # crash AFTER the second rename (live tree is the complete compacted
-    # one, _precompact is a leftover): recovery just drops the leftover
-    shutil.copytree(state, state + "_precompact")
-    assert recover_state_swap(spark, state)
-    assert os.path.exists(f"{state}/sigs")
-    assert not os.path.exists(state + "_precompact")
-    assert not recover_state_swap(spark, state)  # idempotent no-op
 
 
 def test_embedding_family_incremental(spark, tmp_path):
@@ -898,18 +894,6 @@ def test_embedding_poison_vectors_are_metered_not_raised(spark):
         assert metrics["embedding_invalid_vectors"] == 3
 
 
-def test_swap_refuses_non_atomic_rename_schemes():
-    """The compaction swap protocol is only sound under atomic renames;
-    object-store schemes must be refused (a mid-rename crash there
-    leaves both trees partial — unrecoverable locally)."""
-    from cc_net_spark.streaming.incremental_neardup import _rename_is_atomic
-
-    for ok in (None, "file", "hdfs", "viewfs", "abfss"):
-        assert _rename_is_atomic(ok), ok
-    for bad in ("s3a", "s3", "gs", "wasb", "oss", "cos"):
-        assert not _rename_is_atomic(bad), bad
-
-
 def test_embedding_state_compacts_and_composes_with_text(spark, tmp_path):
     """The embedding family composes with a text family in one handler
     (separate state tables, shared flag surface), and compaction
@@ -937,7 +921,7 @@ def test_embedding_state_compacts_and_composes_with_text(spark, tmp_path):
     nd.process_batch(rows([("a2", THIRD, v2)]), 2)
     assert maybe_compact_state(spark, state, upto_batch=3, min_batches=3)
     # compacted embedding tables keep their bucketed layout
-    embsigs = spark.read.parquet(f"{state}/embsigs")
+    embsigs = spark.read.parquet(_state(spark, state, "embsigs"))
     assert embsigs.count() == 3
     assert "_kb" in embsigs.columns
 
@@ -967,42 +951,40 @@ def test_embedding_state_compacts_and_composes_with_text(spark, tmp_path):
 
 
 def test_pointer_state_compaction_flips_current(spark, tmp_path):
-    """The object-store-safe compaction path: the live tree is resolved
-    through <root>/CURRENT; compaction writes the next version and
-    commits by overwriting the one-line pointer (no directory renames).
-    Orphan trees from crashed attempts are reclaimed, and post-flip
-    probes still match pre-compaction history."""
-    from cc_net_spark.streaming.incremental_neardup import (
-        compact_state_pointer,
-        init_state_pointer,
-    )
+    """The state path is a pointer root: the live tree is resolved
+    through <root>/CURRENT (created on the first write — a reader alone
+    creates nothing); compaction writes the next version and commits by
+    overwriting the one-line pointer (no directory renames). Orphan
+    trees from crashed attempts are reclaimed, and post-flip probes of a
+    fresh handler still match pre-compaction history."""
+    import os
+
+    from cc_net_spark.streaming.incremental_neardup import maybe_compact_state
 
     root, out = str(tmp_path / "root"), str(tmp_path / "out")
-    live = init_state_pointer(spark, root)
-    assert live.endswith("/v0")
-    assert init_state_pointer(spark, root) == live  # idempotent resolve
-
-    nd = IncrementalNearDup(live, out)
+    assert live_tree(spark, root) is None
+    assert not os.path.exists(root)  # resolving created nothing
+    nd = IncrementalNearDup(root, out)
     for b, (cid, txt) in enumerate([("a0", BASE), ("a1", OTHER), ("a2", THIRD)]):
         nd.process_batch(_batch(spark, [(cid, txt)]), b)
+    assert live_tree(spark, root).endswith("/v0")
 
     # below threshold: nothing happens
-    assert not compact_state_pointer(spark, root, upto_batch=3, min_batches=5)
+    assert not maybe_compact_state(spark, root, upto_batch=3, min_batches=5)
     # a crashed previous attempt left an orphan version tree
     (tmp_path / "root" / "v1" / "junk").mkdir(parents=True)
-    assert compact_state_pointer(spark, root, upto_batch=3, min_batches=3)
-
-    import os
+    assert maybe_compact_state(spark, root, upto_batch=3, min_batches=3)
 
     assert (tmp_path / "root" / "CURRENT").read_text() == "v1"
     assert not os.path.exists(str(tmp_path / "root" / "v0"))
-    new_live = init_state_pointer(spark, root)
+    new_live = live_tree(spark, root)
+    assert not os.path.exists(f"{new_live}/junk")
     sigs = spark.read.parquet(f"{new_live}/sigs")
     assert sigs.count() == 3
     assert [r["_batch_id"] for r in sigs.select("_batch_id").distinct().collect()] == [2]
 
     # a fresh handler over the flipped tree still finds compacted history
-    nd2 = IncrementalNearDup(new_live, out)
+    nd2 = IncrementalNearDup(root, out)
     nd2.process_batch(_batch(spark, [("b0", BASE)]), 5)
     flags = {
         r["clip_id"]: r["is_near_dup"]
@@ -1014,9 +996,8 @@ def test_pointer_state_compaction_flips_current(spark, tmp_path):
 
 
 def test_streaming_wrapper_pointer_state(spark, tmp_path):
-    """pointer_state=True on the streaming wrapper: the live tree
-    resolves through <root>/CURRENT, auto-compaction flips the pointer,
-    and a later invocation resumes against the flipped tree."""
+    """The streaming wrapper's state is a pointer root: auto-compaction
+    flips CURRENT, and the flipped tree holds the compacted history."""
     import json as _json
 
     inp = tmp_path / "in"
@@ -1030,11 +1011,11 @@ def test_streaming_wrapper_pointer_state(spark, tmp_path):
         spark, str(inp), "clip_id string, transcript string",
         root, str(tmp_path / "out"), str(tmp_path / "ckpt"),
     )
-    run_incremental_near_dup(*args, compact_min_batches=2, pointer_state=True)
+    run_incremental_near_dup(*args, compact_min_batches=2)
     (inp / "s3.json").write_text(
         _json.dumps({"clip_id": "b0", "transcript": BASE})
     )
-    run_incremental_near_dup(*args, compact_min_batches=2, pointer_state=True)
+    run_incremental_near_dup(*args, compact_min_batches=2)
     cur = (tmp_path / "root" / "CURRENT").read_text()
     assert cur != "v0"  # at least one flip happened
     sigs = spark.read.parquet(f"{root}/{cur}/sigs")
@@ -1049,48 +1030,43 @@ def test_streaming_wrapper_pointer_state(spark, tmp_path):
 
 def test_pointer_mismatches_fail_loudly(spark, tmp_path):
     """Layout mismatches must never silently resolve to an empty tree:
-    a plain state tree refuses pointer-ization, a pointer root refuses
-    plain handler use and direct compact_state, a corrupt CURRENT
-    refuses to resolve, and a crashed pointer commit rolls forward."""
+    a plain (pre-pointer) state tree is refused with the move-to-v0
+    instruction, a pointer root refuses direct compact_state, a corrupt
+    CURRENT refuses to resolve, and a crashed pointer commit rolls
+    forward."""
+    import shutil
+
     import pytest
 
-    from cc_net_spark.streaming.incremental_neardup import (
-        compact_state,
-        init_state_pointer,
-    )
+    from cc_net_spark.streaming.incremental_neardup import compact_state
 
-    # plain tree -> pointer-izing would orphan history
-    plain = str(tmp_path / "plain")
-    nd = IncrementalNearDup(plain, str(tmp_path / "out"))
-    nd.process_batch(_batch(spark, [("a0", BASE)]), 0)
-    with pytest.raises(ValueError, match="plain"):
-        init_state_pointer(spark, plain)
-
-    # pointer root used as a plain state tree -> loud error
     root = str(tmp_path / "root")
-    live = init_state_pointer(spark, root)
-    nd2 = IncrementalNearDup(root, str(tmp_path / "out2"))
-    with pytest.raises(ValueError, match="pointer-managed"):
-        nd2.process_batch(_batch(spark, [("b0", BASE)]), 0)
-    # ... and direct compact_state on the root is refused too
-    with pytest.raises(ValueError, match="pointer-managed"):
+    nd = IncrementalNearDup(root, str(tmp_path / "out"))
+    nd.process_batch(_batch(spark, [("a0", BASE)]), 0)
+
+    # a plain tree (state tables directly under the path) -> refused
+    plain = str(tmp_path / "plain")
+    shutil.copytree(f"{root}/v0", plain)
+    with pytest.raises(ValueError, match="plain.*v0"):
+        IncrementalNearDup(plain, str(tmp_path / "out2")).process_batch(
+            _batch(spark, [("b0", BASE)]), 1
+        )
+    # a pointer root handed to the tree-level rewrite -> refused
+    with pytest.raises(ValueError, match="pointer root"):
         compact_state(spark, root, str(tmp_path / "x"), upto_batch=1)
-    # the resolved tree works
-    nd3 = IncrementalNearDup(live, str(tmp_path / "out2"))
-    nd3.process_batch(_batch(spark, [("b0", BASE)]), 0)
 
     # corrupt pointer -> refuse (never resolve to an empty tree)
     (tmp_path / "root" / "CURRENT").write_text("")
     with pytest.raises(ValueError, match="corrupt|expected"):
-        init_state_pointer(spark, root)
+        live_tree(spark, root)
     (tmp_path / "root" / "CURRENT").write_text("v0")
 
     # crashed commit window: CURRENT deleted, CURRENT.tmp written ->
-    # next resolve rolls the commit forward
+    # the next resolve rolls the commit forward
     (tmp_path / "root" / "CURRENT.tmp").write_text("v7")
     (tmp_path / "root" / "CURRENT").unlink()
     (tmp_path / "root" / "v7").mkdir()
-    assert init_state_pointer(spark, root).endswith("/v7")
+    assert live_tree(spark, root).endswith("/v7")
     assert (tmp_path / "root" / "CURRENT").read_text() == "v7"
 
 
@@ -1098,28 +1074,21 @@ def test_pointer_orphan_reclaimed_without_compaction(spark, tmp_path):
     """A crash after the pointer flip but before the old-tree delete
     must not leak a full state copy until the NEXT compaction: the
     orphan sweep runs even when the size guard then returns False."""
-    from cc_net_spark.streaming.incremental_neardup import (
-        compact_state_pointer,
-        init_state_pointer,
-    )
-
-    root = str(tmp_path / "root")
-    live = init_state_pointer(spark, root)
-    nd = IncrementalNearDup(live, str(tmp_path / "out"))
-    nd.process_batch(_batch(spark, [("a0", BASE)]), 0)
-    # simulate: flip happened (CURRENT=v1 with state moved), old v0 left
+    import os
     import shutil
 
-    from cc_net_spark.sources.hadoop_fs import write_small_text
+    from cc_net_spark.sources.hadoop_fs import commit_small_text
+    from cc_net_spark.streaming.incremental_neardup import maybe_compact_state
 
+    root = str(tmp_path / "root")
+    nd = IncrementalNearDup(root, str(tmp_path / "out"))
+    nd.process_batch(_batch(spark, [("a0", BASE)]), 0)
+    live = live_tree(spark, root)
+    # simulate: flip happened (CURRENT=v1 with state moved), old v0 left
     shutil.copytree(live, str(tmp_path / "root" / "v1"))
-    # flip via the Hadoop writer (a raw pathlib overwrite would leave a
-    # stale .CURRENT.crc behind on the checksummed local FS)
-    write_small_text(spark, f"{root}/CURRENT", "v1")
+    commit_small_text(spark, f"{root}/CURRENT", "v1")
 
-    import os
-
-    assert not compact_state_pointer(spark, root, upto_batch=1, min_batches=99)
+    assert not maybe_compact_state(spark, root, upto_batch=1, min_batches=99)
     assert not os.path.exists(live)  # orphan reclaimed despite no compaction
     assert os.path.exists(str(tmp_path / "root" / "v1" / "sigs"))
 
@@ -1149,7 +1118,7 @@ def test_kbs_thread_error_propagates(spark, tmp_path, monkeypatch):
     # the failed batch wrote no state (crash contract: state appends last)
     import os
 
-    assert not os.path.exists(str(tmp_path / "state" / "sigs"))
+    assert not os.path.exists(_state(spark, tmp_path / "state", "sigs"))
 
 
 def test_small_batch_mode_is_plan_only(spark, tmp_path):
@@ -1204,8 +1173,8 @@ def test_mismatched_state_format_is_rejected(spark, tmp_path):
 
     nd = IncrementalNearDup(str(tmp_path / "state"), str(tmp_path / "out"))
     nd.process_batch(_batch(spark, [("a0", BASE)]), 0)
-    marker = str(tmp_path / "state" / "meta" / "meta.json")
-    meta = json.loads((tmp_path / "state" / "meta" / "meta.json").read_text())
+    marker = _state(spark, tmp_path / "state", "meta/meta.json")
+    meta = json.loads(open(marker).read())
     assert meta["state_format"] == STATE_FORMAT
 
     # pin an older format into the marker: a fresh handler must refuse
@@ -1255,12 +1224,13 @@ def test_wide_batch_rowgroup_skipping_on_compacted_state(spark, tmp_path):
         for i in range(600)
     ]
     nd.process_batch(_batch(spark, hist_rows), 0)
+    live = live_tree(spark, state)
     compacted = str(tmp_path / "state_compacted")
     compact_state(
-        spark, state, compacted, upto_batch=1, row_group_bytes=4 * 1024
+        spark, live, compacted, upto_batch=1, row_group_bytes=4 * 1024
     )
-    shutil.rmtree(state)
-    shutil.move(compacted, state)
+    shutil.rmtree(live)
+    shutil.move(compacted, live)
 
     # the probe: 2 history texts re-arriving under new ids — their band
     # keys hash into EVERY bucket (wide), but the key set is tiny
@@ -1283,7 +1253,9 @@ def test_wide_batch_rowgroup_skipping_on_compacted_state(spark, tmp_path):
         for r in lsh_bands(probe_sig, "clip_id", bands=32, rows_per_band=4)
         .select("key").distinct().collect()
     }
-    bands_dir = tmp_path / "state" / "bands" / "_batch_id=0"
+    import pathlib
+
+    bands_dir = pathlib.Path(_state(spark, tmp_path / "state", "bands")) / "_batch_id=0"
     total_bytes = hit_bytes = n_groups = 0
     for f in bands_dir.rglob("*.parquet"):
         md = pq.ParquetFile(str(f)).metadata
@@ -1306,7 +1278,9 @@ def test_wide_batch_rowgroup_skipping_on_compacted_state(spark, tmp_path):
     assert n_groups >= 8, n_groups  # row_group_bytes really split groups
     assert 0 < hit_bytes < total_bytes, (hit_bytes, total_bytes)
 
-    # (b) the pushed filter reaches the scan
+    # (b) the pushed filter reaches the scan (a fresh handler binds its
+    # state paths per batch; bind the live tree for this direct read)
+    nd2._bind(live)
     h = nd2._history(
         spark, nd2.bands_path, 1, [0, 1, 2, 3],
         key_in=("key", sorted(probe_keys)),

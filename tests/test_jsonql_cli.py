@@ -158,7 +158,11 @@ def test_module_cli_neardup_end_to_end(spark, tmp_path):
     assert flags == {"a0": False, "a1": False, "b0": True}
 
     mod_main(["neardup", "--state", str(tmp_path / "state"), "--compact-upto", "2"])
-    sigs = spark.read.parquet(str(tmp_path / "state_compacted" / "sigs"))
+    from cc_net_spark.sources.hadoop_fs import live_tree
+
+    live = live_tree(spark, str(tmp_path / "state"))
+    assert live.endswith("/v1")  # compacted in place: CURRENT flipped
+    sigs = spark.read.parquet(f"{live}/sigs")
     assert sigs.count() == 3
     assert sigs.select("_batch_id").distinct().count() == 1
 

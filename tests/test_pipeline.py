@@ -445,3 +445,22 @@ def test_validate_ids_observe_records_manifest_metric(spark, clips_path, tmp_pat
     )
     v = m["signatures"]["metrics"]["id_validation"]
     assert v == {"n_ids": N, "null_ids": 0}
+
+
+def test_pipeline_estimated_jaccard_path(spark, tmp_path):
+    """keep_shingles=False (extreme-scale config): signature-estimated
+    Jaccard verification yields the same planted clusters."""
+    from cc_net_spark.plans.pipeline import NearDupConfig, run_near_dup_pipeline
+    from cc_net_spark.sources import synth
+
+    n = 64
+    p = tmp_path / "clips.parquet"
+    synth.generate_clips(spark, n, seed=42, with_audio=False).write.parquet(str(p))
+    cfg = NearDupConfig(include_exact_hashes=False, keep_shingles=False)
+    clusters, _ = run_near_dup_pipeline(spark, str(p), str(tmp_path / "w"), cfg)
+    got = {r["clip_id"]: r["cluster_id"] for r in clusters.collect()}
+    exp = {
+        r["clip_id"]: r["cluster_id"]
+        for r in synth.expected_clusters(spark, n).collect()
+    }
+    assert got == exp
