@@ -40,6 +40,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 import cc_net_spark.sources.hadoop_fs as hfs
+from cc_net_spark.session import DriverThreads
 
 
 def _footer_stats_digest(md) -> str:
@@ -305,17 +306,15 @@ class StageRunner:
         Stages run level by level (a level = every stage whose in-list
         inputs are committed). A level with one stage to run, or any
         level when ``max_parallel == 1``, runs inline on the caller's
-        thread, in list order, so its jobs keep the caller's job group.
-        ``max_parallel > 1`` runs the stages of a wider level (e.g. the
-        four pair families that all read only the signatures table)
-        concurrently from driver threads: Spark's scheduler interleaves
-        their jobs across the executor slots, so the per-stage
-        driver-side barriers (planning, commit, footer scan) overlap
-        instead of summing. Results and manifests are identical either
-        way (stage outputs are independent files; each level is a
+        thread, in list order. ``max_parallel > 1`` runs the stages of a
+        wider level (e.g. the four pair families that all read only the
+        signatures table) concurrently from driver threads that carry
+        the caller's job group (``DriverThreads``): Spark's scheduler
+        interleaves their jobs across the executor slots, so the
+        per-stage driver-side barriers (planning, commit, footer scan)
+        overlap instead of summing. Results and manifests are identical
+        either way (stage outputs are independent files; each level is a
         barrier)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         # fresh external fingerprints and manifests per run(): resume
         # across separate run() calls must still observe source-table
         # changes and commits made by another runner
@@ -343,10 +342,12 @@ class StageRunner:
                 else:
                     todo.append(st)
             if len(todo) > 1 and max_parallel > 1:
-                with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-                    futs = {st.name: pool.submit(self._run_one, st) for st in todo}
-                    for name, fut in futs.items():
-                        results[name] = fut.result()
+                done = DriverThreads(
+                    self.spark,
+                    [lambda st=st: self._run_one(st) for st in todo],
+                    max_workers=max_parallel,
+                ).join()
+                results.update((st.name, m) for st, m in zip(todo, done))
             else:
                 for st in todo:
                     results[st.name] = self._run_one(st)

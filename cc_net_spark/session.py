@@ -9,7 +9,10 @@ reference's equivalent knobs were a multiprocessing pool size and fixed
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable, Iterable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -136,3 +139,62 @@ def warm_planner(spark: SparkSession) -> None:
     except Exception:
         pass  # warm-up is best-effort; never fail session construction
     spark._cc_net_planner_warm = True
+
+
+class DriverThreads:
+    """Run thunks on daemon driver threads that carry the caller's Spark
+    local properties (job group, job description, scheduler pool) and
+    tags, copied through ``inheritable_thread_target`` when the threads
+    are made. A plain thread starts with none of them, so its jobs would
+    fall out of the caller's job group.
+
+    ``max_workers`` threads (default: one per thunk) take the thunks in
+    order. Each thread ends after the last thunk, so a caller that raises
+    before ``join`` leaks no thread."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        thunks: Iterable[Callable[[], Any]],
+        max_workers: int | None = None,
+    ):
+        self._todo = list(enumerate(thunks))
+        self._results: list = [None] * len(self._todo)
+        self._errors: dict[int, BaseException] = {}
+        self._lock = threading.Lock()
+        n = min(max_workers or len(self._todo), len(self._todo))
+        self._threads = [
+            threading.Thread(target=self._carrying(spark), daemon=True)
+            for _ in range(n)
+        ]
+        for t in self._threads:
+            t.start()
+
+    def _carrying(self, spark: SparkSession) -> Callable[[], None]:
+        # one copy of the properties per thread: Spark SQL sets its
+        # execution id in them, so threads sharing one copy would clash
+        wrap = inheritable_thread_target(spark)
+        # pinned-thread mode off (PYSPARK_PIN_THREAD=false): driver threads
+        # share JVM threads, there are no per-thread properties to carry,
+        # and the call hands the session back
+        return self._work if wrap is spark else wrap(self._work)
+
+    def _work(self) -> None:
+        while True:
+            with self._lock:
+                if not self._todo:
+                    return
+                i, thunk = self._todo.pop(0)
+            try:
+                self._results[i] = thunk()
+            except BaseException as e:  # re-raised by join()
+                self._errors[i] = e
+
+    def join(self) -> list:
+        """Wait for every thunk; return their results in order, or raise
+        the error of the first thunk that failed."""
+        for t in self._threads:
+            t.join()
+        if self._errors:
+            raise self._errors[min(self._errors)]
+        return self._results

@@ -66,6 +66,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from cc_net_spark.operators.connected_components import connected_components
+from cc_net_spark.session import DriverThreads
 import cc_net_spark.sources.hadoop_fs as hfs
 from cc_net_spark.sources.hadoop_fs import (
     commit_small_text,
@@ -79,7 +80,6 @@ from cc_net_spark.streaming.incremental_neardup import (
     _conf_overrides,
     _join_path,
     _read_optional,
-    _run_parallel,
 )
 
 CLUSTER_STATE_FORMAT = 1
@@ -450,10 +450,10 @@ class IncrementalClusters:
                 .parquet(_join_path(path, f"_batch_id={batch_id}"))
             )
 
-        _run_parallel([
+        DriverThreads(spark, [
             lambda: write_state(cassign_rows, self.cassign_path, idc),
             lambda: write_state(calias_rows, self.calias_path, "old_root"),
-        ])
+        ]).join()
 
     # -- reads --------------------------------------------------------------
 

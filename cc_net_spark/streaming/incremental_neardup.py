@@ -6,12 +6,11 @@ module keeps the MinHash/LSH state — signatures and band keys — in
 append-only ``_batch_id``-partitioned tables (the same replay-idempotent
 layout as ``streaming/incremental.py``) and, per micro-batch:
 
-1. ONE narrow mapInPandas computes the batch's fused signatures —
-   MinHash sig, SimHash, exact full-text key from one normalization
-   pass (``keep_shingles=False`` — the extreme-scale mode: history text
-   is NEVER re-read; MinHash verification uses signature-estimated
-   Jaccard, SimHash verification is JVM bit_count Hamming, the exact
-   family needs no verification),
+1. each enabled signature source signs the batch in ONE pass: the
+   fused text signatures (MinHash sig, SimHash, exact full-text key
+   from one normalization pass; ``keep_shingles=False`` — the
+   extreme-scale mode: history text is NEVER re-read), the audio
+   fingerprint, the embedding hyperplane signature,
 2. within-batch candidates via the skew-capped bucket self-join,
 3. history candidates via an asymmetric probe: the batch's band keys
    (hot buckets > bucket_cap excluded — the same boilerplate discipline
@@ -24,15 +23,18 @@ layout as ``streaming/incremental.py``) and, per micro-batch:
 
    and the history IO itself PRUNES: every state table is written
    hive-partitioned by ``_batch_id`` AND a key-hash bucket ``_kb``
-   (bands/simbands by (band, key), exactkeys by tkey, audiowords by
-   word, sigs/audiosigs by id), and every history read filters on the
-   batch's collected bucket set — partition pruning skips all
-   non-matching bucket directories, so per-batch state IO is bounded
-   by the batch's key spread, never the corpus (at 10^12-row state a
-   full scan per arriving shard would dwarf the capped compute),
-4. both candidate sets verify on estimated Jaccard (agreeing-minhash
-   fraction) — batch sigs are in memory, history sigs join on the
-   (few) matched ids,
+   (a family's key table by its keys, a signature table by id), and
+   every history read filters on the batch's collected bucket set —
+   partition pruning skips all non-matching bucket directories, so
+   per-batch state IO is bounded by the batch's key spread, never the
+   corpus (at 10^12-row state a full scan per arriving shard would
+   dwarf the capped compute),
+4. each family verifies both candidate sets its own way, on values
+   its signature table holds: MinHash on estimated Jaccard (the
+   agreeing-minhash fraction), SimHash on Hamming distance, audio on
+   word-set Jaccard plus sketch Hamming, embedding on exact cosine;
+   exact pairs need no verify. Batch values are in memory, history
+   values join on the (few) matched ids,
 5. outputs (verified pairs + per-clip dup flags) and state appends are
    written with dynamic partition overwrite keyed by ``_batch_id`` —
    at-least-once foreachBatch replay rewrites only its own partitions,
@@ -45,6 +47,10 @@ id already ingested), or a smaller id within its own batch. Reference anchor: cc
 (``cc_net/dedup.py:92-124``) generalized from exact SHA1 paragraphs to
 MinHash near-duplicates.
 
+The families are definitions (``SigSource``, ``Family``) that one path
+runs; the list of state tables, compaction and the re-delivery check
+derive from them.
+
 The state path is a POINTER ROOT (``sources/hadoop_fs.py``): the live
 tree is ``<root>/v<N>``, named by ``<root>/CURRENT`` and resolved at the
 start of every batch; ``maybe_compact_state`` writes the next version
@@ -53,11 +59,20 @@ out of place and flips ``CURRENT`` — no directory is ever renamed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import threading
+from collections import Counter
+from dataclasses import dataclass
+from functools import partial, reduce
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cc_net_spark.operators.minhash import lsh_bands
+from cc_net_spark.multimodal.audio import audio_signatures
+from cc_net_spark.operators import minhash as mh
+from cc_net_spark.operators import simhash as sh
+from cc_net_spark.operators.ann import hyperplane_bands, hyperplane_signatures
 from cc_net_spark.operators.pairs import candidate_pairs
 from cc_net_spark.operators.signatures import fused_signatures
 from cc_net_spark.sources.hadoop_fs import (
@@ -67,8 +82,7 @@ from cc_net_spark.sources.hadoop_fs import (
     publish_next,
     read_committed,
 )
-
-FAMILIES = ("minhash", "simhash", "exact", "audio", "embedding")
+from cc_net_spark.session import DriverThreads
 
 # On-disk state format version, pinned in meta/meta.json. Bump whenever a
 # persisted encoding changes incompatibly. History:
@@ -142,20 +156,6 @@ def _join_path(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-def _run_parallel(thunks) -> list:
-    """Run independent Spark jobs concurrently from driver threads.
-    Spark's scheduler interleaves them across the executor slots; a
-    failure in any job propagates (results are re-raised in order)."""
-    thunks = list(thunks)
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futs]
-
-
 def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a parquet dir that may not exist yet, or hold no data file
     (only ``_SUCCESS`` markers) — None then. The decision is one Hadoop
@@ -178,6 +178,238 @@ def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
         ):
             return spark.read.parquet(path)
     return None
+
+
+@dataclass(frozen=True)
+class SigSource:
+    """A per-clip signature table of the batch: the values its families
+    verify on, persisted to the id-bucketed state table ``table``."""
+
+    table: str
+    # (handler, batch) -> one signature row per id, the id cast to string
+    sign: Callable[[IncrementalNearDup, DataFrame], DataFrame]
+    # persisted columns after the id
+    columns: tuple[str, ...]
+    # (handler) -> ok predicate over the batch rows: failing rows are
+    # dropped before signing (a poison row would crash the kernel)
+    valid: Callable[[IncrementalNearDup], Column] | None = None
+    # (handler) -> ok predicate over the signature rows: failing rows
+    # stay in state, and every read of the table skips them
+    ok: Callable[[IncrementalNearDup], Column] | None = None
+    # the metrics row counting the rows failing either — counted, never
+    # raised: a foreachBatch crash would replay into itself forever
+    bad_metric: str | None = None
+
+
+@dataclass(frozen=True)
+class Family:
+    """A near-dup family: key rows bucketed into the state table
+    ``table``, probed within the batch and against history, verified on
+    values of its source."""
+
+    name: str  # its metrics row
+    source: SigSource
+    table: str
+    keys: tuple[str, ...]  # the last one is the probe key
+    # (handler, usable signature rows) -> (id, *keys), one row each
+    key_rows: Callable[[IncrementalNearDup, DataFrame], DataFrame]
+    kinds: tuple[str, str]  # within, history
+    # source columns the verify reads, as <col>_a and <col>_b
+    values: tuple[str, ...] = ()
+    # the verify: SQL over the pair row, formatted with the handler's
+    # attributes (its thresholds)
+    jaccard: str = "CAST(NULL AS DOUBLE)"
+    hamming: str = "CAST(NULL AS INT)"
+    keep: str | None = None
+    # (handler, spark, verified parts, batch, metric rows) -> parts
+    post_verify: Callable | None = None
+    # (handler, spark, key rows, keys, state path, batch_id) -> (within,
+    # cross, metrics); None runs IncrementalNearDup._family_candidates,
+    # the capped bucket probe
+    candidates: Callable | None = None
+
+
+class _Signed(NamedTuple):
+    rows: DataFrame  # the batch's signature rows, as persisted
+    good: DataFrame  # the usable ones: key rows and verify values
+    ids: DataFrame  # every batch id (the flags' bucket collect)
+    n_bad: int
+
+
+def _exact_candidates(
+    nd: IncrementalNearDup, spark: SparkSession, tkeys: DataFrame,
+    _keys: list[str], path: str, batch_id: int,
+):
+    """The exact family is CAP-FREE: key equality fully determines the
+    cluster, so no pairwise enumeration is needed — each dup is paired
+    with its KEEP-FIRST representative (min id in the batch, or min
+    matching history id). A flood of N identical texts costs O(N), and
+    — unlike an LSH family — every copy is flagged (the cap rationale
+    "boilerplate that exact dedup handles" must not apply to exact
+    dedup itself). The pairs need no verify."""
+    idc = nd.id_col
+    within_rep = tkeys.groupBy("tkey").agg(F.min(idc).alias("_rep"))
+    within = (
+        tkeys.join(within_rep, "tkey")
+        .filter(F.col(idc) != F.col("_rep"))
+        .select(F.col("_rep").alias("id_a"), F.col(idc).alias("id_b"))
+    )
+    n_keys_row = within_rep.agg(F.count(F.lit(1))).first()
+    # history probe over the tkey-bucketed exactkeys state: the read
+    # prunes to the batch's tkey buckets, the broadcast semijoin then
+    # narrows to exactly the batch's keys — the min-id representative is
+    # computed over matching keys only, never a corpus-wide groupBy
+    hist_ek = nd._hist_by_key(spark, path, batch_id, tkeys, "tkey")
+    cross = None
+    if hist_ek is not None:
+        batch_tkeys = tkeys.select("tkey").distinct()
+        hist_rep = (
+            hist_ek.join(F.broadcast(batch_tkeys), "tkey")
+            .groupBy("tkey")
+            .agg(F.min(idc).alias("_hrep"))
+        )
+        cross = (
+            tkeys.join(hist_rep, "tkey")
+            .filter(F.col(idc) != F.col("_hrep"))
+            .select(F.col(idc).alias("id_a"), F.col("_hrep").alias("id_b"))
+        )
+    return within, cross, (int(n_keys_row[0] or 0), 0, 0)
+
+
+TEXT = SigSource(
+    "sigs",
+    # ONE fused scan per batch: minhash sig + simhash + exact tkey from
+    # one normalization pass (operators/signatures.py); grams skipped —
+    # no substring family (see the class doc)
+    lambda nd, batch: fused_signatures(
+        batch, nd.text_col, nd.id_col, shingle_size=nd.shingle_size,
+        num_perm=nd.num_perm, keep_shingles=False, with_grams=False,
+    ),
+    ("n_shingles", "sig", "simhash", "tkey"),
+)
+AUDIO = SigSource(
+    "audiosigs",
+    # one decode pass -> per-clip (decode_ok, words, sketch); the compact
+    # one-row-per-clip table IS the persisted state
+    lambda nd, batch: audio_signatures(batch, nd.id_col),
+    ("decode_ok", "words", "sketch"),
+    ok=lambda nd: F.col("decode_ok"),
+    bad_metric="audio_decode_failures",
+)
+EMBEDDING = SigSource(
+    "embsigs",
+    # one Arrow pass computes the sign-bit signature AND carries the
+    # float64 vector through (keep_vec) — the (sig, vector) row IS the
+    # persisted state, so history vectors are never re-read from the
+    # corpus (the embedding analogue of keep_shingles=False)
+    lambda nd, batch: hyperplane_signatures(
+        batch.withColumn(nd.id_col, F.col(nd.id_col).cast("string")),
+        id_col=nd.id_col, vec_col=nd.emb_col, dim=nd.emb_dim,
+        n_bits=nd.emb_n_bits, seed=nd.emb_seed, keep_vec=True,
+    ),
+    ("sig", "v"),
+    # a null vector, a wrong-length vector, or a vector with null
+    # elements would crash the Arrow kernel's dense matmul; such rows
+    # still receive a (non-dup) flag row
+    valid=lambda nd: (
+        F.col(nd.emb_col).isNotNull()
+        & (F.size(nd.emb_col) == nd.emb_dim)
+        & ~F.exists(nd.emb_col, lambda x: x.isNull())
+    ),
+    bad_metric="embedding_invalid_vectors",
+)
+# in flags priority: the ids' bucket collect reads the first enabled one
+SOURCES = (TEXT, AUDIO, EMBEDDING)
+
+# exact cosine, the formula of operators/ann._cosine
+_NORM_A, _NORM_B = (
+    f"sqrt(aggregate({v}, 0D, (acc, x) -> acc + x * x))" for v in ("v_a", "v_b")
+)
+_COSINE = (
+    f"CASE WHEN {_NORM_A} > 0 AND {_NORM_B} > 0 THEN"
+    " aggregate(zip_with(v_a, v_b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+    f" / ({_NORM_A} * {_NORM_B}) ELSE 0D END"
+)
+
+
+def _band_rows(nd: IncrementalNearDup, sig: DataFrame, structs: list[str]) -> DataFrame:
+    """(id, band, key) rows from the SQL band structs the batch
+    ``TextFamily`` definitions bucket on (operators/families.py)."""
+    return sig.selectExpr(f"`{nd.id_col}`", f"inline(array({', '.join(structs)}))")
+
+
+_FAMILIES = (
+    Family(
+        "minhash", TEXT, "bands", ("band", "key"),
+        lambda nd, sig: _band_rows(nd, sig, mh.band_structs(nd.bands, nd.rows_per_band)),
+        ("within", "history"),
+        values=("sig",),
+        # estimated Jaccard: the fraction of agreeing minhash slots
+        jaccard="round(CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
+        " v -> v)) AS DOUBLE) / CAST(size(sig_a) AS DOUBLE), 6)",
+        keep="jaccard_est >= {threshold}D",
+    ),
+    Family(
+        "simhash", TEXT, "simbands", ("band", "key"),
+        lambda nd, sig: _band_rows(nd, sig, sh.band_structs(nd.max_hamming)),
+        ("simhash_within", "simhash_history"),
+        values=("simhash",),
+        hamming="CAST(bit_count(simhash_a ^ simhash_b) AS INT)",
+        keep="hamming <= {max_hamming}",
+    ),
+    Family(
+        "exact", TEXT, "exactkeys", ("tkey",),
+        lambda nd, sig: sig.select(nd.id_col, "tkey"),
+        ("exact_within", "exact_history"),
+        jaccard="1.0D",
+        hamming="0",
+        candidates=_exact_candidates,
+    ),
+    Family(
+        "audio", AUDIO, "audiowords", ("word",),
+        # the exploded (id, word) rows are their own word-bucketed state
+        # table — the probe prunes on word buckets, which a
+        # one-row-per-clip array table cannot offer
+        lambda nd, asig: asig.select(nd.id_col, F.explode("words").alias("word")),
+        ("audio_within", "audio_history"),
+        values=("words", "sketch"),
+        # word-set Jaccard (recall signal) AND waveform-sketch Hamming
+        # (collision discriminator — distinct stationary signals can
+        # share every coarse occupancy word); history audio bytes are
+        # never re-decoded
+        jaccard="round(CAST(size(array_intersect(words_a, words_b)) AS DOUBLE)"
+        " / CAST(size(array_union(words_a, words_b)) AS DOUBLE), 6)",
+        hamming="CAST(bit_count(sketch_a ^ sketch_b) AS INT)",
+        keep="jaccard_est >= {audio_threshold}D AND hamming <= {audio_max_hamming}",
+        post_verify=lambda nd, *args: nd._audio_snr_stage(*args),
+    ),
+    Family(
+        "embedding", EMBEDDING, "embbands", ("band", "key"),
+        lambda nd, esig: hyperplane_bands(
+            esig, nd.id_col, n_bits=nd.emb_n_bits, bands=nd.emb_bands
+        ),
+        ("embedding_within", "embedding_history"),
+        values=("v",),
+        # EXACT cosine over the state vectors; the score rides the
+        # jaccard_est column — the pairs schema is a fixed on-disk
+        # contract, and both are [0, 1] "how similar" verdict scores
+        # (threshold-filtered, so a negative cosine never lands in the
+        # table)
+        jaccard=f"round({_COSINE}, 6)",
+        keep="jaccard_est >= {emb_threshold}D",
+    ),
+)
+FAMILIES = tuple(f.name for f in _FAMILIES)
+
+
+def _state_tables(id_col: str) -> dict[str, list[str]]:
+    """Every state table and its row key; a source's table comes ahead
+    of the first family that reads it."""
+    tables: dict[str, list[str]] = {}
+    for f in _FAMILIES:
+        tables.setdefault(f.source.table, [id_col])
+        tables[f.table] = [id_col, *f.keys]
+    return tables
 
 
 class IncrementalNearDup:
@@ -213,9 +445,10 @@ class IncrementalNearDup:
     computed and persisted regardless of the enabled family set — a
     deliberate trade: the marginal compute rides the one fused scan, and
     it means a family enabled LATER probes existing state without ever
-    re-reading history text. State/metrics schemas are v1, finalized
-    with the multi-family change; altering them later requires
-    rewriting old partitions (or mergeSchema-aware readers) first."""
+    re-reading history text. The state encoding is ``STATE_FORMAT``
+    (pinned in ``meta/meta.json``; a mismatch is refused), and the
+    metrics schema is fixed: altering either requires rewriting old
+    partitions (or mergeSchema-aware readers) first."""
 
     def __init__(
         self,
@@ -308,21 +541,16 @@ class IncrementalNearDup:
         # Locked: family sections probe state from concurrent driver
         # threads (two sections share e.g. the sigs table)
         self._read_cache: dict[str, DataFrame | None] = {}
-        import threading
-
         self._read_lock = threading.Lock()
 
     def _bind(self, live: str) -> None:
-        """Point the state-table paths at the live tree ``live``."""
-        self.sigs_path = _join_path(live, "sigs")
-        self.bands_path = _join_path(live, "bands")
-        self.simbands_path = _join_path(live, "simbands")
-        self.exactkeys_path = _join_path(live, "exactkeys")
-        self.audiosigs_path = _join_path(live, "audiosigs")
-        self.audiowords_path = _join_path(live, "audiowords")
-        self.embsigs_path = _join_path(live, "embsigs")
-        self.embbands_path = _join_path(live, "embbands")
-        self.meta_path = _join_path(live, "meta")
+        """Point the state-table paths (``<table>_path``) at the live
+        tree ``live``."""
+        for table in (*_state_tables(self.id_col), "meta"):
+            setattr(self, f"{table}_path", _join_path(live, table))
+
+    def _path(self, table: str) -> str:
+        return getattr(self, f"{table}_path")
 
     def _open_state(self, spark: SparkSession) -> None:
         """Resolve the live state tree — per batch, never cached: a
@@ -401,23 +629,24 @@ class IncrementalNearDup:
             out = out.filter(F.col(key_in[0]).isin(key_in[1]))
         return out
 
-    def _hist_by_id(
-        self, spark: SparkSession, path: str, before: int, ids: DataFrame, idc: str
+    def _hist_by_key(
+        self, spark: SparkSession, path: str, before: int, keys: DataFrame, col: str
     ) -> DataFrame | None:
-        """Pruned read of an id-bucketed state table (sigs/audiosigs)
-        restricted to the buckets containing ``ids`` — and, when the
+        """Pruned read of a state table bucketed on the one column
+        ``col`` (the signature tables by id, exactkeys by tkey)
+        restricted to the buckets containing ``keys`` — and, when the
         bucket set has degenerated to (nearly) the whole directory tree,
-        to the literal ids via the pushed row-group filter. The key
+        to the literal keys via the pushed row-group filter. The key
         collect is paid ONLY in that wide case: a narrow shard is
         already served by directory pruning, and the common small-batch
         path stays at its old job count."""
-        kbs = self._bucket_ids(ids, [idc])
+        kbs = self._bucket_ids(keys, [col])
         key_vals = (
-            self._collect_key_values(ids, idc)
+            self._collect_key_values(keys, col)
             if len(kbs) * 2 >= self.n_state_buckets
             else None
         )
-        return self._history(spark, path, before, kbs, key_in=(idc, key_vals))
+        return self._history(spark, path, before, kbs, key_in=(col, key_vals))
 
     def _check_meta(self, spark: SparkSession) -> None:
         """``n_state_buckets`` is baked into the on-disk layout; probing
@@ -483,16 +712,6 @@ class IncrementalNearDup:
                 }),
             )
         self._meta_checked = True
-
-    def _estimated(self, joined: DataFrame) -> DataFrame:
-        agree = F.size(
-            F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v)
-        )
-        est = agree.cast("double") / F.size("_sa").cast("double")
-        return (
-            joined.withColumn("jaccard_est", F.round(est, 6))
-            .filter(F.col("jaccard_est") >= self.threshold)
-        )
 
     def _family_candidates(
         self,
@@ -568,55 +787,109 @@ class IncrementalNearDup:
             )
         return within, cross, (int(n_buckets or 0), int(n_hot or 0), int(n_hot_rows or 0))
 
-    @staticmethod
-    def _first_matching(
-        hist: DataFrame, ids: DataFrame, idc: str
+    def _fetch(
+        self, pairs: DataFrame, vals: DataFrame, hist: DataFrame | None,
+        cross: bool, cols: tuple[str, ...],
     ) -> DataFrame:
-        """Restrict a multi-partition history table to the given ids and
-        keep ONE row per id — the EARLIEST batch (keep-first). A clip
-        re-delivered across several earlier batches appears once per
-        batch in state; without this, each candidate would fan out into
-        duplicate pair rows. Bounded: the window runs only over the
-        semi-joined matches, never the whole history."""
-        matched = hist.join(ids, idc, "leftsemi")
-        w = Window.partitionBy(idc).orderBy("_batch_id")
-        return (
-            matched.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    def _fetch(self, pairs: DataFrame, new_vals: DataFrame,
-               hist_vals: DataFrame | None, cross: bool) -> DataFrame:
-        """Join a candidate table to its verification values: id_a always
-        from the batch; id_b from history (earliest row per id) for
-        cross pairs. ``hist_vals`` must carry ``_batch_id``."""
-        idc = new_vals.columns[0]
-        a = new_vals.withColumnRenamed("_v", "_va").withColumnRenamed(idc, "id_a")
+        """Join a candidate table to its verification values ``cols``,
+        as ``<col>_a`` and ``<col>_b``: id_a always from the batch
+        (``vals``); id_b from ``hist`` for cross pairs, restricted to
+        the matched ids with ONE row per id — the EARLIEST batch
+        (keep-first). A clip re-delivered across several earlier batches
+        appears once per batch in state; without this, each candidate
+        would fan out into duplicate pair rows. Bounded: the window runs
+        only over the semi-joined matches, never the whole history."""
+        idc = self.id_col
+        b_src = vals
         if cross:
             ids = pairs.select(F.col("id_b").alias(idc)).distinct()
-            b_src = self._first_matching(hist_vals, ids, idc).drop("_batch_id")
-        else:
-            b_src = new_vals
-        b = b_src.withColumnRenamed("_v", "_vb").withColumnRenamed(idc, "id_b")
-        return pairs.join(a, "id_a").join(b, "id_b")
+            w = Window.partitionBy(idc).orderBy("_batch_id")
+            b_src = (
+                hist.join(ids, idc, "leftsemi")
+                .withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+            )
 
-    def _hist_vals(
-        self, spark: SparkSession, cross: DataFrame | None, batch_id: int,
-        col: str, path: str | None = None,
-    ) -> DataFrame | None:
-        """Verification values for a cross candidate set: the signature
-        state read (``path``, default the fused text sigs) pruned to the
-        buckets holding the matched history ids (the cross side is
-        checkpointed and capped — the collect is tiny)."""
-        if cross is None:
-            return None
+        def side(df: DataFrame, s: str) -> DataFrame:
+            return df.select(
+                F.col(idc).alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in cols]
+            )
+
+        return pairs.join(side(vals, "a"), "id_a").join(side(b_src, "b"), "id_b")
+
+    def _sign(self, src: SigSource, batch: DataFrame, shared: bool) -> _Signed:
+        """Sign the batch with ``src`` into a lazy checkpoint and count
+        its unusable rows. A source several families read (``shared``)
+        is materialized here, once: family threads racing an
+        unmaterialized local checkpoint would compute (and on a
+        multi-executor cluster, cache) it twice."""
         idc = self.id_col
-        ids = cross.select(F.col("id_b").alias(idc))
-        hsig = self._hist_by_id(spark, path or self.sigs_path, batch_id, ids, idc)
-        if hsig is None:
-            return None
-        return hsig.select(idc, F.col(col).alias("_v"), "_batch_id")
+        bad = None
+        if src.valid is not None:
+            valid = src.valid(self)
+            bad = (
+                batch.filter(~valid)
+                .select(F.col(idc).cast("string").alias(idc))
+                .localCheckpoint(eager=False)
+            )
+            batch = batch.filter(valid)
+        rows = src.sign(self, batch).localCheckpoint(eager=False)
+        good, ids, n_bad = rows, rows.select(idc), 0
+        if bad is not None:
+            ids, n_bad = ids.unionByName(bad), bad.count()
+        if src.ok is not None:
+            # this count materializes the checkpoint
+            ok = src.ok(self)
+            good, shared = rows.filter(ok), False
+            n_bad += rows.filter(~ok).count()
+        if shared:
+            rows.count()
+        return _Signed(rows, good, ids, n_bad)
+
+    def _section(
+        self, spark: SparkSession, f: Family, batch: DataFrame, batch_id: int,
+        sign: Callable[[SigSource], _Signed], kick: Callable[[Family], None],
+    ) -> tuple[list, list, list]:
+        """One family's independent sub-DAG: key rows, within/history
+        candidates, then the verify against its source's values (history
+        values from the pruned id read, earliest usable row per id).
+        Returns LOCAL (pair parts, metric rows, state writes)."""
+        idc = self.id_col
+        s = sign(f.source)
+        rows = f.key_rows(self, s.good).localCheckpoint(eager=False)
+        find = f.candidates or IncrementalNearDup._family_candidates
+        within, cross, m = find(
+            self, spark, rows, list(f.keys), self._path(f.table), batch_id
+        )
+        kick(f)
+        mrows = [(f.name, *m)]
+        hist = None
+        if cross is not None and f.values:
+            hist = self._hist_by_key(
+                spark, self._path(f.source.table), batch_id,
+                cross.select(F.col("id_b").alias(idc)), idc,
+            )
+            if hist is not None and f.source.ok is not None:
+                hist = hist.filter(f.source.ok(self))
+        attrs = vars(self)
+        verify = [
+            f"{f.jaccard.format_map(attrs)} AS jaccard_est",
+            f"{f.hamming.format_map(attrs)} AS hamming",
+        ]
+        parts: list[DataFrame] = []
+        for cand, is_cross, kind in ((within, False, f.kinds[0]),
+                                     (cross, True, f.kinds[1])):
+            if cand is None or (is_cross and f.values and hist is None):
+                continue
+            if f.values:
+                cand = self._fetch(cand, s.good, hist, is_cross, f.values)
+            ok_pairs = cand.selectExpr("id_a", "id_b", *verify)
+            if f.keep is not None:
+                ok_pairs = ok_pairs.filter(f.keep.format_map(attrs))
+            parts.append(ok_pairs.withColumn("kind", F.lit(kind)))
+        if parts and f.post_verify is not None:
+            parts = f.post_verify(self, spark, parts, batch, mrows)
+        return parts, mrows, [(rows, f.table, list(f.keys))]
 
     def _audio_snr_stage(
         self,
@@ -624,8 +897,10 @@ class IncrementalNearDup:
         audio_parts: list[DataFrame],
         batch: DataFrame,
         metric_rows: list[tuple],
-    ) -> DataFrame:
-        """The optional EXACT follow-up the class doc promises: a bounded
+    ) -> list[DataFrame]:
+        """The audio family's post-verify hook, on when
+        ``audio_exact_verify`` is set: the optional EXACT follow-up the
+        class doc promises, a bounded
         re-read of just the matched clips' bytes for a PCM-SNR verdict.
         The state-only verdict (words-Jaccard + sketch-Hamming) stays the
         hot path; this stage decodes ONLY candidate ids — batch clips
@@ -642,11 +917,10 @@ class IncrementalNearDup:
         the count lands in metrics as ``audio_snr_unverifiable``."""
         from cc_net_spark.multimodal.audio import pair_audio_invariants
 
+        if not self.audio_exact_verify:
+            return audio_parts
         idc = self.id_col
-        apairs = audio_parts[0]
-        for part in audio_parts[1:]:
-            apairs = apairs.unionByName(part)
-        apairs = apairs.localCheckpoint()
+        apairs = reduce(DataFrame.unionByName, audio_parts).localCheckpoint()
 
         clip_cols = [F.col(idc).cast("string").alias(idc), "codec", "bytes"]
         src = batch.select(*clip_cols)
@@ -679,7 +953,7 @@ class IncrementalNearDup:
             ["id_a", "id_b"],
             "leftsemi",
         )
-        return passed.unionByName(unverifiable)
+        return [passed.unionByName(unverifiable)]
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if not self.small_batch_mode:
@@ -700,423 +974,72 @@ class IncrementalNearDup:
         # rep-joined exact pairs) stays one-row-per-id
         batch = batch.dropDuplicates([idc])
 
-        # ONE fused scan per batch: minhash sig + simhash + exact tkey
-        # from one normalization pass (operators/signatures.py); grams
-        # skipped — no substring family (see class doc). Skipped entirely
-        # for a payload-only family set (an audio-only stream need not
-        # carry a transcript column nor pay the text compute).
-        need_text = bool({"minhash", "simhash", "exact"} & set(self.families))
-        sig = None
-        if need_text:
-            # lazy: the first family action (the sizing/bucket-set agg)
-            # materializes the checkpoint in the SAME job — one barrier
-            # instead of two per derived table
-            sig = fused_signatures(
-                batch,
-                self.text_col,
-                idc,
-                shingle_size=self.shingle_size,
-                num_perm=self.num_perm,
-                keep_shingles=False,
-                with_grams=False,
-            ).localCheckpoint(eager=False)
+        fams = [f for f in _FAMILIES if f.name in self.families]
+        # only the enabled families' sources are signed: an audio-only
+        # stream need not carry a transcript column nor pay the text
+        # compute
+        readers = Counter(f.source for f in fams)
+        sources = [src for src in SOURCES if src in readers]
+        signed: dict[SigSource, _Signed] = {}
+        locks = {src: threading.Lock() for src in sources}
 
-        null_jac = F.lit(None).cast("double").alias("jaccard_est")
-        null_ham = F.lit(None).cast("int").alias("hamming")
+        def sign(src: SigSource) -> _Signed:
+            # by the first family thread that needs it; the text families
+            # wait here while the shared signature table materializes,
+            # and the families of other sources overlap it
+            with locks[src]:
+                if src not in signed:
+                    signed[src] = self._sign(src, batch, shared=readers[src] > 1)
+            return signed[src]
 
         # the flags section needs the batch ids' state buckets (a tiny
         # distinct-collect over a checkpointed signature table); kick it
-        # onto a driver thread as soon as the priority source (sig >
-        # audio sigs > embedding sigs, mirroring the flags fallback
-        # below) is materialized, so it overlaps the per-family
-        # verification collects instead of serializing after them
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
+        # onto a driver thread as soon as the first family of the
+        # priority source (SOURCES order) has run its first action on
+        # it, so it overlaps the per-family verification collects
+        # instead of serializing after them
+        kicker = next(f for f in fams if f.source is sources[0])
+        kbs: list[DriverThreads] = []
 
-        # a plain daemon thread, not an executor: it dies on its own, so
-        # an exception anywhere in the batch can't leak a worker thread
-        kbs_result: dict = {}
-        kbs_thread: threading.Thread | None = None
-        kbs_lock = threading.Lock()
-
-        def _kick_kbs(ids_df: DataFrame) -> None:
-            nonlocal kbs_thread
-            with kbs_lock:
-                if kbs_thread is not None:
-                    return
-
-                def _run() -> None:
-                    try:
-                        kbs_result["kbs"] = self._bucket_ids(ids_df, [idc])
-                    except BaseException as e:  # re-raised on join
-                        kbs_result["err"] = e
-
-                kbs_thread = threading.Thread(target=_run, daemon=True)
-                kbs_thread.start()
+        def kick(f: Family) -> None:
+            if f is kicker:
+                ids = signed[f.source].ids
+                kbs.append(DriverThreads(spark, [lambda: self._bucket_ids(ids, [idc])]))
 
         # each family section is an independent sub-DAG (2-3 driver
         # actions: sizing agg, verification-bucket collect, decode
         # counters) sharing only the materialized signature checkpoint;
         # sections run on driver threads when several families are
         # configured, so their actions interleave across the executor
-        # slots instead of serializing. Each returns LOCAL
-        # (pair_parts, metric_rows, state_writes) lists merged in
-        # canonical family order to keep outputs deterministic.
-        Section = tuple[list, list, list]
-
-        def _sec_minhash() -> Section:
-            parts: list[DataFrame] = []
-            mrows: list[tuple] = []
-            writes: list[tuple] = []
-            new_bands = lsh_bands(
-                sig, idc, bands=self.bands, rows_per_band=self.rows_per_band
-            ).localCheckpoint(eager=False)
-            within, cross, m = self._family_candidates(
-                spark, new_bands, ["band", "key"], self.bands_path, batch_id
-            )
-            _kick_kbs(sig.select(idc))
-            mrows.append(("minhash", *m))
-            writes.append((new_bands, self.bands_path, ["band", "key"]))
-            vals = sig.select(idc, F.col("sig").alias("_v"))
-            hvals = self._hist_vals(spark, cross, batch_id, "sig")
-            for cand, is_cross, kind in ((within, False, "within"),
-                                         (cross, True, "history")):
-                if cand is None or (is_cross and hvals is None):
-                    continue
-                ok = self._estimated(
-                    self._fetch(cand, vals, hvals, is_cross)
-                    .withColumnRenamed("_va", "_sa")
-                    .withColumnRenamed("_vb", "_sb")
-                )
-                parts.append(
-                    ok.select("id_a", "id_b", "jaccard_est", null_ham,
-                              F.lit(kind).alias("kind"))
-                )
-            return parts, mrows, writes
-
-        def _sec_simhash() -> Section:
-            from cc_net_spark.operators.simhash import _band_exprs
-
-            parts: list[DataFrame] = []
-            mrows: list[tuple] = []
-            writes: list[tuple] = []
-            simbands = (
-                sig.select(
-                    idc, "simhash",
-                    F.explode(F.array(*_band_exprs(self.max_hamming))).alias("_b"),
-                )
-                .select(idc, F.col("_b.band").alias("band"), F.col("_b.key").alias("key"))
-                .localCheckpoint(eager=False)
-            )
-            within, cross, m = self._family_candidates(
-                spark, simbands, ["band", "key"], self.simbands_path, batch_id
-            )
-            _kick_kbs(sig.select(idc))
-            mrows.append(("simhash", *m))
-            writes.append((simbands, self.simbands_path, ["band", "key"]))
-            vals = sig.select(idc, F.col("simhash").alias("_v"))
-            hvals = self._hist_vals(spark, cross, batch_id, "simhash")
-            ham = F.bit_count(F.col("_va").bitwiseXOR(F.col("_vb")))
-            for cand, is_cross, kind in ((within, False, "simhash_within"),
-                                         (cross, True, "simhash_history")):
-                if cand is None or (is_cross and hvals is None):
-                    continue
-                ok = (
-                    self._fetch(cand, vals, hvals, is_cross)
-                    .withColumn("hamming", ham.cast("int"))
-                    .filter(F.col("hamming") <= self.max_hamming)
-                )
-                parts.append(
-                    ok.select("id_a", "id_b", null_jac, "hamming",
-                              F.lit(kind).alias("kind"))
-                )
-            return parts, mrows, writes
-
-        def _sec_exact() -> Section:
-            # the exact family is CAP-FREE: key equality fully determines
-            # the cluster, so no pairwise enumeration is needed — each
-            # dup is paired with its KEEP-FIRST representative (min id in
-            # the batch, or min matching history id). A flood of N
-            # identical texts costs O(N), and — unlike an LSH family —
-            # every copy is flagged (the cap rationale "boilerplate that
-            # exact dedup handles" must not apply to exact dedup itself).
-            parts: list[DataFrame] = []
-            mrows: list[tuple] = []
-            writes: list[tuple] = []
-            tkeys = sig.select(idc, "tkey")
-            within_rep = tkeys.groupBy("tkey").agg(F.min(idc).alias("_rep"))
-            within = (
-                tkeys.join(within_rep, "tkey")
-                .filter(F.col(idc) != F.col("_rep"))
-                .select(F.col("_rep").alias("id_a"), F.col(idc).alias("id_b"))
-            )
-            parts.append(
-                within.select(
-                    "id_a", "id_b",
-                    F.lit(1.0).alias("jaccard_est"),
-                    F.lit(0).cast("int").alias("hamming"),
-                    F.lit("exact_within").alias("kind"),
-                )
-            )
-            n_keys_row = within_rep.agg(F.count(F.lit(1))).first()
-            _kick_kbs(sig.select(idc))
-            mrows.append(("exact", int(n_keys_row[0] or 0), 0, 0))
-            writes.append((tkeys, self.exactkeys_path, ["tkey"]))
-            # history probe over the tkey-bucketed exactkeys state: the
-            # read prunes to the batch's tkey buckets, the broadcast
-            # semijoin then narrows to exactly the batch's keys — the
-            # min-id representative is computed over matching keys only,
-            # never a corpus-wide groupBy
-            ek_kbs = self._bucket_ids(tkeys, ["tkey"])
-            hist_ek = self._history(
-                spark, self.exactkeys_path, batch_id, ek_kbs,
-                # key filter only when directory pruning degenerated
-                # (see _hist_by_id) — narrow shards stay at the old
-                # job count
-                key_in=(
-                    "tkey",
-                    self._collect_key_values(tkeys, "tkey")
-                    if len(ek_kbs) * 2 >= self.n_state_buckets
-                    else None,
-                ),
-            )
-            if hist_ek is not None:
-                batch_tkeys = tkeys.select("tkey").distinct()
-                hist_rep = (
-                    hist_ek.join(F.broadcast(batch_tkeys), "tkey")
-                    .groupBy("tkey")
-                    .agg(F.min(idc).alias("_hrep"))
-                )
-                cross = (
-                    tkeys.join(hist_rep, "tkey")
-                    .filter(F.col(idc) != F.col("_hrep"))
-                    .select(F.col(idc).alias("id_a"), F.col("_hrep").alias("id_b"))
-                )
-                parts.append(
-                    cross.select(
-                        "id_a", "id_b",
-                        F.lit(1.0).alias("jaccard_est"),
-                        F.lit(0).cast("int").alias("hamming"),
-                        F.lit("exact_history").alias("kind"),
-                    )
-                )
-            return parts, mrows, writes
-
-        def _sec_audio() -> Section:
-            from cc_net_spark.multimodal.audio import audio_signatures
-
-            parts: list[DataFrame] = []
-            mrows: list[tuple] = []
-            writes: list[tuple] = []
-            # one decode pass -> per-clip (decode_ok, words, sketch);
-            # the compact one-row-per-clip table IS the persisted state.
-            # Undecodable clips (poison records) are counted, not raised
-            # — a foreachBatch crash would replay into itself forever.
-            asig_all = audio_signatures(batch, idc).localCheckpoint(eager=False)
-            n_bad = asig_all.filter(~F.col("decode_ok")).count()
-            if not need_text:
-                _kick_kbs(asig_all.select(idc))
-            if n_bad:
-                mrows.append(("audio_decode_failures", n_bad, 0, 0))
-            asig = asig_all.filter(F.col("decode_ok"))
-            # the exploded (id, word) rows are their own word-bucketed
-            # state table — the probe prunes on word buckets, which a
-            # one-row-per-clip array table cannot offer
-            awords = asig.select(idc, F.explode("words").alias("word"))
-            within, cross, m = self._family_candidates(
-                spark, awords, ["word"], self.audiowords_path, batch_id
-            )
-            mrows.append(("audio", *m))
-            writes.append((awords, self.audiowords_path, ["word"]))
-            writes.append((asig_all, self.audiosigs_path, [idc]))
-            hist_asig = None
-            if cross is not None:
-                hist_asig = self._hist_by_id(
-                    spark, self.audiosigs_path, batch_id,
-                    cross.select(F.col("id_b").alias(idc)), idc,
-                )
-                if hist_asig is not None:
-                    hist_asig = hist_asig.filter(F.col("decode_ok"))
-            # verify against STATE: word-set Jaccard (recall signal) AND
-            # waveform-sketch Hamming (collision discriminator — distinct
-            # stationary signals can share every coarse occupancy word);
-            # history audio bytes are never re-decoded
-            jac = F.round(
-                F.size(F.array_intersect("_wa", "_wb")).cast("double")
-                / F.size(F.array_union("_wa", "_wb")).cast("double"),
-                6,
-            )
-            ham = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb"))).cast("int")
-            a = asig.select(
-                F.col(idc).alias("id_a"),
-                F.col("words").alias("_wa"),
-                F.col("sketch").alias("_ska"),
-            )
-            audio_parts: list[DataFrame] = []
-            for cand, hist_side, kind in ((within, False, "audio_within"),
-                                          (cross, True, "audio_history")):
-                if cand is None or (hist_side and hist_asig is None):
-                    continue
-                if hist_side:
-                    ids = cand.select(F.col("id_b").alias(idc)).distinct()
-                    src_b = self._first_matching(hist_asig, ids, idc)
-                else:
-                    src_b = asig
-                b = src_b.select(
-                    F.col(idc).alias("id_b"),
-                    F.col("words").alias("_wb"),
-                    F.col("sketch").alias("_skb"),
-                )
-                ok = (
-                    cand.join(a, "id_a").join(b, "id_b")
-                    .withColumn("jaccard_est", jac)
-                    .withColumn("hamming", ham)
-                    .filter(
-                        (F.col("jaccard_est") >= self.audio_threshold)
-                        & (F.col("hamming") <= self.audio_max_hamming)
-                    )
-                )
-                audio_parts.append(
-                    ok.select("id_a", "id_b", "jaccard_est", "hamming",
-                              F.lit(kind).alias("kind"))
-                )
-            if audio_parts and self.audio_exact_verify:
-                audio_parts = [
-                    self._audio_snr_stage(spark, audio_parts, batch, mrows)
-                ]
-            parts.extend(audio_parts)
-            return parts, mrows, writes
-
-        def _sec_embedding() -> Section:
-            from cc_net_spark.operators.ann import (
-                hyperplane_bands,
-                hyperplane_signatures,
-                _cosine,
-            )
-
-            # poison-record defense (same invariant as the audio decode:
-            # counted, never raised — a foreachBatch crash replays into
-            # itself forever): a null vector, a wrong-length vector, or
-            # a vector with null elements would crash the Arrow kernel's
-            # dense matmul; such rows are dropped from the family and
-            # metered, while still receiving a (non-dup) flag row
-            parts: list[DataFrame] = []
-            mrows: list[tuple] = []
-            writes: list[tuple] = []
-            vcol = F.col(self.emb_col)
-            valid = (
-                vcol.isNotNull()
-                & (F.size(vcol) == self.emb_dim)
-                & ~F.exists(vcol, lambda x: x.isNull())
-            )
-            src = batch.withColumn(idc, F.col(idc).cast("string"))
-            bad_ids = src.filter(~valid).select(idc).localCheckpoint(eager=False)
-            n_bad = bad_ids.count()
-            if n_bad:
-                mrows.append(("embedding_invalid_vectors", n_bad, 0, 0))
-            # one Arrow pass computes the sign-bit signature AND carries
-            # the float64 vector through (keep_vec) — the (sig, vector)
-            # row IS the persisted state, so history vectors are never
-            # re-read from the corpus (the embedding analogue of
-            # keep_shingles=False); id cast to string like every other
-            # signature table
-            esig = (
-                hyperplane_signatures(
-                    src.filter(valid),
-                    id_col=idc,
-                    vec_col=self.emb_col,
-                    dim=self.emb_dim,
-                    n_bits=self.emb_n_bits,
-                    seed=self.emb_seed,
-                    keep_vec=True,
-                )
-                .localCheckpoint(eager=False)
-            )
-            ebands = hyperplane_bands(
-                esig, idc, n_bits=self.emb_n_bits, bands=self.emb_bands
-            ).localCheckpoint(eager=False)
-            within, cross, m = self._family_candidates(
-                spark, ebands, ["band", "key"], self.embbands_path, batch_id
-            )
-            if sig is None and "audio" not in self.families:
-                _kick_kbs(esig.select(idc).unionByName(bad_ids))
-            mrows.append(("embedding", *m))
-            writes.append((ebands, self.embbands_path, ["band", "key"]))
-            writes.append((esig, self.embsigs_path, [idc]))
-            vals = esig.select(idc, F.col("v").alias("_v"))
-            hvals = self._hist_vals(
-                spark, cross, batch_id, "v", path=self.embsigs_path
-            )
-            # verify on EXACT cosine (JVM fold over the state vectors);
-            # the score rides the jaccard_est column — the pairs schema
-            # is a fixed on-disk contract, and both are [0, 1] "how
-            # similar" verdict scores (threshold-filtered, so a negative
-            # cosine never lands in the table)
-            cos = F.round(_cosine(F.col("_va"), F.col("_vb")), 6)
-            for cand, is_cross, kind in ((within, False, "embedding_within"),
-                                         (cross, True, "embedding_history")):
-                if cand is None or (is_cross and hvals is None):
-                    continue
-                ok = (
-                    self._fetch(cand, vals, hvals, is_cross)
-                    .withColumn("jaccard_est", cos)
-                    .filter(F.col("jaccard_est") >= self.emb_threshold)
-                )
-                parts.append(
-                    ok.select("id_a", "id_b", "jaccard_est", null_ham,
-                              F.lit(kind).alias("kind"))
-                )
-            return parts, mrows, writes
-
-        sections: list[tuple[str, object]] = []
-        if "minhash" in self.families:
-            sections.append(("minhash", _sec_minhash))
-        if "simhash" in self.families:
-            sections.append(("simhash", _sec_simhash))
-        if "exact" in self.families:
-            sections.append(("exact", _sec_exact))
-        if "audio" in self.families:
-            sections.append(("audio", _sec_audio))
-        if "embedding" in self.families:
-            sections.append(("embedding", _sec_embedding))
-
+        # slots instead of serializing (the audio decode pass overlaps
+        # the text families). Results merge in canonical family order to
+        # keep outputs deterministic.
+        sections = [
+            partial(self._section, spark, f, batch, batch_id, sign, kick)
+            for f in fams
+        ]
         if len(sections) == 1:
-            results = [sections[0][1]()]
+            results = [sections[0]()]
         else:
-            # independent sub-DAGs run concurrently from driver threads:
-            # their sizing/verify actions interleave across the executor
-            # slots (the audio decode pass overlaps the text families).
-            # When several TEXT families share the lazy signature
-            # checkpoint, materialize it ONCE up front — two concurrent
-            # jobs racing an unmaterialized local checkpoint would
-            # compute (and on a multi-executor cluster, cache) it twice;
-            # the non-text sections are submitted first so they overlap
-            # that materialization.
-            with ThreadPoolExecutor(max_workers=len(sections)) as sec_pool:
-                futs: dict[str, object] = {}
-                for name, fn in sections:
-                    if name in ("audio", "embedding"):
-                        futs[name] = sec_pool.submit(fn)
-                n_text = len(sections) - len(futs)
-                if n_text > 1:
-                    sig.count()  # materialize the shared checkpoint
-                for name, fn in sections:
-                    if name not in futs:
-                        futs[name] = sec_pool.submit(fn)
-                # merged in canonical family order -> deterministic output
-                results = [futs[name].result() for name, _ in sections]
+            results = DriverThreads(spark, sections).join()
 
         pair_parts: list[DataFrame] = []
         metric_rows: list[tuple] = []
         state_writes: list[tuple[DataFrame, str, list[str]]] = []
-        for parts_, mrows_, writes_ in results:
+        for f, (parts_, mrows_, writes_) in zip(fams, results):
+            if not any(w[1] == f.source.table for w in state_writes):
+                # the source's own rows, ahead of its first family's
+                s = signed[f.source]
+                if s.n_bad:
+                    metric_rows.append((f.source.bad_metric, s.n_bad, 0, 0))
+                state_writes.append(
+                    (s.rows.select(idc, *f.source.columns), f.source.table, [idc])
+                )
             pair_parts.extend(parts_)
             metric_rows.extend(mrows_)
             state_writes.extend(writes_)
 
-        pairs = pair_parts[0]
-        for part in pair_parts[1:]:
-            pairs = pairs.unionByName(part)
+        pairs = reduce(DataFrame.unionByName, pair_parts)
         # lazy: the pairs WRITE is the first action — it materializes the
         # checkpoint the flags write then reuses (one pairs execution,
         # no standalone checkpoint barrier)
@@ -1143,33 +1066,23 @@ class IncrementalNearDup:
         # bucket — correct: every id must be checked — but a small late
         # shard touches only its own buckets).
         batch_ids = batch.select(F.col(idc).cast("string").alias(idc))
-        # the ids' buckets were collected from CHECKPOINTED signature
-        # tables (sig / asig_all / esig + its dropped ids) on a driver
-        # thread kicked inside the family sections — by now the collect
-        # has been overlapping the verification work; just join it
-        assert kbs_thread is not None  # families is a non-empty subset
-        kbs_thread.join()
-        if "err" in kbs_result:
-            raise kbs_result["err"]
-        batch_kbs = kbs_result["kbs"]
-        redeliv_paths = []
-        if need_text:
-            redeliv_paths.append((self.sigs_path, None))
-        if "audio" in self.families:
-            redeliv_paths.append((self.audiosigs_path, F.col("decode_ok")))
-        if "embedding" in self.families:
-            redeliv_paths.append((self.embsigs_path, None))
-        for path, extra in redeliv_paths:
-            h = self._history(spark, path, batch_id, batch_kbs)
+        # the ids' buckets were collected from a CHECKPOINTED signature
+        # table on a driver thread kicked inside the family sections —
+        # by now the collect has been overlapping the verification work;
+        # just join it
+        (batch_kbs,) = kbs[0].join()
+        for src in sources:
+            h = self._history(spark, self._path(src.table), batch_id, batch_kbs)
             if h is None:
                 continue
-            if extra is not None:
-                h = h.filter(extra)
+            if src.ok is not None:
+                h = h.filter(src.ok(self))
             dup_sources.append(batch_ids.join(h.select(idc), idc, "leftsemi"))
-        dup_ids = dup_sources[0]
-        for src in dup_sources[1:]:
-            dup_ids = dup_ids.unionByName(src)
-        dup_ids = dup_ids.distinct().withColumn("_dup", F.lit(True))
+        dup_ids = (
+            reduce(DataFrame.unionByName, dup_sources)
+            .distinct()
+            .withColumn("_dup", F.lit(True))
+        )
         flags = (
             batch_ids
             .join(dup_ids, idc, "left")
@@ -1222,10 +1135,10 @@ class IncrementalNearDup:
         )
         # the pairs write materializes the lazy pairs checkpoint; the
         # metrics write is independent and rides alongside it
-        _run_parallel([
+        DriverThreads(spark, [
             lambda: write(pairs, _join_path(self.output_path, "pairs")),
             lambda: write(metrics, _join_path(self.output_path, "metrics")),
-        ])
+        ]).join()
         # flags (which reuse the now-checkpointed pairs) and the state
         # appends share ONE concurrent barrier — the probe's wall is
         # almost entirely serial job barriers, and these jobs are
@@ -1237,21 +1150,13 @@ class IncrementalNearDup:
         # a batch's own half-written state stays invisible to its
         # replay), and fold_new_batches keys off the flags dirs, so a
         # torn batch is simply not folded until the replay lands it.
-        state_jobs = []
-        if need_text:
-            state_jobs.append(lambda: write_state(
-                sig.select(idc, "n_shingles", "sig", "simhash", "tkey"),
-                self.sigs_path,
-                [idc],
-            ))
-        state_jobs.extend(
-            lambda df=df, path=path, kb=kb_cols: write_state(df, path, kb)
-            for df, path, kb_cols in state_writes
-        )
-        _run_parallel([
+        DriverThreads(spark, [
             lambda: write(flags, _join_path(self.output_path, "flags")),
-            *state_jobs,
-        ])
+            *(
+                lambda df=df, t=t, kb=kb_cols: write_state(df, self._path(t), kb)
+                for df, t, kb_cols in state_writes
+            ),
+        ]).join()
 
 
 def compact_state(
@@ -1295,20 +1200,10 @@ def compact_state(
             f"it would read zero tables and report success; use "
             f"maybe_compact_state()"
         )
-    tables = (
-        ("sigs", [id_col]),
-        ("bands", [id_col, "band", "key"]),
-        ("simbands", [id_col, "band", "key"]),
-        ("exactkeys", [id_col, "tkey"]),
-        ("audiosigs", [id_col]),
-        ("audiowords", [id_col, "word"]),
-        ("embsigs", [id_col]),
-        ("embbands", [id_col, "band", "key"]),
-    )
     meta = read_committed(spark, _join_path(state_path, "meta", "meta.json"))
     if meta is not None:
         commit_small_text(spark, _join_path(out_path, "meta", "meta.json"), meta)
-    for sub, keys in tables:
+    for sub, keys in _state_tables(id_col).items():
         df = _read_optional(spark, _join_path(state_path, sub))
         if df is None:  # family not enabled -> table absent
             continue
@@ -1346,8 +1241,7 @@ def _n_state_batches(spark: SparkSession, state_path: str) -> int | None:
     """Number of ``_batch_id=`` partitions in the state's signature
     table (text, else audio, else embedding) — None if no state exists
     yet. A pure FS-metadata probe."""
-    fs = None
-    for sub in ("sigs", "audiosigs", "embsigs"):
+    for sub in (src.table for src in SOURCES):
         fs, probe_dir = _hadoop_fs(spark, _join_path(state_path, sub))
         if fs.exists(probe_dir):
             return sum(

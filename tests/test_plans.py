@@ -103,34 +103,6 @@ def test_dedup_probe_reads_only_needed_columns(spark):
         )
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key must sort-merge join with NO
-    Exchange on either side — the layout the 100 TB probe/unminify joins
-    rely on for repeated shuffle-free joins."""
-    from cc_net_spark.sources.bucketed import read_table, write_bucketed
-
-    docs = spark.range(5000).selectExpr("id AS doc_id", "id % 97 AS payload")
-    meta = spark.range(0, 5000, 2).selectExpr("id AS doc_id", "id % 13 AS tag")
-    write_bucketed(docs, "b_docs", ["doc_id"], n_buckets=8, sort_cols=["doc_id"])
-    write_bucketed(meta, "b_meta", ["doc_id"], n_buckets=8, sort_cols=["doc_id"])
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = read_table(spark, "b_docs").join(
-                read_table(spark, "b_meta"), "doc_id"
-            )
-            plan = plan_of(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, "bucketed join still shuffles"
-            assert joined.count() == 2500
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_docs")
-        spark.sql("DROP TABLE IF EXISTS b_meta")
-
-
 def test_partition_pruning_on_routed_output(spark, tmp_path):
     """write_partitioned routes rows into per-key directories; a reader
     filtering on the partition key must scan ONLY that partition

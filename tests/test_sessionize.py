@@ -118,53 +118,3 @@ def test_streaming_sessionize_late_event_merges_without_corruption(spark, tmp_pa
     # 25 min apart — a rewound last_us would have split them)
     assert (1, "2024-01-01 10:00:00", "2024-01-01 10:35:00", 3, 7.0) in got
     assert len([g for g in got if g[0] == 1]) == 1
-
-
-def test_windowed_stream_drops_late_rows(spark, tmp_path):
-    """Watermark semantics: a row arriving after the watermark passed its
-    window is dropped; finalized windows are emitted exactly once."""
-    import json as _json
-    import os
-
-    from cc_net_spark.streaming.windowed import run_windowed_stream
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    b0 = [
-        {"event_id": 1, "ts": "2024-01-01 10:05:00", "event_type": "a", "value": 1.0},
-        {"event_id": 2, "ts": "2024-01-01 10:20:00", "event_type": "a", "value": 2.0},
-        {"event_id": 3, "ts": "2024-01-01 11:10:00", "event_type": "b", "value": 4.0},
-    ]
-    # advances watermark to 22:00, finalizing the 10:00 and 11:00 windows
-    b1 = [{"event_id": 4, "ts": "2024-01-02 00:00:00", "event_type": "c", "value": 0.5}]
-    # LATE: lands in the already-finalized 10:00 window -> must be dropped
-    b2 = [{"event_id": 5, "ts": "2024-01-01 10:40:00", "event_type": "a", "value": 64.0}]
-
-    def run():
-        run_windowed_stream(
-            spark,
-            str(inp),
-            "event_id long, ts timestamp, event_type string, value double",
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
-            window="1 hour",
-            watermark="30 minutes",
-        )
-        return {
-            (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-            for r in spark.read.parquet(str(tmp_path / "out")).collect()
-        }
-
-    for i, batch in enumerate((b0, b1)):
-        f = inp / f"b{i}.json"
-        f.write_text("\n".join(_json.dumps(r) for r in batch))
-        os.utime(f, (1_700_000_000 + i * 100,) * 2)
-    first = run()
-    assert first[("2024-01-01 10:00:00", "a")] == (2, 3.0)
-    assert first[("2024-01-01 11:00:00", "b")] == (1, 4.0)
-
-    # the late row arrives AFTER the watermark (persisted in the
-    # checkpoint) passed its window: resumed run must drop it
-    (inp / "b2.json").write_text("\n".join(_json.dumps(r) for r in b2))
-    second = run()
-    assert second == first
